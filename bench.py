@@ -69,79 +69,32 @@ STAGE_BACKED = [
 
 def _pipeline_stage_secs(spark, sf_dir: str) -> dict[str, float]:
     """Per-stage wall decomposition of the pipeline_triples headline
-    (judge r3 #1): each stage timed to its own noop sink in dependency
-    order — extract persisted first, exactly like run_pipeline — min of
-    2 reps per stage.  The stage sum approximates (not equals) the
-    full-query wall: the full plan overlaps independent stages, so
-    sum ≳ full is expected; a stage regressing round-over-round is the
-    attribution signal."""
-    from pyspark.sql import functions as F
-
-    from src_to_kb_spark.operators.canonicalize import connected_components
-    from src_to_kb_spark.operators.chunker import chunk_documents
-    from src_to_kb_spark.operators.dedup import neardup_pairs
-    from src_to_kb_spark.operators.extract import extract_pages
-    from src_to_kb_spark.operators.linking import link_mentions
-    from src_to_kb_spark.operators.mentions import detect_mentions
-    from src_to_kb_spark.operators.triples import (
-        build_triples, chunk_triples, doc_triples, mention_triples,
-        same_as_triples,
-    )
+    (judge r3 #1): each stage of the declared stage graph timed to its
+    own noop sink in dependency order.  Every stage is persisted by
+    that write, so a stage's time excludes its inputs' work.  The stage
+    sum approximates (not equals) the full-query wall: the full plan
+    overlaps independent stages; a stage regressing round-over-round
+    is the attribution signal."""
+    from src_to_kb_spark.pipeline import STAGES, StageParams
     from src_to_kb_spark.runtime.skew import salted_repartition
     from src_to_kb_spark.sources.gazetteer import gazetteer_df
     from src_to_kb_spark.sources.pages import load_pages
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def timed(fn):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            fn()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return round(best, 3)
-
-    pages = salted_repartition(
+    params = StageParams(gazetteer_df(spark), neardup_threshold=0.6)
+    tables = {"pages": salted_repartition(
         load_pages(spark, sf_dir, keep_keys=False),
         n_partitions=spark.sparkContext.defaultParallelism,
-    )
-    gaz = gazetteer_df(spark)
-    docs = extract_pages(pages)
-
-    # each rep must RE-MATERIALIZE the cache — min-of-2 over a
-    # persisted frame would always keep the cached-count rep and the
-    # extract UDF's cost would never appear in the attribution table
-    def extract_rep():
-        docs.unpersist(blocking=True)
-        docs.persist()
-        docs.count()
-
-    stages = {"extract_persist": timed(extract_rep)}
-    stages["chunks"] = timed(lambda: noop(chunk_documents(docs)))
-    stages["mentions_linked"] = timed(
-        lambda: noop(link_mentions(detect_mentions(docs, gaz), gaz))
-    )
-    stages["neardup_pairs"] = timed(
-        lambda: noop(neardup_pairs(docs, threshold=0.6))
-    )
-    pairs = neardup_pairs(docs, threshold=0.6).persist()
-    pairs.count()
-    stages["components"] = timed(lambda: noop(connected_components(pairs)))
-    linked = link_mentions(detect_mentions(docs, gaz), gaz)
-    comp = connected_components(pairs)
-    stages["triples_union_distinct"] = timed(
-        lambda: noop(build_triples(
-            doc_triples(docs), mention_triples(linked),
-            same_as_triples(comp), chunk_triples(chunk_documents(docs)),
-        ))
-    )
-    docs.unpersist()
-    pairs.unpersist()
-    stages["stage_sum"] = round(
-        sum(v for k, v in stages.items() if k != "stage_sum"), 3
-    )
+    )}
+    stages = {}
+    for st in STAGES:
+        df = st.build(params, *(tables[i] for i in st.inputs)).persist()
+        t0 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        stages[st.name] = round(time.time() - t0, 3)
+        tables[st.name] = df
+    for st in STAGES:
+        tables[st.name].unpersist()
+    stages["stage_sum"] = round(sum(stages.values()), 3)
     return stages
 
 

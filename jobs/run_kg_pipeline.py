@@ -10,17 +10,19 @@ Usage (local smoke):
     spark-submit jobs/run_kg_pipeline.py \
         --input /root/testdata/sf0.001 --output /tmp/kb_out
 
-Each stage writes its own parquet table under --output with a
-``_committed_<stage>`` marker and per-partition lineage metrics
-(``_metrics_<stage>.json``).  Re-running with the same --output resumes:
-committed stages are re-read, uncommitted input keys are recomputed via
-anti-join (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").  Resume cost is O(delta), not O(corpus): per-doc
-stages (documents, chunks, linked, bands) append rows derived from the
-new docs only, near-dup pairs come from joining the delta's bands
-against the committed bands table, and only the genuinely global
-stages — components (over the small pair table) and triples (map-only
-union) — recompute.  ``--table-format iceberg`` routes the same stage
+The stages are the graph declared once in ``src_to_kb_spark/pipeline.py``
+(``STAGES``); this job walks it.  Each stage writes its own parquet
+table under --output with a ``_committed_<stage>`` marker and
+per-partition lineage metrics (``_metrics_<stage>.json``).  Re-running
+with the same --output resumes: committed stages are re-read,
+uncommitted input keys are recomputed via anti-join (north_rule:
+"resumable from checkpoint with per-partition lineage + metrics").
+Resume cost is O(delta), not O(corpus): per-doc stages (documents,
+chunks, linked, bands) append rows derived from the new docs only,
+near-dup pairs come from joining the delta's bands against the
+committed bands table, components update from the committed labeling,
+and only triples (map-only union) recompute outright.
+``--table-format iceberg`` routes the same stage
 I/O through Iceberg tables (``runtime/checkpoint.py``
 :class:`IcebergFormat`): writes become catalog snapshots and each
 ``_committed_<stage>`` marker records the committed snapshot id — the
@@ -58,32 +60,18 @@ def main(argv: list[str] | None = None) -> dict:
                          "stage tables")
     args = ap.parse_args(argv)
 
+    from concurrent.futures import Future, ThreadPoolExecutor
+
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from src_to_kb_spark.operators.canonicalize import (
-        connected_components,
-        incremental_components,
-    )
-    from src_to_kb_spark.operators.chunker import chunk_documents
-    from src_to_kb_spark.operators.dedup import (
-        band_signature_rows,
-        candidate_pairs_from_bands,
-        candidate_pairs_involving,
-        verify_candidate_pairs,
-    )
-    from src_to_kb_spark.operators.extract import (
-        MAX_FILE_SIZE,
-        extract_pages,
-    )
-    from src_to_kb_spark.operators.linking import link_mentions
-    from src_to_kb_spark.operators.mentions import detect_mentions
-    from src_to_kb_spark.operators.triples import (
-        build_triples,
-        chunk_triples,
-        doc_triples,
-        mention_triples,
-        same_as_triples,
+    from src_to_kb_spark.operators.dedup import BANDS_SCHEME
+    from src_to_kb_spark.operators.extract import MAX_FILE_SIZE
+    from src_to_kb_spark.pipeline import (
+        STAGES,
+        StageParams,
+        downstream,
+        invalidated_by,
     )
     from src_to_kb_spark.runtime.checkpoint import (
         IcebergFormat,
@@ -156,15 +144,16 @@ def main(argv: list[str] | None = None) -> dict:
         .select(*page_cols)
     )
 
-    DOWNSTREAM = ("chunks", "linked", "bands", "neardup_pairs",
-                  "components", "triples")
+    root, rest = STAGES[0], STAGES[1:]
     pending_marker = os.path.join(args.output, "_delta_pending")
+
+    def marker(st):
+        return os.path.join(args.output, f"_committed_{st}")
 
     def invalidate(stages):
         for st in stages:
-            marker = os.path.join(args.output, f"_committed_{st}")
-            if os.path.exists(marker):
-                os.remove(marker)
+            if os.path.exists(marker(st)):
+                os.remove(marker(st))
 
     # Crash recovery: a `_delta_pending` marker means a previous run
     # died between appending a documents delta and reconciling the
@@ -174,17 +163,16 @@ def main(argv: list[str] | None = None) -> dict:
     # table.  The marker is removed only after every downstream stage
     # has been reconciled, so the window is correct at any crash point.
     if os.path.exists(pending_marker):
-        invalidate(DOWNSTREAM)
+        invalidate(sorted(downstream({root.name}) - {root.name}))
         os.remove(pending_marker)
 
-    # Stage PARAMETERS are part of the resume identity, exactly like
-    # the band scheme below: a committed chunks table built with
-    # --chunk-size 1000 is NOT the answer to a --chunk-size 500 run,
-    # and a 0.8-threshold pair table silently masquerading as the 0.6
-    # result would drop every 0.6 ≤ j < 0.8 pair from components and
-    # same_as triples.  Record the params; on mismatch invalidate the
-    # stages derived from the changed ones (documents is
-    # parameter-independent and always survives).
+    # Stage PARAMETERS are part of the resume identity: a committed
+    # chunks table built with --chunk-size 1000 is NOT the answer to a
+    # --chunk-size 500 run, and a 0.8-threshold pair table silently
+    # masquerading as the 0.6 result would drop every 0.6 ≤ j < 0.8
+    # pair from components and same_as triples.  Record the params; on
+    # mismatch invalidate each stage whose identity holds a changed
+    # key, plus everything downstream of it in the stage graph.
     params = {
         "chunk_size": args.chunk_size,
         "overlap": args.overlap,
@@ -203,243 +191,152 @@ def main(argv: list[str] | None = None) -> dict:
     if os.path.exists(params_path):
         with open(params_path) as f:
             prev_params = json.load(f)
-    if prev_params and prev_params != params:
-        stale = set()
+
+    def marker_layer():
         # Pre-format-era params files lack the format keys; the KB's
         # actual layer is still knowable from marker CONTENT (Iceberg
-        # markers carry 'snapshot=<id>', parquet markers a timestamp) —
-        # inferring it avoids both spuriously rebuilding a legacy
-        # iceberg KB resumed with matching args and silently trusting
-        # its markers under a parquet rerun.  A legacy iceberg sidecar
-        # stored no prefix, so the caller's is assumed (resume-with-
-        # same-args, the only recoverable case).  The prefix otherwise
-        # participates only under iceberg (parquet ignores it).
-        def _layer(p):
-            f = p.get("table_format")
-            if f is None:
-                try:
-                    with open(
-                        os.path.join(args.output, "_committed_documents")
-                    ) as fh:
-                        f = (
-                            "iceberg"
-                            if fh.read().startswith("snapshot=")
-                            else "parquet"
-                        )
-                except OSError:
-                    f = "parquet"
-            prefix = p.get("table_prefix", args.table_prefix)
-            return (f, prefix if f == "iceberg" else None)
+        # markers carry 'snapshot=<id>', parquet markers a timestamp),
+        # read from the first marker that survives, documents first.
+        # None when no marker can be read: an unknown layer never
+        # matches, so its markers are not trusted.
+        for st in STAGES:
+            try:
+                with open(marker(st.name)) as fh:
+                    head = fh.read()
+            except OSError:
+                continue
+            return "iceberg" if head.startswith("snapshot=") else "parquet"
+        return None
 
-        if _layer(prev_params) != _layer(params):
-            stale |= {"documents", *DOWNSTREAM}
-        if (prev_params.get("chunk_size"), prev_params.get("overlap")) != (
-            params["chunk_size"], params["overlap"]
-        ):
-            stale |= {"chunks", "triples"}
-        if prev_params.get("neardup_threshold") != params[
-            "neardup_threshold"
-        ]:
-            stale |= {"neardup_pairs", "components", "triples"}
-        invalidate(sorted(stale))
-    os.makedirs(args.output, exist_ok=True)
+    def identity(p):
+        # A legacy iceberg sidecar stored no prefix, so the caller's is
+        # assumed (resume-with-same-args, the only recoverable case).
+        # The prefix otherwise participates only under iceberg.
+        f = p.get("table_format") or marker_layer()
+        prefix = p.get("table_prefix", args.table_prefix)
+        return {
+            "table_layer": (f, prefix if f == "iceberg" else None),
+            "chunk_size": p.get("chunk_size"),
+            "overlap": p.get("overlap"),
+            "neardup_threshold": p.get("neardup_threshold"),
+        }
+
+    changed = set()
+    if prev_params and prev_params != params:
+        prev_id, cur_id = identity(prev_params), identity(params)
+        changed = {k for k in cur_id if prev_id[k] != cur_id[k]}
+    # Committed bands are only delta-joinable against bands of the
+    # SAME signature scheme: a KB written by an older scheme would
+    # otherwise band-join with zero collisions and silently miss every
+    # cross-version near-dup pair.
+    scheme_path = os.path.join(args.output, "_scheme_bands")
+    prev_scheme = None
+    if os.path.exists(scheme_path):
+        with open(scheme_path) as f:
+            prev_scheme = f.read().strip()
+    if is_committed(args.output, "bands") and prev_scheme != BANDS_SCHEME:
+        changed.add("bands_scheme")
+    invalidate(sorted(invalidated_by(changed)))
     with open(params_path, "w") as f:
         json.dump(params, f)
 
-    # -- stage: documents (resume unit = url) ------------------------------
+    sp = StageParams(gazetteer_df(spark), args.chunk_size, args.overlap,
+                     args.neardup_threshold)
+
+    def repartitioned(df):
+        return salted_repartition(
+            df, n_partitions=spark.sparkContext.defaultParallelism
+        )
+
+    # -- root stage: documents (resume unit = url) -------------------------
     docs_delta = None  # extracted rows appended this run, if resuming
-    if is_committed(args.output, "documents"):
-        delta = resume_delta(pages, spark, args.output, "documents", fmt=fmt)
+    if is_committed(args.output, root.name):
+        delta = resume_delta(pages, spark, args.output, root.name, fmt=fmt)
         if delta.limit(1).count() > 0:
-            docs_new = extract_pages(
-                salted_repartition(
-                    delta, n_partitions=spark.sparkContext.defaultParallelism
-                )
+            docs_delta = root.delta(
+                sp, {}, {"pages": repartitioned(delta)}
             ).localCheckpoint()
             # pending marker BEFORE the append: from here until all
             # downstream stages reconcile, a crash must invalidate them
             with open(pending_marker, "w") as f:
                 f.write("reconciling documents delta")
-            write_stage(docs_new, args.output, "documents", mode="append",
+            write_stage(docs_delta, args.output, root.name, mode="append",
                         fmt=fmt)
-            docs_delta = docs_new
     else:
-        docs_all = extract_pages(
-            salted_repartition(
-                pages, n_partitions=spark.sparkContext.defaultParallelism
-            )
-        )
-        write_stage(docs_all, args.output, "documents", fmt=fmt)
-    documents = read_stage(spark, args.output, "documents", fmt=fmt)
+        write_stage(root.build(sp, repartitioned(pages)), args.output,
+                    root.name, fmt=fmt)
+    documents = read_stage(spark, args.output, root.name, fmt=fmt)
 
-    # -- resume semantics for downstream stages ----------------------------
-    # A documents delta invalidates every committed downstream result.
-    # Per-document (map-only) stages — chunks, linked — propagate the
-    # delta exactly: compute over the NEW documents only, append.
-    # Near-dup is delta-aware too (r2 verdict #2): the band signatures
-    # are their own committed stage table, so a delta only bands the
-    # NEW docs and joins them against the committed bands — the band
-    # UDF never re-touches the existing corpus.  Components update
-    # INCREMENTALLY from the committed labeling when one exists
-    # (quotient-graph contraction — the iterative CC work is O(delta);
-    # see incremental_components); only triples (map-only union over
-    # stage tables) recompute outright.
-    # Seed eligibility is decided BEFORE invalidation: the marker comes
-    # off below, but the parquet labels stay on disk and are exactly
-    # the pre-delta fixpoint — a crash mid-delta re-enters through the
+    # -- downstream stages, each committed-or-computed ---------------------
+    # Without a documents delta a committed stage is re-read as is.
+    # With one, a stage that can absorb it does so in O(delta):
+    # per-document stages (chunks, linked, bands) append rows derived
+    # from the new documents only, near-dup pairs append the pairs the
+    # delta's bands find against all bands, and components update from
+    # the committed labeling (quotient-graph contraction, see
+    # incremental_components).  Anything else — triples, or a stage
+    # whose input was rebuilt whole this run — recomputes outright.
+    # The seed is whatever components table was committed when the
+    # stage is reached: a crash mid-delta re-enters through the
     # _delta_pending invalidation above, which also clears the seed.
-    components_seed_ok = docs_delta is not None and is_committed(
-        args.output, "components"
-    )
-    if docs_delta is not None:
-        invalidate(("components", "triples"))
-
-    # -- downstream stages (each committed-or-computed) --------------------
-    gaz = gazetteer_df(spark)
-
-    def stage(name, make, partition_by=None, make_delta=None):
-        if not is_committed(args.output, name):
-            write_stage(make(), args.output, name,
-                        partition_by=partition_by, fmt=fmt)
-        elif docs_delta is not None and make_delta is not None:
-            # per-document stage: exact delta propagation (append rows
-            # derived from the new documents only)
-            write_stage(
-                make_delta(docs_delta), args.output, name, mode="append",
-                partition_by=partition_by, fmt=fmt,
-            )
-        return read_stage(spark, args.output, name, fmt=fmt)
+    def resolve(st, inputs):
+        """Commit or resume one stage → (its table, the rows this run
+        appended to it or None)."""
+        full = {n: inputs[n][0] for n in st.inputs}
+        new = {n: inputs[n][1] for n in st.inputs}
+        part = list(st.partition_by) if st.partition_by else None
+        added = None
+        committed = is_committed(args.output, st.name)
+        if committed and docs_delta is None:
+            pass
+        elif (committed and st.delta is not None
+              and all(v is not None for v in new.values())):
+            if st.seeded:
+                full[st.name] = read_stage(spark, args.output, st.name,
+                                           fmt=fmt)
+            # materialized BEFORE the write: downstream deltas re-read
+            # it, and a seeded delta overwrites the table it reads
+            rows = st.delta(sp, full, new).localCheckpoint()
+            write_stage(rows, args.output, st.name,
+                        mode="overwrite" if st.seeded else "append",
+                        partition_by=part, fmt=fmt)
+            added = None if st.seeded else rows
+        else:
+            write_stage(st.build(sp, *(full[n] for n in st.inputs)),
+                        args.output, st.name, partition_by=part, fmt=fmt)
+        if st.name == "bands":
+            with open(scheme_path, "w") as f:
+                f.write(BANDS_SCHEME)
+        return read_stage(spark, args.output, st.name, fmt=fmt), added
 
     # chunks, mention-linking, and near-dup→components are independent
-    # given the committed documents table — submit their stage writes
-    # as concurrent Spark jobs (on a cluster: three parallel writers;
-    # serializing them idles executors at every stage barrier)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def mk_chunks():
-        return stage(
-            "chunks",
-            lambda: chunk_documents(documents, args.chunk_size, args.overlap),
-            make_delta=lambda d: chunk_documents(
-                d, args.chunk_size, args.overlap
-            ),
-        )
-
-    def mk_linked():
-        return stage(
-            "linked",
-            lambda: link_mentions(detect_mentions(documents, gaz), gaz),
-            make_delta=lambda d: link_mentions(detect_mentions(d, gaz), gaz),
-        )
-
-    def mk_components():
-        from src_to_kb_spark.operators.dedup import BANDS_SCHEME
-
-        # Committed bands are only delta-joinable against bands of the
-        # SAME signature scheme: a KB written by an older scheme would
-        # otherwise band-join with zero collisions and silently miss
-        # every cross-version near-dup pair.  Compare the recorded tag
-        # and rebuild the near-dup family on mismatch.
-        scheme_path = os.path.join(args.output, "_scheme_bands")
-        prev_scheme = None
-        if os.path.exists(scheme_path):
-            with open(scheme_path) as f:
-                prev_scheme = f.read().strip()
-        if is_committed(args.output, "bands") and prev_scheme != BANDS_SCHEME:
-            invalidate(("bands", "neardup_pairs", "components", "triples"))
-
-        # bands stage table: 2 short strings per doc — per-document, so
-        # it delta-appends like chunks/linked
-        bands = stage(
-            "bands",
-            lambda: band_signature_rows(documents),
-            make_delta=band_signature_rows,
-        )
-        with open(scheme_path, "w") as f:
-            f.write(BANDS_SCHEME)
-        delta_pairs = None
-        if not is_committed(args.output, "neardup_pairs"):
-            write_stage(
-                verify_candidate_pairs(
-                    documents,
-                    candidate_pairs_from_bands(bands),
-                    threshold=args.neardup_threshold,
-                ),
-                args.output,
-                "neardup_pairs",
-                fmt=fmt,
-            )
-        elif docs_delta is not None:
-            # incremental near-dup: every NEW pair has ≥1 delta member
-            # (delta urls are anti-joined fresh), so candidates =
-            # bands(delta) ⋈ bands(full, incl. the just-appended delta
-            # rows), verified against the full documents table, and
-            # APPENDED — the committed pair set stays untouched.
-            # localCheckpoint: the incremental-components path below
-            # re-reads these rows; without it the verify join would
-            # re-run per consumer.
-            delta_keys = docs_delta.select(F.col("url").alias("key"))
-            delta_bands = bands.join(delta_keys, "key", "left_semi")
-            delta_pairs = verify_candidate_pairs(
-                documents,
-                candidate_pairs_involving(delta_bands, bands),
-                threshold=args.neardup_threshold,
-            ).localCheckpoint()
-            write_stage(
-                delta_pairs, args.output, "neardup_pairs", mode="append",
-                fmt=fmt,
-            )
-        pairs = read_stage(spark, args.output, "neardup_pairs", fmt=fmt)
-        if (
-            not is_committed(args.output, "components")
-            and components_seed_ok
-            and delta_pairs is not None
-        ):
-            # incremental CC: seed from the committed labeling, contract
-            # the delta pairs, iterate over O(delta) edges only.  The
-            # eager checkpoint materializes the result BEFORE the
-            # overwrite of the table it was read from.
-            seed = read_stage(spark, args.output, "components", fmt=fmt)
-            updated = incremental_components(
-                seed, delta_pairs
-            ).localCheckpoint()
-            write_stage(updated, args.output, "components", fmt=fmt)
-        return pairs, stage(
-            "components", lambda: connected_components(pairs)
-        )
-
+    # given the committed documents table — their stage writes run as
+    # concurrent Spark jobs (on a cluster: three parallel writers;
+    # serializing them idles executors at every stage barrier).  Each
+    # stage waits on its inputs' futures; they are submitted in
+    # dependency order, so the oldest unfinished stage always has a
+    # thread and the pool cannot deadlock.
+    done = Future()
+    done.set_result((documents, docs_delta))
+    futures = {root.name: done}
     with ThreadPoolExecutor(max_workers=3) as ex:
-        f_chunks = ex.submit(mk_chunks)
-        f_linked = ex.submit(mk_linked)
-        f_comp = ex.submit(mk_components)
-        chunks = f_chunks.result()
-        linked = f_linked.result()
-        pairs, components = f_comp.result()
-    # partitioned by predicate: a query touching one predicate
-    # (e.g. all same_as edges) scans one directory, not the table
-    triples = stage(
-        "triples",
-        lambda: build_triples(
-            doc_triples(documents),
-            mention_triples(linked),
-            same_as_triples(components),
-            chunk_triples(chunks),
-        ),
-        partition_by=["pred"],
-    )
+        for st in rest:
+            futures[st.name] = ex.submit(
+                lambda st=st: resolve(
+                    st, {n: futures[n].result() for n in st.inputs}
+                )
+            )
+        tables = {n: f.result()[0] for n, f in futures.items()}
     # every downstream stage is now consistent with the appended delta
     if os.path.exists(pending_marker):
         os.remove(pending_marker)
 
     summary = {
-        "documents": documents.count(),
-        "chunks": chunks.count(),
-        "linked": linked.count(),
-        "neardup_pairs": pairs.count(),
-        "components": components.count(),
-        "triples": triples.count(),
-        "stages": run_metrics(args.output),
+        n: tables[n].count()
+        for n in ("documents", "chunks", "linked", "neardup_pairs",
+                  "components", "triples")
     }
+    summary["stages"] = run_metrics(args.output)
     with open(os.path.join(args.output, "summary.json"), "w") as f:
         json.dump(summary, f, indent=1)
     print(json.dumps({k: v for k, v in summary.items() if k != "stages"}))

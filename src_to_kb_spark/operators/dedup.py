@@ -10,7 +10,7 @@ UHUGEINT-mod — pinned by the oracle rows and unit tests).
 
 * :func:`exact_duplicates` — hash-groupBy on the content checksum.
 * :func:`shingles` / :func:`shingle_hash_values` /
-  :func:`neardup_candidate_pairs` — MinHash + LSH banding:
+  :func:`band_signature_rows` — MinHash + LSH banding:
   3-token shingles (lead-window construction), K minhashes per doc
   from the universal family h_j(x) = (A_j·x + B_j) mod 2^64 over the
   shingle's md5-prefix, band signatures, pairs sharing any band.
@@ -163,70 +163,6 @@ def make_bands_udf():
     return bands_udf
 
 
-def band_hash_features_py(text: str) -> tuple[list[str] | None, list[int] | None]:
-    """(bands, hv) from ONE digest pass: the per-shingle 64-bit md5
-    prefixes feed BOTH the universal-hash minhash bands (≡
-    :func:`minhash_bands_py`) and the sorted-distinct signed hash set
-    (≡ :func:`shingle_hashes_py`) — parity with both is pytest-pinned."""
-    import hashlib as _hl
-
-    import numpy as np
-
-    sh = shingle_py(text)
-    if not sh:
-        return None, None
-    dig = np.frombuffer(
-        b"".join(_hl.md5(s.encode("utf-8")).digest()[:8] for s in sh),
-        dtype=">u8",
-    ).astype(np.uint64)
-    a = np.array(MH_A, dtype=np.uint64)
-    b_ = np.array(MH_B, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        mins = (dig[:, None] * a + b_).min(axis=0)
-    rpb = N_HASHES // N_BANDS
-    bands = [
-        ",".join(str(int(m)) for m in mins[b * rpb : (b + 1) * rpb])
-        for b in range(N_BANDS)
-    ]
-    # two's-complement reinterpretation + sorted distinct = the exact
-    # shingle_hashes_py contract (np.unique also collapses the
-    # astronomically-rare 64-bit collision, like its set() does)
-    hv = np.unique(dig.astype(np.int64))
-    return bands, [int(v) for v in hv]
-
-
-def make_band_hash_udf():
-    """pandas UDF: text -> struct(bands: array<string>,
-    hv: array<long>) — the FUSED near-dup feature pass.  Banding
-    already md5-hashes every shingle; on dup-heavy corpora most docs
-    are candidate members (93% on the 1M-doc scale corpus), so
-    re-tokenizing + re-hashing them in the verify pass nearly doubles
-    the stage's dominant compute.  Emitting the hash set alongside the
-    bands trades ~2 kB/doc of Arrow/stage-table width for skipping
-    that second pass entirely (the hv column is exactly what the
-    verify join consumes)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("struct<bands: array<string>, hv: array<long>>")
-    def bf_udf(text: pd.Series) -> pd.DataFrame:
-        feats = [band_hash_features_py(t or "") for t in text]
-        return pd.DataFrame(feats, columns=["bands", "hv"])
-
-    return bf_udf
-
-
-def make_shingle_set_udf():
-    """pandas UDF: text -> array<string> distinct 3-shingles — run only
-    over candidate-pair members during verification."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def sh_udf(text: pd.Series) -> pd.Series:
-        return text.map(shingle_py)
-
-    return sh_udf
-
-
 def shingle_hashes_py(text: str) -> list[int]:
     """Sorted distinct signed-int64 md5-prefix hashes of the 3-token
     shingles.  ~3× narrower than the string arrays through shuffle and
@@ -301,36 +237,6 @@ def shingle_hash_values(sh: DataFrame) -> DataFrame:
     )
 
 
-def _band_rows(feats: DataFrame) -> DataFrame:
-    """(key, band, band_sig) from the features table (band index =
-    position in the bands array); docs with no shingles drop out."""
-    return feats.filter(F.col("bands").isNotNull()).select(
-        "key", F.posexplode("bands").alias("band", "band_sig")
-    )
-
-
-def _band_pairs(bands: DataFrame) -> DataFrame:
-    """Distinct (key_a, key_b), key_a < key_b, sharing ≥1 LSH band."""
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.key") < F.col("b.key")),
-        )
-        .select(F.col("a.key").alias("key_a"), F.col("b.key").alias("key_b"))
-        .distinct()
-    )
-
-
-def neardup_candidate_pairs(
-    docs: DataFrame, key_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    return _band_pairs(_band_rows(shingle_features(docs, key_col, text_col)))
-
-
 def make_intersection_udf():
     """pandas UDF: (sh_a, sh_b) -> |A ∩ B| over sorted int64 hash
     arrays — numpy intersect1d with assume_unique (sets are distinct
@@ -357,19 +263,41 @@ def band_signature_rows(
     """(key, band, band_sig) — the LSH banding pass alone (one Arrow
     UDF emitting 2 short strings per doc).  Persisted as its own stage
     table by the pipeline job so a documents DELTA only bands the new
-    docs and joins against these committed rows."""
+    docs and joins against these committed rows.  Band index =
+    position in the bands array; docs with no shingles drop out.
+
+    The null filter sits AFTER an outer explode, on its output: a plain
+    explode (or a filter on the bands) makes Spark infer a non-null
+    filter on the band UDF's result and push it below the projection,
+    evaluating the UDF twice per document."""
     bands_udf = make_bands_udf()
-    return _band_rows(
-        docs.select(
-            F.col(key_col).alias("key"),
-            bands_udf(F.col(text_col)).alias("bands"),
-        )
-    )
+    return docs.select(
+        F.col(key_col).alias("key"),
+        F.posexplode_outer(bands_udf(F.col(text_col))).alias(
+            "band", "band_sig"
+        ),
+    ).filter(F.col("band").isNotNull())
 
 
 def candidate_pairs_from_bands(bands: DataFrame) -> DataFrame:
-    """Distinct candidate pairs from a (key, band, band_sig) table."""
-    return _band_pairs(bands)
+    """Distinct (key_a, key_b), key_a < key_b, sharing ≥1 LSH band of a
+    (key, band, band_sig) table.  Both sides of the self-join read one
+    lazy local checkpoint of ``bands``: a small side is broadcast, so no
+    exchange is shared, and an uncommitted band table would otherwise
+    run its UDF pass once per side."""
+    bands = bands.localCheckpoint(eager=False)
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.key") < F.col("b.key")),
+        )
+        .select(F.col("a.key").alias("key_a"), F.col("b.key").alias("key_b"))
+        .distinct()
+    )
 
 
 def candidate_pairs_involving(
@@ -413,6 +341,12 @@ def verify_candidate_pairs(
     semantics (HALF_UP) match the DuckDB oracle."""
     cands = cands.localCheckpoint(eager=False)
     shh_udf = make_shingle_hash_udf()
+    n_common_udf = make_intersection_udf()
+    cand_keys = (
+        cands.select(F.col("key_a").alias("key"))
+        .union(cands.select(F.col("key_b").alias("key")))
+        .distinct()
+    )
     # two consumers (a/b sides of the verify join) — lazy localCheckpoint
     # (NOT .cache()) so the shingle-hash UDF runs once over the
     # candidate members: a cache would pin the ~2 kB/doc hash arrays in
@@ -421,27 +355,10 @@ def verify_candidate_pairs(
     # copy.  The checkpoint's blocks die with their RDD reference.
     cand_sets = (
         docs.select(F.col(key_col).alias("key"), F.col(text_col).alias("_t"))
-        .join(_cand_keys(cands), "key", "left_semi")
+        .join(cand_keys, "key", "left_semi")
         .select("key", shh_udf(F.col("_t")).alias("sh"))
         .localCheckpoint(eager=False)
     )
-    return _verify_with_sets(cands, cand_sets, threshold)
-
-
-def _cand_keys(cands: DataFrame) -> DataFrame:
-    return (
-        cands.select(F.col("key_a").alias("key"))
-        .union(cands.select(F.col("key_b").alias("key")))
-        .distinct()
-    )
-
-
-def _verify_with_sets(
-    cands: DataFrame, cand_sets: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification tail over precomputed (key, sh)
-    sorted-int64 hash sets."""
-    n_common_udf = make_intersection_udf()
     sets_a = cand_sets.select(
         F.col("key").alias("key_a"), F.col("sh").alias("sh_a")
     )
@@ -471,43 +388,19 @@ def neardup_pairs(
     text_col: str = "text",
     threshold: float = 0.8,
 ) -> DataFrame:
-    """LSH candidates verified with exact 3-shingle Jaccard ≥ threshold.
-
-    → (key_a, key_b, jaccard) with jaccard rounded to 6 dp for stable
-    cross-engine comparison.
-
-    Plan shape: ONE fused Arrow pass (:func:`make_band_hash_udf`)
-    computes the band signatures AND the sorted-int64 shingle-hash set
-    from a single per-shingle digest sweep, localCheckpointed (the
-    local proxy for the stage writing its own table at cluster scale);
-    the band self-join produces the (small) candidate set; the verify
-    join then reads the hv column for candidate members instead of
-    re-tokenizing + re-hashing them — on dup-heavy corpora the members
-    are MOST of the corpus (93% on the 1M-doc scale corpus), so the
-    second text pass nearly doubled the stage's dominant md5 compute.
-    The hash column costs ~2 kB/doc of checkpoint width — the explicit
-    space-for-compute trade; the shuffles after candidate generation
-    still move only pair ids + the members' hash arrays.
-
-    The checkpoint is LAZY: it still truncates lineage (the plan
-    downstream reads a checkpointed RDD scan) but materializes inside
-    the first consuming job instead of adding an eager driver barrier
-    — fewer serial jobs per pipeline run, which matters for the
-    north-rule scaling efficiency where barriered driver time is the
-    fixed cost that does not shrink with executors.
-    """
-    bf_udf = make_band_hash_udf()
-    feats = docs.select(
-        F.col(key_col).alias("key"),
-        bf_udf(F.col(text_col)).alias("f"),
-    ).localCheckpoint(eager=False)
-    bands_df = feats.select("key", F.col("f.bands").alias("bands"))
-    cands = _band_pairs(_band_rows(bands_df)).localCheckpoint(eager=False)
-    cand_sets = (
-        feats.select("key", F.col("f.hv").alias("sh"))
-        .join(_cand_keys(cands), "key", "left_semi")
+    """LSH candidates verified with exact 3-shingle Jaccard ≥ threshold
+    → (key_a, key_b, jaccard), jaccard rounded to 6 dp for stable
+    cross-engine comparison: blocking (:func:`band_signature_rows`) →
+    candidates (:func:`candidate_pairs_from_bands`) → verify
+    (:func:`verify_candidate_pairs`), the split the pipeline job
+    commits as its ``bands`` and ``neardup_pairs`` stage tables."""
+    return verify_candidate_pairs(
+        docs,
+        candidate_pairs_from_bands(band_signature_rows(docs, key_col, text_col)),
+        key_col,
+        text_col,
+        threshold=threshold,
     )
-    return _verify_with_sets(cands, cand_sets, threshold)
 
 
 # --------------------------- SimHash ---------------------------------------
@@ -626,7 +519,7 @@ def simhash_neardup_pairs(
     post-extract) are EXCLUDED from candidacy: they would all share
     the identical zero signature and emit all-pairs at hamming 0 — a
     quadratic blowup between unrelated urls that the MinHash path
-    already avoids by dropping null-band docs (:func:`_band_rows`).
+    already avoids by dropping null-band docs (:func:`band_signature_rows`).
     The DuckDB twin applies the same exclusion (inner join on the
     token aggregate).
     """

@@ -327,19 +327,16 @@ def lang_distribution(docs: DataFrame) -> DataFrame:
 
 
 def similar_documents(
-    docs: DataFrame, target_key: Column | str, limit: int | None = None
+    docs: DataFrame, target_key: str, limit: int | None = None
 ) -> DataFrame:
     """J3 — file similarity (search.js:444-478): +2 same language,
     +1 same type, +0.5 per target path part present in the candidate's
     parts (duplicates in target counted), keep > 0, sort desc.
 
-    ``target_key`` may be a url literal or a 1-row DataFrame join; we
-    broadcast the single target row and score map-side.
+    ``target_key`` is the target's url; we broadcast the single target
+    row and score map-side.
     """
-    if isinstance(target_key, str):
-        target = docs.filter(F.col("url") == target_key)
-    else:
-        target = docs.filter(F.col("url") == target_key)
+    target = docs.filter(F.col("url") == target_key)
     t = F.broadcast(
         target.select(
             F.col("url").alias("t_url"),

@@ -18,12 +18,11 @@ import json
 import os
 import shutil
 
-# the pipeline's stage set, in build order (jobs/run_kg_pipeline.py);
+from .. import pipeline
+
+# the pipeline's stage names, in build order;
 # progress = committed stages / len(STAGES)
-STAGES = (
-    "documents", "chunks", "linked", "bands", "neardup_pairs",
-    "components", "triples",
-)
+STAGES = tuple(st.name for st in pipeline.STAGES)
 
 _MARKER_PREFIX = "_committed_"
 

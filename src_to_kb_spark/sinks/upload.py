@@ -205,11 +205,12 @@ def upload(
             ).first()[0]
             if dup_embedding_chunk_ids:
                 print(
-                    f"⚠️  {dup_embedding_chunk_ids} chunk_ids have "
-                    "multiple embeddings; keeping the deterministic "
-                    "max vector per chunk_id (the reference keeps the "
-                    "last file-order write — no file order exists on "
-                    "a distributed table)"
+                    f"⚠️  {dup_embedding_chunk_ids} duplicated chunk_ids "
+                    "attached to sendable documents (counted per "
+                    "document) have multiple embeddings; keeping the "
+                    "deterministic max vector per chunk_id (the "
+                    "reference keeps the last file-order write — no "
+                    "file order exists on a distributed table)"
                 )
         # skip-with-warning set: no chunks at all, no embeddings, or
         # partially missing (upload.js:141-158 / :169-173)

@@ -172,34 +172,6 @@ def test_minhash_udf_matches_catalyst_md5(spark):
         assert minhash_bands_py(sh) == expect
 
 
-def test_band_hash_features_parity(spark):
-    """The fused band+hash feature pass must emit EXACTLY
-    minhash_bands_py's bands and shingle_hashes_py's sorted-int64 hash
-    set — the near-dup verify join consumes hv in place of a second
-    tokenize+md5 pass over candidate members."""
-    from src_to_kb_spark.operators.dedup import (
-        band_hash_features_py,
-        minhash_bands_py,
-        shingle_hashes_py,
-        shingle_py,
-    )
-
-    docs = extract_pages(load_pages(spark, SF_SMOKE)).select("text")
-    checked = 0
-    for r in docs.limit(50).collect():
-        bands, hv = band_hash_features_py(r["text"])
-        sh = shingle_py(r["text"])
-        if not sh:
-            assert bands is None and hv is None
-            continue
-        assert bands == minhash_bands_py(sh)
-        assert hv == shingle_hashes_py(r["text"])
-        checked += 1
-    assert checked > 0
-    assert band_hash_features_py("") == (None, None)
-    assert band_hash_features_py("one two") == (None, None)  # <3 tokens
-
-
 def test_connected_components_distributed_path_graph(spark):
     """10k-node path graph through the DISTRIBUTED branch: the
     alternating large-star/small-star algorithm must label it in

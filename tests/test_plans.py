@@ -141,6 +141,19 @@ def test_shingle_features_single_arrow_pass(spark):
     assert plan.count("ArrowEvalPython") <= 2, plan.count("ArrowEvalPython")
 
 
+def test_band_signature_rows_single_arrow_pass(spark):
+    """The band UDF runs once per document: a non-null filter on its
+    result, inferred for the explode and pushed below the projection,
+    would evaluate it a second time."""
+    from src_to_kb_spark.operators.dedup import band_signature_rows
+
+    docs = extract_pages(load_pages(spark, SF_SMOKE))
+    plan = _plan(band_signature_rows(docs))
+    evals = [ln for ln in plan.splitlines()
+             if "ArrowEvalPython" in ln and "bands_udf" in ln]
+    assert len(evals) == 1, plan
+
+
 def test_embedding_neardup_registered_is_not_quadratic(spark):
     """The REGISTERED embedding near-dup must be the bucketed LSH
     equi-join — no cartesian/nested-loop anywhere in the plan

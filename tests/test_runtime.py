@@ -222,23 +222,71 @@ def test_job_table_layer_change_invalidates_everything(spark, tmp_path):
         params = json.load(f)
     assert params["table_format"] == "parquet"
 
-    def mtime(stage):
-        return os.path.getmtime(os.path.join(out, f"_committed_{stage}"))
+    # sentinel marker content: a resume must leave it in place, a
+    # rebuild rewrites the marker with its own commit ref
+    def mark(*stages):
+        for st in stages:
+            with open(os.path.join(out, f"_committed_{st}"), "w") as f:
+                f.write(f"sentinel-{st}")
+
+    def marker(stage):
+        with open(os.path.join(out, f"_committed_{stage}")) as f:
+            return f.read()
 
     # pre-round-5 sidecar (no format keys) == parquet era: no rebuild
     legacy = {k: v for k, v in params.items()
               if k not in ("table_format", "table_prefix")}
     with open(params_path, "w") as f:
         json.dump(legacy, f)
-    t_docs, t_triples = mtime("documents"), mtime("triples")
+    mark("documents", "triples")
     job_main(["--input", inp, "--output", out])
-    assert mtime("documents") == t_docs and mtime("triples") == t_triples
+    assert marker("documents") == "sentinel-documents"
+    assert marker("triples") == "sentinel-triples"
 
     # sidecar claiming a DIFFERENT layer: everything rebuilds
     with open(params_path, "w") as f:
         json.dump({**params, "table_format": "iceberg",
                    "table_prefix": "kb.other"}, f)
     job_main(["--input", inp, "--output", out])
-    assert mtime("documents") > t_docs and mtime("triples") > t_triples
+    assert marker("documents") != "sentinel-documents"
+    assert marker("triples") != "sentinel-triples"
     with open(params_path) as f:
         assert json.load(f)["table_format"] == "parquet"
+
+
+def test_job_legacy_layer_inferred_from_surviving_markers(spark, tmp_path):
+    """A pre-round-5 sidecar (no format keys) takes its table layer
+    from marker content.  With _committed_documents gone, the layer
+    comes from whichever markers survive: iceberg-era 'snapshot='
+    downstream markers must not be trusted by a parquet rerun."""
+    import json
+
+    from jobs.run_kg_pipeline import main as job_main
+
+    from .conftest import SF_SMOKE
+
+    src = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").filter(
+        "doc_id < 40"
+    )
+    inp = str(tmp_path / "in")
+    src.write.parquet(f"{inp}/documents.parquet")
+    out = str(tmp_path / "kb")
+    job_main(["--input", inp, "--output", out])
+
+    params_path = os.path.join(out, "_scheme_params")
+    with open(params_path) as f:
+        params = json.load(f)
+    with open(params_path, "w") as f:
+        json.dump({k: v for k, v in params.items()
+                   if k not in ("table_format", "table_prefix")}, f)
+    os.remove(os.path.join(out, "_committed_documents"))
+    downstream = ("chunks", "linked", "bands", "neardup_pairs",
+                  "components", "triples")
+    for st in downstream:
+        with open(os.path.join(out, f"_committed_{st}"), "w") as f:
+            f.write("snapshot=1")
+
+    job_main(["--input", inp, "--output", out])
+    for st in ("documents", *downstream):
+        with open(os.path.join(out, f"_committed_{st}")) as f:
+            assert not f.read().startswith("snapshot="), st
