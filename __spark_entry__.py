@@ -256,7 +256,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     keep_keys=False: the pipeline reads only the 5 north-rule columns
     (and a real pages table has no synthesized keys) — same plan as
-    the job and bench."""
+    the job."""
     pages = load_pages(spark, "/root/testdata/sf0.001", keep_keys=False)
     return run_pipeline(spark, pages, neardup_threshold=NEARDUP_THRESHOLD).triples
 
@@ -594,9 +594,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_pipeline_triples(spark, sf):
-        # keep_keys=False: same plan as entry()/the job —
-        # the bench headline and the per-stage attribution must time
-        # the identical logical plan
+        # keep_keys=False: same plan as entry()/the job
         return run_pipeline(
             spark,
             load_pages(spark, sf, keep_keys=False),

@@ -132,24 +132,6 @@ def minhash_bands_py(sh: list[str], n_hashes: int = N_HASHES,
     ]
 
 
-def make_shingle_features_udf():
-    """pandas UDF: text -> struct(sh: array<string>, bands: array<string>).
-
-    One Arrow-batched pass computes both the shingle set (for exact
-    Jaccard verification) and the LSH band signatures (for candidate
-    generation).  hashlib md5 is C — no JVM MessageDigest reflection,
-    no interpreted higher-order-function evaluation."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("struct<sh: array<string>, bands: array<string>>")
-    def feats_udf(text: pd.Series) -> pd.DataFrame:
-        sh = text.map(shingle_py)
-        bands = sh.map(minhash_bands_py)
-        return pd.DataFrame({"sh": sh, "bands": bands})
-
-    return feats_udf
-
-
 def make_bands_udf():
     """pandas UDF: text -> array<string> band signatures only — the
     candidate-generation pass ships 2 short strings per doc through
@@ -193,29 +175,16 @@ def make_shingle_hash_udf():
 
 def shingles(docs: DataFrame, key_col: str = "url", text_col: str = "text") -> DataFrame:
     """(key, shingle) — distinct 3-token shingles; map-only."""
-    return shingle_sets(docs, key_col, text_col).select(
-        "key", F.explode("sh").alias("shingle")
-    )
+    from pyspark.sql.functions import pandas_udf
 
+    @pandas_udf("array<string>")
+    def shingle_udf(text: pd.Series) -> pd.Series:
+        return text.map(shingle_py)
 
-def shingle_sets(
-    docs: DataFrame, key_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    """(key, sh) with sh: array<string> — the un-exploded form."""
-    udf = make_shingle_features_udf()
     return docs.select(
-        F.col(key_col).alias("key"), udf(F.col(text_col))["sh"].alias("sh")
+        F.col(key_col).alias("key"),
+        F.explode(shingle_udf(F.col(text_col))).alias("shingle"),
     )
-
-
-def shingle_features(
-    docs: DataFrame, key_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    """(key, sh: array<string>, bands: array<string>) in one UDF pass."""
-    udf = make_shingle_features_udf()
-    return docs.select(
-        F.col(key_col).alias("key"), udf(F.col(text_col)).alias("f")
-    ).select("key", F.col("f.sh").alias("sh"), F.col("f.bands").alias("bands"))
 
 
 def shingle_hash_values(sh: DataFrame) -> DataFrame:

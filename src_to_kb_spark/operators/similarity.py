@@ -53,7 +53,8 @@ def knn_brute_force(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by cosine to ``query_vec`` → (id, cos_sim)."""
+    """Exact top-k by cosine to ``query_vec`` → (id, cos_sim).  The
+    ANN probes call it on their bucket / list filter as the rerank."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         embeddings.select(
@@ -466,18 +467,11 @@ def knn_lsh(
     if dim is None:
         dim = len(query_vec)
     qb = query_lsh_bucket(query_vec, dim, n_bits)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     bucketed = embeddings.withColumn(
         "bucket", lsh_bucket(F.col(vec_col), dim, n_bits)
     )
-    return (
-        bucketed.filter(F.col("bucket") == qb)
-        .select(
-            F.col(id_col), F.round(cosine(F.col(vec_col), q), 4).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return knn_brute_force(bucketed.filter(F.col("bucket") == qb),
+                           query_vec, k, id_col, vec_col)
 
 
 # ------------------- committed ANN serving table + probes ------------------
@@ -529,15 +523,8 @@ def knn_lsh_kb(
     if dim is None:
         dim = len(query_vec)
     qb = query_lsh_bucket(query_vec, dim, n_bits)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        ann.filter(F.col("lsh_bucket") == qb)
-        .select(
-            F.col(id_col), F.round(cosine(F.col(vec_col), q), 4).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return knn_brute_force(ann.filter(F.col("lsh_bucket") == qb),
+                           query_vec, k, id_col, vec_col)
 
 
 def knn_ivf_kb(
@@ -556,15 +543,8 @@ def knn_ivf_kb(
     if dim is None:
         dim = len(query_vec)
     probes = _query_probe_lists(query_vec, dim, n_centroids, nprobe)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        ann.filter(F.col("ivf_list").isin(probes))
-        .select(
-            F.col(id_col), F.round(cosine(F.col(vec_col), q), 4).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return knn_brute_force(ann.filter(F.col("ivf_list").isin(probes)),
+                           query_vec, k, id_col, vec_col)
 
 
 def _oracle_bucket_expr(
@@ -690,20 +670,12 @@ def knn_ivf(
     if dim is None:
         dim = len(query_vec)
     probes = _query_probe_lists(query_vec, dim, n_centroids, nprobe)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     assign_udf = make_ivf_assign_udf(dim, n_centroids)
     assigned = embeddings.withColumn(
         "ivf_list", assign_udf(F.col(vec_col))
     )
-    return (
-        assigned.filter(F.col("ivf_list").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 4).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return knn_brute_force(assigned.filter(F.col("ivf_list").isin(probes)),
+                           query_vec, k, id_col, vec_col)
 
 
 def oracle_knn_ivf_sql(

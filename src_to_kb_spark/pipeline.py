@@ -3,10 +3,9 @@
 pages → documents → chunks / linked / bands → neardup_pairs →
 components → triples.  Each :class:`Stage` names its input stages, its
 full-build function, how it absorbs a documents delta, its partitioning
-and the job parameters in its resume identity.  Three callers walk
-:data:`STAGES`: :func:`run_pipeline` in memory, the
-``jobs/run_kg_pipeline.py`` job with per-stage commit and resume, and
-``bench.py``'s per-stage timing.
+and the job parameters in its resume identity.  Two callers walk
+:data:`STAGES`: :func:`run_pipeline` in memory and the
+``jobs/run_kg_pipeline.py`` job with per-stage commit and resume.
 
 Stage functions look operators up through their module
 (``dedup.…``, ``canonicalize.…``) when they run, so a test that
@@ -189,11 +188,13 @@ def run_pipeline(
     tables = {"pages": pages}
     for st in STAGES:
         df = st.build(params, *(tables[i] for i in st.inputs))
-        # a table read by several stages (documents) is persisted once
+        # a table read by several stages (documents) is computed once
         # instead of re-running its UDF scan per consumer — the role the
-        # committed stage table plays in the job
+        # committed stage table plays in the job.  A lazy local
+        # checkpoint, not persist(): nothing enters the session cache,
+        # where repeated calls would pile up entries nobody releases.
         if sum(st.name in s.inputs for s in STAGES) > 1:
-            df = df.persist()
+            df = df.localCheckpoint(eager=False)
         tables[st.name] = df
     return PipelineResult(*(tables[n] for n in (
         "documents", "chunks", "linked", "components", "triples")))

@@ -23,13 +23,7 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
-    """``master`` overrides the default ``local[cpus]`` — e.g.
-    ``local-cluster[4,8,16384]`` spawns four real executor JVMs with
-    8 cores each, the sandbox's closest proxy for an N-executor
-    cluster (``cpus`` should then be total cores for partition
-    sizing)."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -39,7 +33,7 @@ def get_spark(
         # remains
         shuffle_partitions = max(cpus * 4, 32)
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

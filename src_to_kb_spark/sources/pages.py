@@ -275,8 +275,8 @@ def synthetic_pages_distributed(
     spark: SparkSession, n: int, seed: int = 42, n_partitions: int | None = None
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) generated ON THE EXECUTORS
-    via an Arrow UDF over ``spark.range(n)`` — the scaling-bench input
-    (driver-side row lists don't survive 10^5+ docs)."""
+    via an Arrow UDF over ``spark.range(n)`` — the benchmark corpus
+    input (driver-side row lists don't survive 10^5+ docs)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<url: string, lang: string, text: string>")

@@ -37,6 +37,22 @@ def test_triple_pr(spark):
     )
 
 
+def test_run_pipeline_leaves_session_cache_empty(spark):
+    """``run_pipeline`` computes its shared documents table once per
+    query without registering it in the session cache: repeated calls
+    over the same pages neither accumulate cached plans nor ask to
+    cache an already-cached one."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pages = load_pages(spark, SF_SMOKE)
+    runs = []
+    for _ in range(2):
+        triples = run_pipeline(spark, pages, neardup_threshold=0.6).triples
+        runs.append(sorted(tuple(r) for r in triples.collect()))
+        assert cache.isEmpty()
+    assert runs[0] == runs[1] and runs[0]
+
+
 GOLDEN_GRAPHS = [
     # (edges, expected components {node: canon})
     ([("b", "c"), ("a", "b")], {"a": "a", "b": "a", "c": "a"}),  # chain

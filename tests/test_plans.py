@@ -130,17 +130,6 @@ def test_neardup_plan_is_bounded_and_arrow_based(spark):
     assert "ExistingRDD" in plan or "Scan" in plan
 
 
-def test_shingle_features_single_arrow_pass(spark):
-    """shingle set + band signatures come from ONE pandas-UDF
-    evaluation (struct output), not two UDF passes over the text."""
-    from src_to_kb_spark.operators.dedup import shingle_features
-
-    docs = extract_pages(load_pages(spark, SF_SMOKE))
-    plan = _plan(shingle_features(docs))
-    # one ArrowEvalPython for the cleaner (extract), one for features
-    assert plan.count("ArrowEvalPython") <= 2, plan.count("ArrowEvalPython")
-
-
 def test_band_signature_rows_single_arrow_pass(spark):
     """The band UDF runs once per document: a non-null filter on its
     result, inferred for the explode and pushed below the projection,

@@ -94,40 +94,3 @@ def test_dup_embedding_count_is_distinct_chunk_ids(spark):
     )
     total = joined.agg(F.coalesce(F.sum("n_dup"), F.lit(0))).first()[0]
     assert total == 1
-
-
-def test_flag_regressions_threshold_floor_and_driver_shape():
-    """The drift tripwire reads the driver-shaped BENCH_r{N}.json
-    (queries under parsed.queries), flags >1.25x ratios, and requires
-    a >0.25 s absolute delta so sub-second queries at the scheduler
-    noise floor (50 ms jitter on a 0.1 s query) don't cry wolf."""
-    import json
-    import os
-
-    import bench
-
-    here = os.path.dirname(os.path.abspath(bench.__file__))
-    rounds = sorted(
-        p for p in os.listdir(here) if p.startswith("BENCH_r")
-    )
-    assert rounds, "driver-recorded bench artifacts should exist"
-    with open(os.path.join(here, rounds[-1])) as f:
-        doc = json.load(f)
-    prev = doc.get("queries") or (doc.get("parsed") or {}).get("queries")
-    assert prev, "latest BENCH file must expose queries in either shape"
-
-    big = max(prev, key=prev.get)      # multi-second query
-    small = min(prev, key=prev.get)    # noise-floor query
-    assert prev[small] < 1.0 <= prev[big]
-
-    out = bench._flag_regressions({
-        big: prev[big] * 1.5,          # ratio and delta both trip
-        small: prev[small] * 1.5,      # ratio trips, delta is noise
-    })
-    assert out["baseline"] == rounds[-1]
-    assert big in out["flagged"] and small not in out["flagged"]
-    assert out["flagged"][big]["ratio"] == 1.5
-
-    # within-threshold walls never flag regardless of magnitude
-    out2 = bench._flag_regressions({big: prev[big] * 1.2})
-    assert out2["flagged"] == {}
