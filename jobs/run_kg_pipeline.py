@@ -21,7 +21,10 @@ Resume cost is O(delta), not O(corpus): per-doc stages (documents,
 chunks, linked, bands) append rows derived from the new docs only,
 near-dup pairs come from joining the delta's bands against the
 committed bands table, components update from the committed labeling,
-and only triples (map-only union) recompute outright.
+and only triples recompute outright (a union of per-stage parts,
+rebalanced on ``pred`` before its partitioned write).  Parquet stage
+tables are zstd-compressed, and ``summary.json`` counts their rows from
+the parquet footers, so counting launches no Spark job.
 ``--table-format iceberg`` routes the same stage
 I/O through Iceberg tables (``runtime/checkpoint.py``
 :class:`IcebergFormat`): writes become catalog snapshots and each
@@ -326,13 +329,14 @@ def main(argv: list[str] | None = None) -> dict:
                     st, {n: futures[n].result() for n in st.inputs}
                 )
             )
-        tables = {n: f.result()[0] for n, f in futures.items()}
+        for f in futures.values():
+            f.result()
     # every downstream stage is now consistent with the appended delta
     if os.path.exists(pending_marker):
         os.remove(pending_marker)
 
     summary = {
-        n: tables[n].count()
+        n: fmt.count(spark, n)
         for n in ("documents", "chunks", "linked", "neardup_pairs",
                   "components", "triples")
     }

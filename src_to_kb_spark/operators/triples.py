@@ -11,10 +11,11 @@ depends on it):
 * chunk       — (url, has_chunk, chunk_id)      [chunker-derived]
 * same_as     — (url, same_as, canon_id)        [canonicalization]
 
-At scale the output table is written partitioned by ``pred`` and
-bucketed by ``subj`` (predicate-selective scans + co-located
-subject joins); here we return the union DataFrame and let callers
-sink it.  All unions are map-only over already-computed inputs.
+The pipeline commits the table partitioned by ``pred`` (predicate-
+selective scans), rebalanced on ``pred`` first so each predicate
+directory holds a few files; it is not bucketed.  Here we return the
+union DataFrame and let callers sink it.  All unions are map-only over
+already-computed inputs.
 """
 
 from __future__ import annotations

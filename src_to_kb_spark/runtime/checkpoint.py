@@ -7,6 +7,14 @@ records per-partition row counts and wall time, and a ``_committed``
 marker makes the write atomic-observable.  Restart = anti-join the
 committed keys.
 
+A parquet stage is written once, zstd-compressed, and never read back:
+the lineage counts come from the row counts in the footers of the files
+the write added (read in-process, no Spark job), keyed by the writing
+task's index in each ``part-NNNNN`` file name.  A partitioned write
+(triples by ``pred``, the ANN table by bucket/list) is rebalanced on its
+partition columns first, so each partition directory gets a few files
+rather than one per upstream task, and AQE still splits a hot one.
+
 The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
 :class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
 default writes bare parquet directories under ``out_dir``.  On an
@@ -29,10 +37,46 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Per write, not session-wide: the pages input and every other parquet
+# write keep their codec.  Snappy barely compresses this text-heavy KB.
+CODEC = "zstd"
+
+# Spark names each output file part-<task index>-<job uuid>…
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _part_files(path: str) -> set[str]:
+    """Every data file under a (possibly hive-partitioned) parquet dir."""
+    out = set()
+    for d, dirs, files in os.walk(path):
+        # what Spark's reader skips, e.g. a crashed write's _temporary
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        out.update(os.path.join(d, f) for f in files if _PART_FILE.match(f))
+    return out
+
+
+def _footer_rows(path: str) -> int:
+    return pq.read_metadata(path).num_rows
+
+
+def _lineage(files: set[str]) -> list[dict]:
+    """Per-writing-task row counts of ``files``, from their footers."""
+    per_task: dict[int, int] = {}
+    for p in files:
+        task = int(_PART_FILE.match(os.path.basename(p)).group(1))
+        per_task[task] = per_task.get(task, 0) + _footer_rows(p)
+    return [
+        {"partition_id": t, "n_rows": n}
+        for t, n in sorted(per_task.items())
+        if n
+    ]
 
 
 class ParquetFormat:
@@ -46,21 +90,34 @@ class ParquetFormat:
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
 
+    def _path(self, stage: str) -> str:
+        return os.path.join(self.out_dir, stage)
+
     def write(
         self,
         df: DataFrame,
         stage: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-    ) -> str | None:
-        writer = df.write.mode(mode)
+    ) -> tuple[str | None, list[dict]]:
+        """→ (commit ref, per-partition row counts of the files this
+        write added).  An append lists the table before and after, so
+        only its own files count."""
+        path = self._path(stage)
+        before = _part_files(path) if mode == "append" else set()
+        if partition_by:
+            df = df.hint("rebalance", *partition_by)
+        writer = df.write.mode(mode).option("compression", CODEC)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.out_dir, stage))
-        return None
+        writer.parquet(path)
+        return None, _lineage(_part_files(path) - before)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.out_dir, stage))
+        return spark.read.parquet(self._path(stage))
+
+    def count(self, spark: SparkSession, stage: str) -> int:
+        return sum(_footer_rows(p) for p in _part_files(self._path(stage)))
 
 
 class IcebergFormat:
@@ -106,7 +163,7 @@ class IcebergFormat:
         stage: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-    ) -> str | None:
+    ) -> tuple[str | None, list[dict]]:
         ident = self._ident(stage)
         spark = df.sparkSession
         w = df.writeTo(ident)
@@ -129,10 +186,24 @@ class IcebergFormat:
         row = spark.sql(
             f"SELECT snapshot_id FROM {ident}.refs WHERE name = 'main'"
         ).first()
-        return f"snapshot={row[0]}" if row else None
+        # lineage: an overwrite reads the written table back, an append
+        # counts the delta (re-reading the table would make every
+        # per-document delta append O(corpus))
+        counted = df if mode == "append" else self.read(spark, stage)
+        per_part = (
+            counted.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(F.count("*").alias("n_rows"))
+            .collect()
+        )
+        return f"snapshot={row[0]}" if row else None, sorted(
+            (r.asDict() for r in per_part), key=lambda d: d["partition_id"]
+        )
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.table(self._ident(stage))
+
+    def count(self, spark: SparkSession, stage: str) -> int:
+        return self.read(spark, stage).count()
 
 
 def write_stage(
@@ -148,38 +219,25 @@ def write_stage(
     Returns the metrics dict: {stage, wall_sec, n_rows, partitions:
     [{partition_id, n_rows}, ...]}.
 
-    ``mode='overwrite'`` reads the WRITTEN table back for the counts —
-    O(what was just written).  ``mode='append'`` (the resume path's
-    delta writes) counts the DELTA DataFrame instead: re-reading the
-    whole table would cost an O(corpus) scan per per-document delta
-    append, turning the documented O(delta) resume into O(corpus) —
-    the sidecar then describes THIS write (``"mode": "append"``), i.e.
-    the lineage of the increment, not the cumulative table.
+    The counts describe THIS write: the whole table for
+    ``mode='overwrite'``, only the appended rows for ``mode='append'``
+    (the resume path's delta writes — the sidecar then holds the
+    lineage of the increment, not of the cumulative table).  A parquet
+    stage takes them from the written files' footers, so counting adds
+    no Spark job; ``partition_id`` is the writing task's index.
     """
     fmt = fmt or ParquetFormat(out_dir)
     t0 = time.time()
-    commit_ref = fmt.write(df, stage, mode=mode, partition_by=partition_by)
-    wall = time.time() - t0
-
-    counted = (
-        df if mode == "append" else fmt.read(df.sparkSession, stage)
-    )
-    per_part = (
-        counted.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("n_rows"))
-        .collect()
+    commit_ref, parts = fmt.write(
+        df, stage, mode=mode, partition_by=partition_by
     )
     metrics = {
         "stage": stage,
         "mode": mode,
         "format": fmt.name,
-        "wall_sec": round(wall, 3),
-        "n_rows": int(sum(r["n_rows"] for r in per_part)),
-        "partitions": sorted(
-            ({"partition_id": r["partition_id"], "n_rows": r["n_rows"]}
-             for r in per_part),
-            key=lambda d: d["partition_id"],
-        ),
+        "wall_sec": round(time.time() - t0, 3),
+        "n_rows": sum(p["n_rows"] for p in parts),
+        "partitions": parts,
     }
     with open(os.path.join(out_dir, f"_metrics_{stage}.json"), "w") as f:
         json.dump(metrics, f, indent=1)
