@@ -17,6 +17,12 @@ per-partition lineage metrics (``_metrics_<stage>.json``).  Re-running
 with the same --output resumes: committed stages are re-read,
 uncommitted input keys are recomputed via anti-join (north_rule:
 "resumable from checkpoint with per-partition lineage + metrics").
+The pages (or a resume's new pages) are salted-repartitioned by host
+with the partition count left to AQE, so the per-document tables
+follow the input's size: a sub-MB corpus is extracted by one Python
+task and each of documents, chunks, linked and bands is one file.  The
+gazetteer and a driver-labelled components table are local relations
+(components one partition), so neither launches Python tasks.
 Resume cost is O(delta), not O(corpus): per-doc stages (documents,
 chunks, linked, bands) append rows derived from the new docs only,
 near-dup pairs come from joining the delta's bands against the
@@ -247,9 +253,9 @@ def main(argv: list[str] | None = None) -> dict:
                      args.neardup_threshold)
 
     def repartitioned(df):
-        return salted_repartition(
-            df, n_partitions=spark.sparkContext.defaultParallelism
-        )
+        # sized to the data by AQE, as in run_pipeline: a small corpus
+        # or delta is extracted, and written, as one partition
+        return salted_repartition(df)
 
     # -- root stage: documents (resume unit = url) -------------------------
     docs_delta = None  # extracted rows appended this run, if resuming

@@ -30,6 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _LABEL_SCHEMA = "key string, canon_id string"
+# driver-labelled components per partition (and file): a small table is
+# one, a table near ``driver_threshold`` keeps some writer parallelism
+_LABELS_PER_PARTITION = 1_000_000
 
 
 def connected_components(
@@ -161,18 +164,20 @@ def _components_driver(
 ) -> DataFrame:
     """Union-find on collected edges — the small-graph fast path.
 
-    Arrow end-to-end: the caller collected the (a, b) pandas frame;
-    labels go back through ``createDataFrame`` with an EXPLICIT schema
-    (an empty pandas frame would otherwise raise
-    CANNOT_INFER_EMPTY_SCHEMA — zero near-dup pairs is a perfectly
-    normal corpus)."""
-    import pandas as pd
+    The labels go back as an Arrow table with an EXPLICIT schema, so
+    the frame is a LocalRelation the JVM scans itself, also when it is
+    empty (zero near-dup pairs is a perfectly normal corpus): an empty
+    row list or pandas frame would become a Python RDD whose scan
+    launches Python worker tasks.  The labels are on the driver by
+    construction (≤ ``driver_threshold`` edges), so they get one
+    partition per ``_LABELS_PER_PARTITION`` labels, not
+    ``defaultParallelism`` slices: a small table is one file when
+    written."""
+    import pyarrow as pa
 
     node_list = set(edge_pdf["a"].tolist()) | set(edge_pdf["b"].tolist())
     if nodes is not None:
         node_list |= {r["key"] for r in nodes.select("key").collect()}
-    if not node_list:
-        return spark.createDataFrame([], _LABEL_SCHEMA)
 
     parent: dict[str, str] = {n: n for n in node_list}
 
@@ -195,8 +200,10 @@ def _components_driver(
         canon = min(members)
         keys.extend(members)
         canons.extend([canon] * len(members))
-    out = pd.DataFrame({"key": keys, "canon_id": canons})
-    return spark.createDataFrame(out, schema=_LABEL_SCHEMA)
+    out = pa.table({"key": pa.array(keys, pa.string()),
+                    "canon_id": pa.array(canons, pa.string())})
+    n_parts = max(1, -(-len(keys) // _LABELS_PER_PARTITION))
+    return spark.createDataFrame(out, schema=_LABEL_SCHEMA).coalesce(n_parts)
 
 
 def incremental_components(

@@ -168,20 +168,18 @@ def run_pipeline(
     repartition_input: bool = True,
 ) -> PipelineResult:
     if repartition_input:
-        # Salted repartition on (url_host, xxhash64(url) % salt): spreads
-        # hot hosts AND guarantees the map stages actually fan out — a
-        # small parquet input may arrive as one partition, which would
-        # serialize the Arrow UDF stages regardless of cluster size.
-        # 1× parallelism: chained Arrow stages pay a fixed per-task
-        # setup cost, so over-partitioning is expensive (4× cores
-        # measured 3× slower end-to-end at small inputs); on heavily
-        # skewed REAL inputs where per-task runtimes vary, raise the
-        # multiplier for packing slack — AQE still splits stragglers.
+        # Salted repartition on (url_host, xxhash64(url) % salt) spreads
+        # hot hosts.  No fixed partition count: AQE coalesces the shuffle
+        # to its bytes (session.py: parallelism first, 1 MB minimum
+        # partition), so a sub-MB input runs each Arrow UDF stage as ONE
+        # Python task — a task pays a fixed worker cost whatever its row
+        # count.  Up to defaultParallelism MB that leaves fewer tasks
+        # than cores (at most about one per MB), trading up to a few
+        # seconds of wall for the tasks not launched; above it, at least
+        # defaultParallelism.
         from .runtime.skew import salted_repartition
 
-        pages = salted_repartition(
-            pages, n_partitions=spark.sparkContext.defaultParallelism
-        )
+        pages = salted_repartition(pages)
 
     params = StageParams(gazetteer_df(spark), chunk_size, overlap,
                          neardup_threshold)

@@ -14,6 +14,9 @@ task's index in each ``part-NNNNN`` file name.  A partitioned write
 (triples by ``pred``, the ANN table by bucket/list) is rebalanced on its
 partition columns first, so each partition directory gets a few files
 rather than one per upstream task, and AQE still splits a hot one.
+A stage is read with the schema Spark stored in its files' footers
+(:func:`read_parquet`), so a read plans without the one-task Spark job
+that parquet schema inference runs.
 
 The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
 :class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
@@ -43,6 +46,7 @@ import time
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Per write, not session-wide: the pages input and every other parquet
 # write keep their codec.  Snappy barely compresses this text-heavy KB.
@@ -64,6 +68,26 @@ def _part_files(path: str) -> set[str]:
 
 def _footer_rows(path: str) -> int:
     return pq.read_metadata(path).num_rows
+
+
+# Spark stores the schema of the rows it writes in each file's footer
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the one-task Spark job its
+    schema inference runs: the schema comes from the footer of one data
+    file, read in-process, as inference itself reads one.  Partition
+    columns are still discovered from the directory names.  A table no
+    Spark wrote carries no such schema and is inferred as usual."""
+    schema = None
+    files = sorted(_part_files(path))
+    if files:
+        meta = pq.read_metadata(files[0]).metadata or {}
+        if _SPARK_SCHEMA in meta:
+            schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def _lineage(files: set[str]) -> list[dict]:
@@ -114,7 +138,7 @@ class ParquetFormat:
         return None, _lineage(_part_files(path) - before)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self._path(stage))
+        return read_parquet(spark, self._path(stage))
 
     def count(self, spark: SparkSession, stage: str) -> int:
         return sum(_footer_rows(p) for p in _part_files(self._path(stage)))

@@ -6,7 +6,11 @@ straggler partitions.  ``salted_repartition`` spreads each host across
 ``salt`` buckets: partition key = (host, xxhash64(url) % salt).  Heavy
 map stages (the Arrow cleaner, the chunker) then see balanced
 partitions; joins against per-host aggregates use AQE skew-join
-(enabled in session.py) for the residual imbalance.
+(enabled in session.py) for the residual imbalance.  Without
+``n_partitions`` the partition count follows the data: AQE coalesces
+the shuffle by bytes (session.py), so a sub-MB input stays one
+partition, one of up to ``defaultParallelism`` MB gets at most about
+one partition per MB, and a larger one at least ``defaultParallelism``.
 """
 
 from __future__ import annotations

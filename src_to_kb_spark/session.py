@@ -7,8 +7,13 @@ here is chosen for the 100 TB case and merely *also* works locally:
   join against the entity dictionary is skewed by construction.
 * Arrow on — all per-row logic rides pandas/Arrow UDF batches; there is
   no row-at-a-time Python anywhere in the engine.
-* shuffle partitions sized to cores locally; on a real cluster this is
-  overridden by AQE coalescing from a high initial partition count.
+* shuffle partitions start at ``max(4 × cores, 32)``; AQE coalesces
+  each shuffle to its bytes, aiming at ``total / defaultParallelism``
+  per partition clamped to [1 MB, 8 MB].  A sub-MB shuffle becomes one
+  partition, so a small input runs its Python UDF stages as one task
+  each instead of paying a worker task per core; up to
+  ``defaultParallelism`` MB a shuffle gets at most about one partition
+  per MB.
 """
 
 from __future__ import annotations

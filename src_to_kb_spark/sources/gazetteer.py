@@ -15,6 +15,7 @@ rows) — it is always the broadcast side.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 # Vocabulary of the synthetic web-page corpus (observed in
@@ -51,7 +52,19 @@ GAZ_SCHEMA = (
 
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GAZ_ROWS, GAZ_SCHEMA)
+    # an Arrow table, not a row list: a LocalRelation the JVM collects
+    # and broadcasts itself whatever the session's Arrow conf, where a
+    # row list becomes a Python RDD whose every scan launches Python
+    # worker tasks
+    eid, canon, alias, norm, prior = zip(*GAZ_ROWS)
+    table = pa.table({
+        "entity_id": pa.array(eid, pa.int64()),
+        "canonical_name": pa.array(canon, pa.string()),
+        "alias": pa.array(alias, pa.string()),
+        "norm": pa.array(norm, pa.string()),
+        "prior": pa.array(prior, pa.float64()),
+    })
+    return spark.createDataFrame(table, GAZ_SCHEMA)
 
 
 def oracle_gazetteer_cte() -> str:

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime.checkpoint import read_parquet
+
 # Deterministic pseudo-extension per doc, so the reference's
 # extension-driven operators (detectLanguage kb-generator.js:551-585,
 # getFileType :587-601, isSupportedFile :180-183) have real inputs.
@@ -154,7 +156,7 @@ def load_pages(spark: SparkSession, sf_dir: str, keep_keys: bool = True) -> Data
             "load_pages(..., keep_keys=False) as the KG pipeline does; "
             "keyed queries are driver-testdata-only"
         )
-    pages = spark.read.parquet(sf_dir)
+    pages = read_parquet(spark, sf_dir)
     missing = [c for c in PAGES_COLUMNS if c not in pages.columns]
     if missing:
         raise ValueError(

@@ -3,7 +3,8 @@
 The per-partition lineage in ``_metrics_<stage>.json`` and the job's
 ``summary.json`` counts are read from the written files, so they must
 match what Spark reads back, describe only the files a write added, and
-cost no Spark job.
+cost no Spark job.  Reading a stage back takes its schema from the
+footers too, so it costs no Spark job either.
 """
 
 from __future__ import annotations
@@ -11,12 +12,18 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from jobs.run_kg_pipeline import main as job_main
 from src_to_kb_spark.operators.extract import extract_pages
-from src_to_kb_spark.runtime.checkpoint import read_stage, write_stage
-from src_to_kb_spark.sources.pages import synthetic_pages
+from src_to_kb_spark.runtime.checkpoint import (
+    read_parquet,
+    read_stage,
+    write_stage,
+)
+from src_to_kb_spark.sources.pages import PAGES_COLUMNS, load_pages, synthetic_pages
 
 from .conftest import SF_SMOKE
 
@@ -141,3 +148,48 @@ def test_job_summary_counts_match_tables_after_resume(spark, tmp_path):
             n: summary[n] for n in STAGES}
     for stage in STAGES:
         assert summary[stage] == read_stage(spark, out, stage).count(), stage
+
+
+def test_read_stage_costs_no_spark_job(spark, tmp_path):
+    """Schema inference runs a one-task Spark job per read; a stage read
+    takes the schema from its footers instead and gets the same frame,
+    the partitioned triples table's discovered ``pred`` column too."""
+    out = str(tmp_path / "kb")
+    job_main(["--input", SF_SMOKE, "--output", out])
+    for stage in STAGES:
+        path = os.path.join(out, stage)
+        assert _jobs_in_group(spark, f"infer-{stage}",
+                              lambda: spark.read.parquet(path)) >= 1, stage
+        read = []
+        assert _jobs_in_group(
+            spark, f"read-{stage}",
+            lambda: read.append(read_stage(spark, out, stage)),
+        ) == 0, stage
+        inferred = spark.read.parquet(path)
+        assert read[0].schema == inferred.schema, stage
+        assert read[0].exceptAll(inferred).count() == 0, stage
+        assert inferred.exceptAll(read[0]).count() == 0, stage
+
+
+def test_real_pages_table_loads_without_spark_job(spark, tmp_path):
+    path = str(tmp_path / "pages")
+    synthetic_pages(spark, n=20).write.parquet(path)
+    pages = []
+    assert _jobs_in_group(
+        spark, "load-pages",
+        lambda: pages.append(load_pages(spark, path, keep_keys=False)),
+    ) == 0
+    assert tuple(pages[0].columns) == PAGES_COLUMNS
+    assert pages[0].count() == 20
+
+
+def test_read_parquet_infers_a_table_spark_did_not_write(spark, tmp_path):
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(
+        pa.table({"k": pa.array([2, 1], pa.int32()), "v": ["b", None]}),
+        path / "part-00000-a.parquet",
+    )
+    df = read_parquet(spark, str(path))
+    assert df.schema == spark.read.parquet(str(path)).schema
+    assert [tuple(r) for r in df.orderBy("k").collect()] == [(1, None), (2, "b")]
