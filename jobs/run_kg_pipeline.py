@@ -30,7 +30,12 @@ committed bands table, components update from the committed labeling,
 and only triples recompute outright (a union of per-stage parts,
 rebalanced on ``pred`` before its partitioned write).  Parquet stage
 tables are zstd-compressed, and ``summary.json`` counts their rows from
-the parquet footers, so counting launches no Spark job.
+the parquet footers, so counting launches no Spark job.  A stage table
+stores only the columns it cannot recompute from the same row: the
+document and chunk ids and linked's ``score`` are derived when a stage
+is read (``runtime/checkpoint.py`` ``DERIVED``), so every stage sees
+the columns its operator produced, and a KB whose tables store them
+resumes as is.
 ``--table-format iceberg`` routes the same stage
 I/O through Iceberg tables (``runtime/checkpoint.py``
 :class:`IcebergFormat`): writes become catalog snapshots and each

@@ -10,7 +10,10 @@ batched, no per-row Python round-trips.
 
 Map-only, shuffle-free; chunk ids are derived deterministically from
 the parent ``doc_uid`` (P7, kb-generator.js:381) so the stage is
-idempotent and resume-safe.
+idempotent and resume-safe.  Both ids are pure functions of ``url`` and
+``chunk_index``, so the committed ``chunks`` table stores neither: the
+checkpoint layer drops them on write and derives them again on read
+(``runtime/checkpoint.py`` ``DERIVED``).
 """
 
 from __future__ import annotations
@@ -40,6 +43,13 @@ def _make_chunk_udf(chunk_size: int, overlap: int):
     return chunk_udf
 
 
+def chunk_id(doc_uid: str, chunk_index: str) -> str:
+    """P7 — ``${documentId}_chunk_${index}`` (kb-generator.js:381), as a
+    SQL expression over the SQL expressions ``doc_uid`` and
+    ``chunk_index``."""
+    return f"concat({doc_uid}, '_chunk_', cast({chunk_index} as string))"
+
+
 def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 1000,
@@ -62,10 +72,7 @@ def chunk_documents(
     return exploded.select(
         "doc_uid",
         *carry_cols,
-        # P7 — `${documentId}_chunk_${index}` (kb-generator.js:381)
-        F.concat(
-            F.col("doc_uid"), F.lit("_chunk_"), F.col("ch.index").cast("string")
-        ).alias("chunk_id"),
+        F.expr(chunk_id("doc_uid", "ch.index")).alias("chunk_id"),
         F.col("ch.index").alias("chunk_index"),
         F.col("ch.content").alias("content"),
         F.col("ch.start_line").alias("start_line"),

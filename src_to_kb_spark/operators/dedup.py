@@ -27,7 +27,7 @@ is plain C.)  The only shuffles are the band self-join (bounded bucket
 sizes — banding exists precisely to keep buckets tiny at 100 TB,
 versus the quadratic brute-force join) and the Jaccard verification,
 which joins the (tiny) candidate pair set back to the per-key shingle
-arrays and counts intersections vectorized in pandas.
+arrays and counts intersections in the JVM (``array_intersect``).
 """
 
 from __future__ import annotations
@@ -148,7 +148,8 @@ def make_bands_udf():
 def shingle_hashes_py(text: str) -> list[int]:
     """Sorted distinct signed-int64 md5-prefix hashes of the 3-token
     shingles.  ~3× narrower than the string arrays through shuffle and
-    Arrow, and intersections vectorize with numpy.  The DuckDB oracle
+    Arrow, and distinct, so ``size(array_intersect)`` counts an
+    intersection exactly.  The DuckDB oracle
     hashes shingles with the SAME md5 prefix, so even a hash collision
     (≈1e-6 per corpus) collapses identically in both engines."""
     import hashlib as _hl
@@ -204,26 +205,6 @@ def shingle_hash_values(sh: DataFrame) -> DataFrame:
             "cast(conv(substring(md5(shingle), 1, 16), 16, -10) as long)"
         ).alias("hv"),
     )
-
-
-def make_intersection_udf():
-    """pandas UDF: (sh_a, sh_b) -> |A ∩ B| over sorted int64 hash
-    arrays — numpy intersect1d with assume_unique (sets are distinct
-    by construction)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def n_common_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                len(np.intersect1d(x, y, assume_unique=True))
-                for x, y in zip(a, b)
-            ],
-            dtype="int32",
-        )
-
-    return n_common_udf
 
 
 def band_signature_rows(
@@ -304,13 +285,13 @@ def verify_candidate_pairs(
     (key_a, key_b, jaccard ≥ threshold), jaccard rounded 6 dp.
 
     The shingle-hash UDF runs ONLY over candidate-pair members (a
-    left-semi join keeps it a tiny fraction of the corpus);
-    intersections count vectorized in pandas over sorted int64 hashes;
-    division + rounding stay in Catalyst so cross-engine rounding
+    left-semi join keeps it a tiny fraction of the corpus) and is the
+    only Python in the plan: both hash arrays are distinct, so
+    ``size(array_intersect)`` counts the intersection exactly in the
+    JVM; division + rounding stay in Catalyst so cross-engine rounding
     semantics (HALF_UP) match the DuckDB oracle."""
     cands = cands.localCheckpoint(eager=False)
     shh_udf = make_shingle_hash_udf()
-    n_common_udf = make_intersection_udf()
     cand_keys = (
         cands.select(F.col("key_a").alias("key"))
         .union(cands.select(F.col("key_b").alias("key")))
@@ -337,7 +318,7 @@ def verify_candidate_pairs(
     return (
         cands.join(sets_a, "key_a")
         .join(sets_b, "key_b")
-        .withColumn("n_common", n_common_udf(F.col("sh_a"), F.col("sh_b")))
+        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
             F.round(

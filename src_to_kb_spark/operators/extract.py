@@ -11,6 +11,10 @@ Execution shape (100 TB view):
   must match JS semantics exactly, see core/textproc.py);
 * everything else (ids, checksums, line counts, classification) is
   whole-stage-codegen'd JVM expressions;
+* ``doc_uid`` is a pure function of ``url`` (:func:`doc_uid`), so the
+  committed ``documents`` table does not store it: the checkpoint layer
+  drops it on write and derives it again on read
+  (``runtime/checkpoint.py`` ``DERIVED``);
 * map-only: no shuffle — the stage preserves the input partitioning,
   so at scale it pipelines directly off the Parquet/Iceberg scan with
   filters and column pruning pushed down.
@@ -41,6 +45,13 @@ def _make_clean_udf(include_comments: bool):
     return clean_udf
 
 
+def doc_uid(url: str) -> str:
+    """P1 — deterministic replacement for the reference's
+    ``doc_${Date.now()}_${rand}`` (kb-generator.js:543-545): the SQL
+    expression ``'doc_' || sha2(url, 256)`` over the column ``url``."""
+    return f"concat('doc_', sha2({url}, 256))"
+
+
 # S4 size gate (kb-generator.js:162-164) — module constant so resume's
 # new-page detection can apply the SAME gate (a gated page must not
 # look like a forever-new delta; see jobs/run_kg_pipeline.py)
@@ -58,9 +69,8 @@ def extract_pages(
     size, text, checksum, lines) — ``text`` is the cleaned text whose
     bytes must match the reference extractor per url.
 
-    * doc_uid — deterministic replacement for the reference's
-      ``doc_${Date.now()}_${rand}`` (kb-generator.js:543-545, P1):
-      ``'doc_' || sha2(url, 256)``.
+    * doc_uid — :func:`doc_uid` of the url; derived, not stored, in
+      the committed table.
     * size gate — S4 (kb-generator.js:162-164) as a pushed-down filter.
     """
     clean_udf = _make_clean_udf(include_comments)
@@ -69,7 +79,7 @@ def extract_pages(
         pages.filter(F.length("html") <= max_file_size)
         .withColumn("text", clean_udf(F.col("html")))
         .select(
-            F.concat(F.lit("doc_"), F.sha2(F.col("url"), 256)).alias("doc_uid"),
+            F.expr(doc_uid("url")).alias("doc_uid"),
             "url",
             "warc_ts",
             "lang",

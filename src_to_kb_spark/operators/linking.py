@@ -12,12 +12,25 @@ side hot, but because it is broadcast there is no shuffle by alias at
 all — the only exchange is the window's (key, norm) partitioning,
 whose keys include the document and are therefore well-spread.  AQE
 skew-join handles the residual case where one host dominates.
+
+``score`` is a pure function of its row (:func:`link_score`), so the
+committed ``linked`` table does not store it: the checkpoint layer
+drops it on write and derives it again on read
+(``runtime/checkpoint.py`` ``DERIVED``).  The gazetteer columns
+(entity, name, prior) are stored, so an old KB does not change when
+the gazetteer does.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def link_score(prior: str, n_mentions: str) -> str:
+    """A candidate's score for a mention, ``prior × n_mentions``, as a
+    SQL expression over the columns ``prior`` and ``n_mentions``."""
+    return f"{prior} * {n_mentions}"
 
 
 def link_mentions(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
@@ -44,7 +57,7 @@ def link_mentions(mentions: DataFrame, gazetteer: DataFrame) -> DataFrame:
     )
     return (
         mentions.join(F.broadcast(best), "norm")
-        .withColumn("score", F.col("prior") * F.col("n_mentions"))
+        .withColumn("score", F.expr(link_score("prior", "n_mentions")))
         .select(
             "key", "norm", "n_mentions", "entity_id",
             "canonical_name", "prior", "score",
@@ -59,7 +72,7 @@ def link_mentions_windowed(
     over the joined candidate set — needed only when the score does
     not factorize into mention × candidate terms."""
     cand = mentions.join(F.broadcast(gazetteer), "norm").withColumn(
-        "score", F.col("prior") * F.col("n_mentions")
+        "score", F.expr(link_score("prior", "n_mentions"))
     )
     w = Window.partitionBy("key", "norm").orderBy(
         F.desc("score"), F.asc("entity_id")

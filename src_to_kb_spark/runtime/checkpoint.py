@@ -18,6 +18,23 @@ A stage is read with the schema Spark stored in its files' footers
 (:func:`read_parquet`), so a read plans without the one-task Spark job
 that parquet schema inference runs.
 
+A stage table stores only the columns it cannot recompute from the
+same row.  :data:`DERIVED` declares, per stage, the columns that are
+pure functions of others — ``doc_uid`` (``'doc_' || sha2(url, 256)``)
+in ``documents`` and ``chunks``, ``chunk_id`` (``doc_uid || '_chunk_'
+|| chunk_index``) in ``chunks`` and ``score`` (``prior × n_mentions``)
+in ``linked`` — with the operator expression that builds each and the
+column it precedes.  :func:`write_stage` drops them (Spark then prunes
+them from the write plan, so e.g. the extract write never evaluates
+``sha2(url)``), and :func:`read_stage` drops any stored copy and
+derives each again at its declared position, so a reader sees the
+columns the operator produced.  A KB written before this stored the
+ids; it reads back the same, as does a table mixing such files with
+appended ones, whichever file's footer supplies the schema.  Every
+other column is stored: ``documents.checksum`` and ``lines`` would
+need a scan of the text, and the gazetteer columns of ``linked`` would
+tie an old KB to the current gazetteer.
+
 The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
 :class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
 default writes bare parquet directories under ``out_dir``.  On an
@@ -42,11 +59,16 @@ import json
 import os
 import re
 import time
+from dataclasses import dataclass
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..operators.chunker import chunk_id
+from ..operators.extract import doc_uid
+from ..operators.linking import link_score
 
 # Per write, not session-wide: the pages input and every other parquet
 # write keep their codec.  Snappy barely compresses this text-heavy KB.
@@ -54,6 +76,72 @@ CODEC = "zstd"
 
 # Spark names each output file part-<task index>-<job uuid>…
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+@dataclass(frozen=True)
+class Derived:
+    """A stage column that is a pure function of the stored columns
+    ``inputs`` of its row: not stored, derived on read as the SQL
+    expression ``expr`` and placed before column ``before`` (last when
+    None)."""
+
+    name: str
+    inputs: tuple[str, ...]
+    expr: str
+    before: str | None = None
+
+
+_DOC_UID = Derived("doc_uid", ("url",), doc_uid("url"), before="url")
+
+DERIVED: dict[str, tuple[Derived, ...]] = {
+    "documents": (_DOC_UID,),
+    "chunks": (
+        _DOC_UID,
+        Derived("chunk_id", ("url", "chunk_index"),
+                chunk_id(doc_uid("url"), "chunk_index"),
+                before="chunk_index"),
+    ),
+    "linked": (
+        Derived("score", ("prior", "n_mentions"),
+                link_score("prior", "n_mentions")),
+    ),
+}
+
+
+def _stored(df: DataFrame, stage: str) -> DataFrame:
+    """``df`` without its derived columns.  Raises when a derived column
+    could not be derived back from what is stored (e.g. ``chunk_id``
+    without ``url``): dropping it would lose the ids."""
+    derived = [d for d in DERIVED.get(stage, ()) if d.name in df.columns]
+    stored = set(df.columns) - {d.name for d in derived}
+    for d in derived:
+        missing = sorted(set(d.inputs) - stored)
+        if missing:
+            raise ValueError(
+                f"stage {stage!r}: column {d.name!r} is derived on read "
+                f"from {list(d.inputs)}, but {missing} would not be stored"
+            )
+    return df.drop(*(d.name for d in derived)) if derived else df
+
+
+def _with_derived(df: DataFrame, stage: str) -> DataFrame:
+    """``df`` with each derived column of ``stage`` whose inputs it has
+    computed again (replacing any stored copy) at its declared place.
+    One ``selectExpr`` of SQL strings: every Column built on the Python
+    side would cost a round trip to the JVM."""
+    derived = [d for d in DERIVED.get(stage, ())
+               if set(d.inputs) <= set(df.columns)]
+    if not derived:
+        return df
+    names = {d.name for d in derived}
+    kept = [c for c in df.columns if c not in names]
+    exprs = []
+    for c in kept + [None]:
+        exprs += [f"{d.expr} AS `{d.name}`" for d in derived
+                  if (d.before if d.before in kept else None) == c]
+        if c is not None:
+            exprs.append(f"`{c}`")
+    return df.selectExpr(*exprs)
 
 
 def _part_files(path: str) -> set[str]:
@@ -249,11 +337,13 @@ def write_stage(
     lineage of the increment, not of the cumulative table).  A parquet
     stage takes them from the written files' footers, so counting adds
     no Spark job; ``partition_id`` is the writing task's index.
+
+    The stage's :data:`DERIVED` columns are not written.
     """
     fmt = fmt or ParquetFormat(out_dir)
     t0 = time.time()
     commit_ref, parts = fmt.write(
-        df, stage, mode=mode, partition_by=partition_by
+        _stored(df, stage), stage, mode=mode, partition_by=partition_by
     )
     metrics = {
         "stage": stage,
@@ -280,7 +370,9 @@ def read_stage(
     spark: SparkSession, out_dir: str, stage: str,
     fmt: ParquetFormat | IcebergFormat | None = None,
 ) -> DataFrame:
-    return (fmt or ParquetFormat(out_dir)).read(spark, stage)
+    """A committed stage table, its :data:`DERIVED` columns included."""
+    return _with_derived((fmt or ParquetFormat(out_dir)).read(spark, stage),
+                         stage)
 
 
 def resume_delta(

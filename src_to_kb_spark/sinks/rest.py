@@ -45,17 +45,6 @@ def build_payload(row: dict) -> dict:
     }
 
 
-def build_embeddings_payload(row: dict) -> dict:
-    """P9 — chunks+embeddings payload (external-server-config.js:97-151)."""
-    return {
-        "documentId": row["doc_uid"],
-        "chunkId": row["chunk_id"],
-        "index": row.get("chunk_index"),
-        "content": row.get("content"),
-        "embedding": row.get("embedding"),
-    }
-
-
 def send_rows(
     rows: list[dict],
     sender: Callable[[dict], Any],

@@ -4,7 +4,9 @@ The per-partition lineage in ``_metrics_<stage>.json`` and the job's
 ``summary.json`` counts are read from the written files, so they must
 match what Spark reads back, describe only the files a write added, and
 cost no Spark job.  Reading a stage back takes its schema from the
-footers too, so it costs no Spark job either.
+footers too, so it costs no Spark job either.  The ids and link scores
+that are pure functions of their row are not stored; a read derives
+them again, from tables written with or without them.
 """
 
 from __future__ import annotations
@@ -14,15 +16,22 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from jobs.run_kg_pipeline import main as job_main
+from src_to_kb_spark.operators.chunker import chunk_documents
 from src_to_kb_spark.operators.extract import extract_pages
+from src_to_kb_spark.operators.linking import link_mentions
+from src_to_kb_spark.operators.mentions import detect_mentions
+from src_to_kb_spark.runtime import checkpoint
 from src_to_kb_spark.runtime.checkpoint import (
+    is_committed,
     read_parquet,
     read_stage,
     write_stage,
 )
+from src_to_kb_spark.sources.gazetteer import gazetteer_df
 from src_to_kb_spark.sources.pages import PAGES_COLUMNS, load_pages, synthetic_pages
 
 from .conftest import SF_SMOKE
@@ -46,6 +55,51 @@ def _jobs_in_group(spark, group: str, action) -> int:
 def _data_files(path: str) -> list[str]:
     return [f for _, _, files in os.walk(path) for f in files
             if f.startswith("part-")]
+
+
+def _derived(stage: str) -> dict:
+    """The columns a stage read derives, spelled out independently of
+    the operators: name → expression over the stored columns."""
+    doc_uid = F.concat(F.lit("doc_"), F.sha2(F.col("url"), 256))
+    return {
+        "documents": {"doc_uid": doc_uid},
+        "chunks": {
+            "doc_uid": doc_uid,
+            "chunk_id": F.concat(doc_uid, F.lit("_chunk_"),
+                                 F.col("chunk_index").cast("string")),
+        },
+        "linked": {"score": F.col("prior") * F.col("n_mentions")},
+    }.get(stage, {})
+
+
+def _footer_columns(path: str) -> set[str]:
+    """Column names in the footer of every data file under ``path``."""
+    return {
+        n
+        for d, _, files in os.walk(path)
+        for f in files if f.startswith("part-")
+        for n in pq.read_schema(os.path.join(d, f)).names
+    }
+
+
+def _same_frame(got, want) -> None:
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+@pytest.fixture(scope="module")
+def stage_frames(spark):
+    """In-memory documents, chunks and linked frames of 30 pages."""
+    docs = extract_pages(synthetic_pages(spark, n=30)).localCheckpoint()
+    gaz = gazetteer_df(spark)
+    return {
+        "documents": docs,
+        "chunks": chunk_documents(docs).localCheckpoint(),
+        "linked": link_mentions(detect_mentions(docs, gaz),
+                                gaz).localCheckpoint(),
+    }
 
 
 def test_write_stage_lineage_costs_no_spark_job(spark, tmp_path):
@@ -166,9 +220,14 @@ def test_read_stage_costs_no_spark_job(spark, tmp_path):
             lambda: read.append(read_stage(spark, out, stage)),
         ) == 0, stage
         inferred = spark.read.parquet(path)
-        assert read[0].schema == inferred.schema, stage
-        assert read[0].exceptAll(inferred).count() == 0, stage
-        assert inferred.exceptAll(read[0]).count() == 0, stage
+        stored = read[0].select(*inferred.columns)
+        assert stored.schema == inferred.schema, stage
+        assert stored.exceptAll(inferred).count() == 0, stage
+        assert inferred.exceptAll(stored).count() == 0, stage
+        for name, expr in _derived(stage).items():
+            assert name in read[0].columns, (stage, name)
+            assert read[0].filter(
+                ~F.col(name).eqNullSafe(expr)).count() == 0, (stage, name)
 
 
 def test_real_pages_table_loads_without_spark_job(spark, tmp_path):
@@ -193,3 +252,90 @@ def test_read_parquet_infers_a_table_spark_did_not_write(spark, tmp_path):
     df = read_parquet(spark, str(path))
     assert df.schema == spark.read.parquet(str(path)).schema
     assert [tuple(r) for r in df.orderBy("k").collect()] == [(1, None), (2, "b")]
+
+
+def test_derived_columns_are_not_stored_but_read_back(spark, tmp_path,
+                                                      stage_frames):
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    for stage, df in stage_frames.items():
+        write_stage(df, out, stage)
+        stored = _footer_columns(os.path.join(out, stage))
+        assert stored and not stored & set(_derived(stage)), stage
+        assert stored == set(df.columns) - set(_derived(stage)), stage
+        _same_frame(read_stage(spark, out, stage), df)
+
+
+def _rename_parts(path: str, prefix: str) -> None:
+    """Rename the data files under ``path`` to ``prefix<i>-…``, which
+    decides where they sort among the table's files."""
+    for i, f in enumerate(sorted(_data_files(path))):
+        os.rename(os.path.join(path, f),
+                  os.path.join(path, f"{prefix}{i}-{f}"))
+
+
+@pytest.mark.parametrize("parent_first", [True, False])
+def test_stored_ids_plus_append_read_back_derived(spark, tmp_path,
+                                                  stage_frames, parent_first):
+    """A table written with its ids stored (a KB from before they were
+    derived) plus an appended delta without them reads back with the
+    right ids on every row, whichever file's footer gives the schema."""
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    for stage, df in stage_frames.items():
+        path = os.path.join(out, stage)
+        old = F.crc32(df.columns[0] if stage == "linked" else "url") % 3 != 0
+        df.filter(old).write.parquet(path)
+        # the old files sort before ("part-0000-" < "part-00000-") or
+        # after every file the append writes
+        _rename_parts(path, "part-0000-" if parent_first else "part-99999-")
+        write_stage(df.filter(~old), out, stage, mode="append")
+        first = os.path.join(path, sorted(_data_files(path))[0])
+        ids_in_first = set(_derived(stage)) <= set(pq.read_schema(first).names)
+        assert ids_in_first == parent_first, stage
+        back = read_stage(spark, out, stage)
+        _same_frame(back, df)
+        for name, expr in _derived(stage).items():
+            assert back.filter(~F.col(name).eqNullSafe(expr)).count() == 0
+
+
+def test_write_stage_raises_on_ids_it_could_not_derive(spark, tmp_path,
+                                                       stage_frames):
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    chunks = stage_frames["chunks"]
+    with pytest.raises(ValueError, match="chunk_id"):
+        write_stage(chunks.drop("url", "doc_uid"), out, "chunks")
+    with pytest.raises(ValueError, match="url"):
+        write_stage(chunks.drop("url"), out, "chunks")
+    assert not is_committed(out, "chunks")
+    assert not os.path.exists(os.path.join(out, "chunks"))
+
+
+def _rows(spark, kb: str, stage: str) -> set:
+    return {tuple(r) for r in read_stage(spark, kb, stage).collect()}
+
+
+def test_resume_over_stored_ids_kb_matches_fresh_build(spark, tmp_path,
+                                                       monkeypatch):
+    """A KB whose tables store their ids (as written before ids were
+    derived) resumes into the same KB as a fresh build."""
+    src = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    base, grown = str(tmp_path / "base"), str(tmp_path / "grown")
+    src.filter("doc_id < 150").write.parquet(f"{base}/documents.parquet")
+    src.filter("doc_id < 200").write.parquet(f"{grown}/documents.parquet")
+    out, ref = str(tmp_path / "kb"), str(tmp_path / "ref")
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "DERIVED", {})
+        job_main(["--input", base, "--output", out])
+    for stage in ("documents", "chunks", "linked"):
+        assert set(_derived(stage)) <= _footer_columns(
+            os.path.join(out, stage)), stage
+
+    job_main(["--input", grown, "--output", out])
+    with open(os.path.join(out, "_metrics_documents.json")) as f:
+        assert json.load(f)["mode"] == "append"
+    job_main(["--input", grown, "--output", ref])
+    for stage in ("triples", "components", "documents", "chunks", "linked"):
+        assert _rows(spark, out, stage) == _rows(spark, ref, stage), stage

@@ -143,6 +143,45 @@ def test_band_signature_rows_single_arrow_pass(spark):
     assert len(evals) == 1, plan
 
 
+def test_verify_runs_only_the_shingle_hash_udf(spark, monkeypatch):
+    """Verify's only Python is the shingle-hash UDF over the candidate
+    members; the intersection is counted in the JVM, not by a pandas UDF
+    the optimizer evaluates in both the filter and the projection.  The
+    frames verify checkpoints are recorded so their plans count too."""
+    from src_to_kb_spark.operators.dedup import (
+        shingle_hashes_py,
+        verify_candidate_pairs,
+    )
+
+    texts = {"u1": "a b c d e f g", "u2": "a b c d e f h", "u3": "x y z w"}
+    docs = spark.createDataFrame(list(texts.items()), "url string, text string")
+    cands = spark.createDataFrame([("u1", "u2"), ("u1", "u3")],
+                                  "key_a string, key_b string")
+    checkpointed = []
+    cls = type(docs)
+    orig = cls.localCheckpoint
+
+    def recording(self, *a, **kw):
+        checkpointed.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    pairs = verify_candidate_pairs(docs, cands, threshold=0.0)
+    # a lazily checkpointed frame's plan is already final: skip its
+    # initial plan, which repeats the same nodes
+    evals = [ln for df in (pairs, *checkpointed)
+             for ln in _plan(df).split("== Initial Plan ==")[0].splitlines()
+             if "ArrowEvalPython" in ln]
+    assert len(evals) == 1 and "shh_udf" in evals[0], evals
+
+    def jaccard(a, b):
+        x, y = set(shingle_hashes_py(texts[a])), set(shingle_hashes_py(texts[b]))
+        return round(len(x & y) / len(x | y), 6)
+
+    assert sorted(tuple(r) for r in pairs.collect()) == [
+        ("u1", "u2", jaccard("u1", "u2")), ("u1", "u3", 0.0)]
+
+
 def test_embedding_neardup_registered_is_not_quadratic(spark):
     """The REGISTERED embedding near-dup must be the bucketed LSH
     equi-join — no cartesian/nested-loop anywhere in the plan

@@ -7,11 +7,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from jobs.run_kg_pipeline import main as job_main
 from src_to_kb_spark.operators.chunker import chunk_documents
 from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.sinks.rest import AuthError
-from src_to_kb_spark.sinks.upload import upload
-from src_to_kb_spark.sources.pages import synthetic_pages
+from src_to_kb_spark.sinks.upload import upload, upload_kb
+from src_to_kb_spark.sources.pages import load_pages, synthetic_pages
+
+from .conftest import SF_SMOKE
 
 
 class Collector:
@@ -216,3 +219,29 @@ def test_upload_duplicate_embedding_rows_collapse(spark, kb, tmp_path, capsys):
         # exactly one entry per chunk, carrying the max survivor
         assert len(p["chunks"]) == n_chunks[p["id"]]
         assert all(c["embedding"] == [0.1, 0.2] for c in p["chunks"])
+
+
+def test_upload_kb_of_job_built_kb_matches_in_memory(spark, tmp_path):
+    """``upload_kb`` over the job's committed tables, whose document and
+    chunk ids are derived on read, sends the payloads ``upload`` sends
+    over the in-memory extract and chunk frames: raw content (document
+    ids) and chunks-only (chunk ids too)."""
+    import os
+
+    kb = str(tmp_path / "kb")
+    job_main(["--input", SF_SMOKE, "--output", kb])
+    docs = extract_pages(load_pages(spark, SF_SMOKE))
+    chunks = chunk_documents(docs)
+    for name, mode in (("raw", {}), ("chunks", {"send_chunks": True})):
+        got, want = (str(tmp_path / f"{name}_{side}")
+                     for side in ("kb", "memory"))
+        os.makedirs(got)
+        os.makedirs(want)
+        upload_kb(spark, kb, lambda: Collector(got), validate=False,
+                  retry_delay=0.0, **mode)
+        upload(spark, docs, chunks, None, lambda: Collector(want),
+               validate=False, retry_delay=0.0, **mode)
+        got, want = (sorted(Collector.read(d), key=lambda p: p["id"])
+                     for d in (got, want))
+        assert len(got) == docs.count(), name
+        assert got == want, name
