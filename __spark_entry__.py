@@ -657,7 +657,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_upload_sendable(spark, sf):
         # the uploader's SENDABLE-SET decision (judge r3 #8) as an
         # oracle row: per document and per upload mode, how many chunks
-        # it would ship and whether upload() skips it — chunks_only
+        # it would ship and whether the uploader skips it — chunks_only
         # skips docs with no chunks (upload.js:169-173),
         # chunks_with_embeddings additionally skips docs with ANY
         # embedding-less chunk (upload.js:141-158).  Embeddings are

@@ -61,8 +61,9 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--chunk-size", type=int, default=1000)
     ap.add_argument("--overlap", type=int, default=200)
     ap.add_argument("--neardup-threshold", type=float, default=0.8)
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=None,
+                    help="local cores when the job starts its own session "
+                         "(default: get_spark's)")
     ap.add_argument("--table-format", choices=("parquet", "iceberg"),
                     default="parquet",
                     help="physical stage-table layer: bare parquet dirs "
@@ -257,18 +258,16 @@ def main(argv: list[str] | None = None) -> dict:
     sp = StageParams(gazetteer_df(spark), args.chunk_size, args.overlap,
                      args.neardup_threshold)
 
-    def repartitioned(df):
-        # sized to the data by AQE, as in run_pipeline: a small corpus
-        # or delta is extracted, and written, as one partition
-        return salted_repartition(df)
-
     # -- root stage: documents (resume unit = url) -------------------------
+    # The salted pages shuffle is sized to the data by AQE, as in
+    # run_pipeline: a small corpus or delta is extracted, and written,
+    # as one partition.
     docs_delta = None  # extracted rows appended this run, if resuming
     if is_committed(args.output, root.name):
         delta = resume_delta(pages, spark, args.output, root.name, fmt=fmt)
         if delta.limit(1).count() > 0:
             docs_delta = root.delta(
-                sp, {}, {"pages": repartitioned(delta)}
+                sp, {}, {"pages": salted_repartition(delta)}
             ).localCheckpoint()
             # pending marker BEFORE the append: from here until all
             # downstream stages reconcile, a crash must invalidate them
@@ -277,7 +276,7 @@ def main(argv: list[str] | None = None) -> dict:
             write_stage(docs_delta, args.output, root.name, mode="append",
                         fmt=fmt)
     else:
-        write_stage(root.build(sp, repartitioned(pages)), args.output,
+        write_stage(root.build(sp, salted_repartition(pages)), args.output,
                     root.name, fmt=fmt)
     documents = read_stage(spark, args.output, root.name, fmt=fmt)
 

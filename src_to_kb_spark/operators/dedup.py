@@ -8,14 +8,17 @@ hash functions derived from its 64-bit prefix by universal
 multiply-add arithmetic mod 2^64 (numpy uint64 wraparound ≡ DuckDB
 UHUGEINT-mod — pinned by the oracle rows and unit tests).
 
-* :func:`exact_duplicates` — hash-groupBy on the content checksum.
-* :func:`shingles` / :func:`shingle_hash_values` /
-  :func:`band_signature_rows` — MinHash + LSH banding:
-  3-token shingles (lead-window construction), K minhashes per doc
-  from the universal family h_j(x) = (A_j·x + B_j) mod 2^64 over the
-  shingle's md5-prefix, band signatures, pairs sharing any band.
-* :func:`neardup_pairs` — candidates verified with true 3-shingle
-  Jaccard ≥ threshold.
+* :func:`band_signature_rows` / :func:`candidate_pairs_from_bands` —
+  MinHash + LSH banding: 3-token shingles (lead-window construction),
+  K minhashes per doc from the universal family
+  h_j(x) = (A_j·x + B_j) mod 2^64 over the shingle's md5-prefix, band
+  signatures, pairs sharing any band.  :func:`shingles` and
+  :func:`shingle_hash_values` are the row-per-shingle twins the tests
+  compare the UDFs against.
+* :func:`verify_candidate_pairs` / :func:`neardup_pairs` — candidates
+  verified with true 3-shingle Jaccard ≥ threshold.
+* :func:`simhash_neardup_pairs` — SimHash signatures, pairs within a
+  Hamming distance.
 
 Scale shape: shingling, minhashing, and banding are computed in ONE
 Arrow-batched pandas UDF pass over the corpus — map-only, no
@@ -69,19 +72,6 @@ MH_A, MH_B = _minhash_coeffs()
 # resume logic compares this tag and recomputes the near-dup family
 # when it changed (silently joining across schemes would miss pairs).
 BANDS_SCHEME = f"mh-uh1-k{N_HASHES}b{N_BANDS}"
-
-
-def exact_duplicates(docs: DataFrame, key_col: str = "url", text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical content: (checksum, n_docs, keys) for
-    groups with >1 member.  Keys sorted for determinism."""
-    return (
-        docs.groupBy(F.sha2(F.col(text_col), 256).alias("checksum"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sort_array(F.collect_list(key_col)).alias("keys"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def shingle_py(text: str) -> list[str]:

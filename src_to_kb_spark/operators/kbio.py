@@ -1,6 +1,6 @@
-"""KB table round-trip operators: summary sink, content reconstruction,
-upload completeness verification, single-text processing
-(SURVEY.md §2.1 S10/S14/S15/S16 and §3.3).
+"""KB table round-trip operators: the per-document summary projection,
+content reconstruction and upload completeness verification
+(SURVEY.md §2.1 S10/S14/S15 and §3.3).
 
 The reference triplicates KB loading across search/upload/mcp
 (search.js:51-80, upload.js:44-97, mcp-server.mjs:36-61); here the
@@ -11,11 +11,8 @@ anti-join — one of the few natural joins in the system.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.chunker import chunk_documents
-from ..operators.extract import extract_pages
 
 
 def kb_summary_documents(docs: DataFrame, chunks: DataFrame) -> DataFrame:
@@ -35,48 +32,6 @@ def kb_summary_documents(docs: DataFrame, chunks: DataFrame) -> DataFrame:
             F.col("type").alias("type"),
         )
     )
-
-
-def kb_summary(
-    docs: DataFrame,
-    chunks: DataFrame,
-    config: dict | None = None,
-    out_dir: str | None = None,
-    collect_documents: bool = False,
-) -> dict:
-    """S10 — metadata/summary.json shape (kb-generator.js:487-509):
-    run stats + per-document projection.  ``generatedAt`` is omitted by
-    design: determinism (SURVEY.md §7.4 hard-part 3).
-
-    The dict carries ONLY scalars by default — the per-document list
-    that the reference inlines into summary.json is a driver-side
-    bottleneck at scale, so it is written as a stage table when
-    ``out_dir`` is given (``summary_documents``) and inlined only on
-    explicit test-scale opt-in (``collect_documents=True``)."""
-    totals = docs.agg(
-        F.count("*").alias("files"), F.sum("size").alias("bytes")
-    ).first()
-    n_chunks = chunks.count()
-    summary: dict = {
-        "stats": {
-            "filesProcessed": totals["files"],
-            "totalSize": int(totals["bytes"] or 0),
-            "totalChunks": int(n_chunks),
-            "errors": [],
-        },
-        "config": config or {"chunkSize": 1000, "chunkOverlap": 200},
-    }
-    per_doc = kb_summary_documents(docs, chunks)
-    if out_dir is not None:
-        from ..runtime.checkpoint import write_stage
-
-        write_stage(per_doc, out_dir, "summary_documents")
-        summary["documents_table"] = f"{out_dir}/summary_documents"
-    if collect_documents:
-        summary["documents"] = [
-            dict(r) for r in per_doc.toPandas().to_dict("records")
-        ]
-    return summary
 
 
 def reconstruct_content(chunks: DataFrame) -> DataFrame:
@@ -118,21 +73,3 @@ def verify_upload_completeness(
         )
         .filter(F.col("n_missing") > 0)
     )
-
-
-def process_single_text(
-    spark: SparkSession,
-    url: str,
-    text: str,
-    chunk_size: int = 1000,
-    overlap: int = 200,
-) -> tuple[DataFrame, DataFrame]:
-    """S16 — the POST /api/v1/process-file path (api-server.js:613-655):
-    a single payload through the same clean+chunk stages, as a 1-row
-    DataFrame through the identical code path."""
-    pages = spark.createDataFrame(
-        [(url, text.encode("utf-8"), text, "unknown")],
-        "url string, html binary, text string, lang string",
-    ).withColumn("warc_ts", F.lit(None).cast("timestamp"))
-    docs = extract_pages(pages)
-    return docs, chunk_documents(docs, chunk_size, overlap)

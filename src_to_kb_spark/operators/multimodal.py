@@ -1,6 +1,6 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` +
-typed metadata, with decode / feature-extract / frame-sample as
-Arrow-batched ``mapInPandas`` stages.
+typed metadata, with decode / feature-extract as Arrow-batched
+``mapInPandas`` stages.
 
 ``decode=\"real\"`` genuinely decodes the codec-free container formats
 with the stdlib alone — PCM WAV (``wave``), binary PPM, uncompressed
@@ -203,35 +203,6 @@ def extract_media_features(
             )
 
     return media.mapInPandas(_fn, FEATURES_SCHEMA)
-
-
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, decode: str = "fake"
-) -> DataFrame:
-    """Video frame-sampling plumbing: 1 row → N frame rows
-    (url, frame_idx, ts_ms, frame_feature).  Frame decode is the same
-    stub; the row-explosion shape and schema are real."""
-    decoder = _fake_decode if decode == "fake" else _real_decode
-
-    schema = "url string, frame_idx int, ts_ms long, frame_feature array<float>"
-
-    def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "frame_idx": [], "ts_ms": [], "frame_feature": []}
-            for url, payload, meta in zip(pdf["url"], pdf["payload"], pdf["meta"]):
-                dur = (meta or {}).get("duration_ms") or 0
-                n_frames = max(1, int(dur // every_ms))
-                sig = decoder(payload if payload is not None else b"", "video")
-                for i in range(n_frames):
-                    rows["url"].append(url)
-                    rows["frame_idx"].append(i)
-                    rows["ts_ms"].append(i * every_ms)
-                    rows["frame_feature"].append(
-                        np.roll(sig, i)[:8].astype(np.float32).tolist()
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(_fn, schema)
 
 
 def _encode_wav(data: bytes) -> bytes:

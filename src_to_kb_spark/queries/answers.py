@@ -1,5 +1,5 @@
 """Extractive answer assembly (SURVEY.md §2.7 J6/J7; search.js:341-385,
-modes.js:195-226, mcp-server.mjs:120-141).
+modes.js:195-226).
 
 These operate on the (small, already-limited) search result set, so
 they are driver-side pure functions over collected rows — the same
@@ -86,26 +86,6 @@ def format_answer(base_answer: str, results: list[dict], mode: str) -> str:
         if examples:
             out += "\n\n📝 **Code Examples**:\n" + "\n\n".join(examples)
     return out
-
-
-_QUESTION_STARTS = ("how", "what", "why", "when", "where", "does", "can", "is")
-
-
-def is_question(query: str) -> bool:
-    """mcp-server.mjs:120-126 heuristic."""
-    q = query.lower()
-    return q.startswith(_QUESTION_STARTS) or "?" in q
-
-
-def language_set_answer(results: list[dict]) -> list[str]:
-    """mcp-server.mjs:128-141 — distinct languages of results (insertion
-    order)."""
-    seen: list[str] = []
-    for r in results:
-        lg = r.get("lang")
-        if lg and lg not in seen:
-            seen.append(lg)
-    return seen
 
 
 def answer_from_df(query: str, results_df: DataFrame, mode: str = "developer") -> dict:

@@ -1,41 +1,20 @@
-"""End-to-end upload orchestration (upload.js:99-211) — the composed
-flow the reference runs as `node upload.js [--with-embeddings |
---chunks-only]`:
-
-  load 3 KB tables → (mode-dependent) merge embeddings into chunks →
-  per-doc completeness check → skip-with-warning → send with retry.
+"""The uploader's sendable-set decision (upload.js:128-204): which
+documents `node upload.js [--with-embeddings | --chunks-only]` would
+send, and with how many chunks.
 
 Re-expressed Spark-first: the reference's driver loop over documents
-(upload.js:128-204) becomes a join-shaped plan — chunks grouped per
-doc, embeddings merged by chunk_id, completeness via the same
-left-join `verify_upload_completeness` uses — and the send runs
-per-partition through :func:`..sinks.rest.send_rows` (injected sender,
-3×1s retry, AuthError fail-fast, 2 MB size gate).  Each reference
-semantic keeps its line cite inline.
+becomes a join-shaped plan — chunks grouped per doc and embeddings
+merged by chunk_id.  The driver contract's ``upload_sendable`` query
+derives the skip set from it: chunks_only skips documents with no
+chunks, chunks_with_embeddings also skips documents with any
+embedding-less chunk.  Sending is out of scope: the engine has no
+REST sink.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .rest import MAX_PAYLOAD_BYTES, sink_documents, validate_sink
-
-
-def _doc_payload(row: dict) -> dict:
-    """Document payload with nested chunks (external-server-config.js
-    buildPayload shape, minus wall-clock fields)."""
-    return {
-        "id": row["doc_uid"],
-        "path": row["url"],
-        "content": row.get("content"),
-        "language": row.get("language_ext"),
-        "type": row.get("type"),
-        "size": row.get("size"),
-        "chunks": row.get("chunks"),
-    }
 
 
 def merge_embeddings_into_chunks(
@@ -52,13 +31,12 @@ def merge_embeddings_into_chunks(
     (arrays compare lexicographically) — one well-defined vector per
     chunk_id regardless of partitioning.  This is a documented
     divergence on a malformed KB (the pipeline never emits duplicate
-    chunk_ids); :func:`upload` counts the duplicates into its lineage
-    metrics and warns when the max policy actually fires, so the
-    divergence is observable rather than silent (judge r4 #5).
+    chunk_ids); :func:`_docs_with_chunks` counts the duplicated chunk_ids
+    per document (``n_dup``), so the divergence is observable rather
+    than silent.
 
     ``_n_emb`` (vectors seen per chunk_id) rides the SAME groupBy so
-    the dup count costs no extra scan of ``embeddings`` — upload
-    aggregates it off the already-persisted per-doc frame."""
+    the dup count costs no extra scan of ``embeddings``."""
     return chunks.join(
         embeddings.groupBy("chunk_id").agg(
             F.max("embedding").alias("embedding"),
@@ -116,176 +94,3 @@ def _docs_with_chunks(
         ).alias("n_dup"),
     )
     return docs.join(per_doc, "doc_uid", "left")
-
-
-def upload(
-    spark: SparkSession,
-    documents: DataFrame,
-    chunks: DataFrame | None,
-    embeddings: DataFrame | None,
-    sender_factory: Callable[[], Callable[[dict], Any]],
-    send_embeddings: bool = False,
-    send_chunks: bool = False,
-    validate: bool = True,
-    size_gate: int = MAX_PAYLOAD_BYTES,
-    **send_kw,
-) -> dict:
-    """The composed uploader.  Returns
-    {mode, sent, failed, skipped_incomplete, skipped_oversize, total}.
-
-    * validate server first (upload.js:101, validateExternalServer) —
-      one driver-side probe, fail-fast.
-    * empty-KB / flag-vs-content mismatches raise exactly like
-      upload.js:104-114 ("No documents found…", "No embeddings
-      found…", "No chunks found…").
-    * --with-embeddings: merge per chunk_id; a doc with NO or PARTIAL
-      embeddings is skipped-with-warning and counted failed
-      (upload.js:141-158) — here surfaced as ``skipped_incomplete``
-      plus a driver-side warning line, keeping "failed" for real send
-      errors.
-    * --chunks-only: docs with zero chunks skip (upload.js:169-173).
-    * default (raw content): content is reconstructed from chunks
-      joined '\\n\\n' when chunks exist (upload.js:187-190), else the
-      document's own text.
-    """
-    n_docs = documents.limit(1).count()
-    if n_docs == 0:
-        raise ValueError("No documents found in knowledge base")
-    if send_embeddings and (
-        embeddings is None or embeddings.limit(1).count() == 0
-    ):
-        raise ValueError(
-            "No embeddings found. Use --with-embeddings only if "
-            "embeddings exist in the KB."
-        )
-    if send_chunks and (chunks is None or chunks.limit(1).count() == 0):
-        raise ValueError(
-            "No chunks found. Use --chunks-only only if chunks exist "
-            "in the KB."
-        )
-    if validate:
-        validate_sink(sender_factory())  # upload.js:101 preflight
-
-    mode = (
-        "chunks_with_embeddings" if send_embeddings
-        else "chunks_only" if send_chunks
-        else "raw_content"
-    )
-
-    doc_cols = documents.select(
-        "doc_uid", "url", "size", "language_ext", "type", "text"
-    )
-    chunks = chunks if chunks is not None else _empty_chunks(spark)
-
-    skipped_incomplete = 0
-    dup_embedding_chunk_ids = 0
-    persisted = None
-    if send_embeddings or send_chunks:
-        src = (
-            merge_embeddings_into_chunks(chunks, embeddings)
-            if send_embeddings else chunks
-        )
-        # the collect_list groupBy + doc join is the expensive plan and
-        # both the skip count and the send read it — persist once
-        # instead of recomputing it per action
-        joined = persisted = _docs_with_chunks(
-            doc_cols, src, with_embedding=send_embeddings
-        ).persist()
-        if send_embeddings:
-            # make the max-vector dedup policy OBSERVABLE when it fires
-            # (upload.js:146-150 keeps the last file-order write; see
-            # merge_embeddings_into_chunks): duplicate chunk_ids only
-            # exist on a malformed KB, so this count is normally 0 and
-            # the warning never prints.  Summed off the persisted
-            # per-doc frame (n_dup rode the merge's own groupBy) — a
-            # standalone probe would scan + shuffle the full embeddings
-            # lineage a second time on every upload.
-            dup_embedding_chunk_ids = joined.agg(
-                F.coalesce(F.sum("n_dup"), F.lit(0))
-            ).first()[0]
-            if dup_embedding_chunk_ids:
-                print(
-                    f"⚠️  {dup_embedding_chunk_ids} duplicated chunk_ids "
-                    "attached to sendable documents (counted per "
-                    "document) have multiple embeddings; keeping the "
-                    "deterministic max vector per chunk_id (the "
-                    "reference keeps the last file-order write — no "
-                    "file order exists on a distributed table)"
-                )
-        # skip-with-warning set: no chunks at all, no embeddings, or
-        # partially missing (upload.js:141-158 / :169-173)
-        bad = F.col("chunks").isNull()
-        if send_embeddings:
-            bad = bad | (F.col("n_missing") > 0)
-        skipped_incomplete = joined.filter(bad).count()
-        sendable = joined.filter(~bad).withColumn(
-            "content", F.lit(None).cast("string")
-        )
-    else:
-        joined = _docs_with_chunks(doc_cols, chunks, with_embedding=False)
-        # raw content: reconstruct from chunks when available
-        # (upload.js:187-190), else the document text; chunks not sent
-        sendable = joined.withColumn(
-            "content",
-            F.coalesce(
-                F.array_join(
-                    F.transform(F.col("chunks"), lambda c: c["content"]),
-                    "\n\n",
-                ),
-                F.col("text"),
-            ),
-        ).withColumn("chunks", F.lit(None).cast("string"))
-    if skipped_incomplete:
-        print(
-            f"⚠️  {skipped_incomplete} documents incomplete for mode "
-            f"{mode}, skipping"
-        )
-
-    rows = sendable.drop("text", "n_chunks", "n_missing", "n_dup")
-    counters = sink_documents(
-        rows, sender_factory, build=_doc_payload, recursive=True,
-        size_gate=size_gate, **send_kw,
-    )
-    if persisted is not None:
-        persisted.unpersist()
-    # total = every doc row: joined is one row per document (sendable
-    # rows all pass through the sink's counters) — no extra scan
-    return {
-        "mode": mode,
-        **counters,
-        "skipped_incomplete": skipped_incomplete,
-        "dup_embedding_chunk_ids": dup_embedding_chunk_ids,
-        "total": counters["sent"] + counters["failed"]
-        + counters["skipped_oversize"] + skipped_incomplete,
-    }
-
-
-def _empty_chunks(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "doc_uid string, chunk_id string, chunk_index int, content string,"
-        " start_line int, end_line int",
-    )
-
-
-def upload_kb(
-    spark: SparkSession,
-    kb_dir: str,
-    sender_factory: Callable[[], Callable[[dict], Any]],
-    **kw,
-) -> dict:
-    """CLI-shaped entry: read the three stage tables from a pipeline
-    --output dir (documents always; chunks/embeddings when committed —
-    upload.js:44-97 loads whatever exists) and run :func:`upload`."""
-    from ..runtime.checkpoint import is_committed, read_stage
-
-    documents = read_stage(spark, kb_dir, "documents")
-    chunks = (
-        read_stage(spark, kb_dir, "chunks")
-        if is_committed(kb_dir, "chunks") else None
-    )
-    embeddings = (
-        read_stage(spark, kb_dir, "embeddings")
-        if is_committed(kb_dir, "embeddings") else None
-    )
-    return upload(spark, documents, chunks, embeddings, sender_factory, **kw)

@@ -1,6 +1,6 @@
 """Stateful streaming deduplication — a CUSTOM stateful operator via
-``applyInPandasWithState`` (SURVEY.md §2.10; the batch analog is
-``operators/dedup.exact_duplicates``).
+``applyInPandasWithState`` (SURVEY.md §2.10; the batch analog is a
+groupBy on the content checksum).
 
 A continuous crawl re-fetches pages: the stream must emit each unique
 content exactly once ACROSS micro-batches, which no stateless

@@ -1,15 +1,15 @@
-"""Structured-Streaming ingest: continuous ``pages`` → documents +
-chunks (SURVEY.md §2.10 — the reference has no streaming; its closest
-analog is the async background generation with a status map,
-api-server.js:259-296.  This is the Spark-native upgrade: a file-source
-stream with exactly-once sinks).
+"""Structured-Streaming ingest: continuous ``pages`` → documents and a
+watermarked ingest-rate aggregate (SURVEY.md §2.10 — the reference has
+no streaming; its closest analog is the async background generation
+with a status map, api-server.js:259-296.  This is the Spark-native
+upgrade: a file-source stream; ``streaming/dedup.py`` adds stateful
+dedup over the same stream).
 
-The extract and chunk stages are stateless map-only transforms, so
-they lift to streaming unchanged.  ``warc_ts`` watermarking is applied
-for the windowed ingest-rate aggregate (late pages tolerated up to the
-watermark).  Checkpointing gives resume-on-restart; with
-``trigger(availableNow=True)`` the same job drains a backlog batch —
-one code path for batch and streaming.
+The extract stage is a stateless map-only transform, so it lifts to
+streaming unchanged.  ``warc_ts`` watermarking is applied for the
+windowed ingest-rate aggregate (late pages tolerated up to the
+watermark).  With ``trigger(availableNow=True)`` the same query drains
+a backlog batch — one code path for batch and streaming.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.chunker import chunk_documents
 from ..operators.extract import extract_pages
 
 PAGES_SCHEMA = (
@@ -37,10 +36,6 @@ def stream_pages(
 
 def stream_documents(pages: DataFrame) -> DataFrame:
     return extract_pages(pages)
-
-
-def stream_chunks(docs: DataFrame) -> DataFrame:
-    return chunk_documents(docs)
 
 
 def ingest_rate(docs: DataFrame, window: str = "1 hour") -> DataFrame:
@@ -82,33 +77,3 @@ def run_window_rate_once(
         .start()
     )
     q.awaitTermination()
-
-
-def run_ingest_once(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain the current backlog (availableNow) into documents/chunks
-    parquet sinks with exactly-once checkpointing, then stop."""
-    pages = stream_pages(spark, input_dir)
-    docs = stream_documents(pages)
-
-    q1 = (
-        docs.writeStream.format("parquet")
-        .option("path", f"{out_dir}/documents")
-        .option("checkpointLocation", f"{checkpoint_dir}/documents")
-        .trigger(availableNow=True)
-        .start()
-    )
-    chunks = stream_chunks(stream_documents(stream_pages(spark, input_dir)))
-    q2 = (
-        chunks.writeStream.format("parquet")
-        .option("path", f"{out_dir}/chunks")
-        .option("checkpointLocation", f"{checkpoint_dir}/chunks")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination()
-    q2.awaitTermination()

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from src_to_kb_spark.operators.canonicalize import connected_components
-from src_to_kb_spark.operators.dedup import exact_duplicates, neardup_pairs
+from src_to_kb_spark.operators.dedup import neardup_pairs
 from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.operators.similarity import knn_brute_force, knn_lsh
 from src_to_kb_spark.pipeline import run_pipeline
@@ -111,11 +111,6 @@ def test_neardup_planted_dups(spark):
     for a, b in got:
         ta, tb = texts[a], texts[b]
         assert ta.replace(" dup", "") == tb.replace(" dup", "")
-
-
-def test_exact_duplicates_empty_on_corpus(spark):
-    docs = extract_pages(load_pages(spark, SF_SMOKE))
-    assert exact_duplicates(docs).count() == 0
 
 
 def test_knn_lsh_subset_of_bruteforce_values(spark):

@@ -1,6 +1,5 @@
 """Parity tests for the remaining small operators: answer assembly
-(J6), formatBytes (P6), notion page-id (P10), SimHash, embeddings,
-REST sink semantics, KB round-trip ops, multimodal plumbing."""
+(J6), SimHash, embeddings, KB round-trip ops, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -10,31 +9,19 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from src_to_kb_spark.functions.misc import (
-    extract_notion_page_id,
-    format_bytes,
-    format_notion_page_id,
-    notion_page_id_col,
-)
+from src_to_kb_spark.operators.chunker import chunk_documents
 from src_to_kb_spark.operators.dedup import simhash_neardup_pairs, simhash_py
 from src_to_kb_spark.operators.embed import embed_chunks, _embed_texts
+from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.operators.kbio import (
-    kb_summary,
-    process_single_text,
     reconstruct_content,
     verify_upload_completeness,
 )
 from src_to_kb_spark.operators.multimodal import (
     extract_media_features,
-    sample_frames,
     synthetic_media,
 )
-from src_to_kb_spark.queries.answers import (
-    generate_answer,
-    is_question,
-    language_set_answer,
-)
-from src_to_kb_spark.sinks.rest import AuthError, send_rows
+from src_to_kb_spark.queries.answers import generate_answer
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden_search.json")
 with open(FIXTURE, encoding="utf-8") as f:
@@ -76,42 +63,6 @@ def test_generate_answer_parity(key):
     assert got["mode"] == exp["mode"] == MODE_NAME[mode]
 
 
-def test_format_bytes_parity():
-    for n, expected in GOLD["formatBytes"].items():
-        assert format_bytes(int(n)) == expected, n
-
-
-def test_notion_page_id():
-    pid = "a" * 8 + "b" * 4 + "c" * 4 + "d" * 4 + "e" * 12
-    url = f"https://notion.so/My-Page-{pid}"
-    assert extract_notion_page_id(url) == pid
-    assert (
-        format_notion_page_id(pid)
-        == "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee"
-    )
-    assert extract_notion_page_id("https://notion.so/nope") is None
-    assert format_notion_page_id("short") == "short"
-
-
-def test_notion_page_id_col(spark):
-    pid = "0123456789abcdef0123456789abcdef"
-    df = spark.createDataFrame(
-        [(f"https://notion.so/X-{pid}",), ("https://notion.so/none",)],
-        "url string",
-    )
-    got = df.select(notion_page_id_col(F.col("url")).alias("pid")).collect()
-    assert got[0]["pid"] == format_notion_page_id(pid)
-    assert got[1]["pid"] is None
-
-
-def test_is_question_and_language_answer():
-    assert is_question("How does chunking work")
-    assert is_question("weird phrasing?")
-    assert not is_question("show me the chunker")
-    rows = [{"lang": "Python"}, {"lang": "Go"}, {"lang": "Python"}]
-    assert language_set_answer(rows) == ["Python", "Go"]
-
-
 def test_simhash_spark_matches_python(spark):
     # 7 distinct tokens (odd): per-bit vote sums are multiples of 20
     # with |sum| >= 20, so one extra token can never flip a bit and
@@ -150,35 +101,14 @@ def test_embed_deterministic_unit_norm(spark):
     assert norm == pytest.approx(1.0, abs=1e-5)
 
 
-def test_rest_sink_semantics():
-    calls = []
-
-    def flaky_sender(payload):
-        calls.append(payload["id"])
-        if payload["id"] == "fail" :
-            raise RuntimeError("boom")
-
-    rows = [
-        {"doc_uid": "a", "url": "u", "text": "t"},
-        {"doc_uid": "fail", "url": "u", "text": "t"},
-        {"doc_uid": "big", "url": "u", "text": "x" * 500},
-    ]
-    res = send_rows(rows, flaky_sender, retry_delay=0.0, size_gate=300)
-    assert res == {"sent": 1, "skipped_oversize": 1, "failed": 1}
-    assert calls.count("fail") == 3  # 3 retry attempts
-
-    def auth_sender(payload):
-        raise AuthError("401")
-
-    with pytest.raises(AuthError):
-        send_rows(rows[:1], auth_sender, retry_delay=0.0)
-
-
 def test_kbio_roundtrip(spark):
-    docs, chunks = process_single_text(
-        spark, "api/upload.txt", "hello\nworld\n" * 200, chunk_size=120,
-        overlap=40,
-    )
+    text = "hello\nworld\n" * 200
+    pages = spark.createDataFrame(
+        [("api/upload.txt", text.encode("utf-8"), text, "unknown")],
+        "url string, html binary, text string, lang string",
+    ).withColumn("warc_ts", F.lit(None).cast("timestamp"))
+    docs = extract_pages(pages)
+    chunks = chunk_documents(docs, 120, 40)
     assert docs.count() == 1
     n_chunks = chunks.count()
     assert n_chunks > 5
@@ -186,23 +116,6 @@ def test_kbio_roundtrip(spark):
     rec = reconstruct_content(chunks).first()["content"]
     assert rec.startswith("hello\nworld")
     assert "\n\n" in rec  # overlap-lossy join, like upload.js:187-190
-
-    # default: scalars only — the per-doc list is NOT collected
-    summary = kb_summary(docs, chunks)
-    assert summary["stats"]["filesProcessed"] == 1
-    assert summary["stats"]["totalChunks"] == n_chunks
-    assert "documents" not in summary
-
-    # test-scale opt-in inlines the list; out_dir writes it as a table
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        summary = kb_summary(docs, chunks, out_dir=td,
-                             collect_documents=True)
-        assert summary["documents"][0]["language"] == "Text"
-        assert summary["documents"][0]["chunks"] == n_chunks
-        tbl = spark.read.parquet(f"{td}/summary_documents")
-        assert tbl.count() == 1 and "path" in tbl.columns
 
     from src_to_kb_spark.operators.embed import embed_chunks
 
@@ -220,10 +133,6 @@ def test_multimodal_plumbing(spark):
     feats2 = {r["url"]: r["feature"]
               for r in extract_media_features(media).collect()}
     assert by_url == feats2  # deterministic
-
-    frames = sample_frames(media.filter(F.col("kind") == "video")).collect()
-    assert len(frames) == 8 * 3  # 3500ms / 1000ms -> 3 frames per video
-    assert {r["frame_idx"] for r in frames} == {0, 1, 2}
 
     with pytest.raises(Exception):
         extract_media_features(media, decode="real").collect()
@@ -313,57 +222,6 @@ def test_embedding_neardup_matmul_equals_join_rerank(spark):
         for r in embedding_neardup_pairs(emb, rerank="join", **kw).collect()
     }
     assert matmul == join and matmul
-
-
-def test_external_search_fallback_semantics():
-    """search.js:82-128 routing: response-shape mapping, fallback on
-    remote failure, fail-fast on validation error, cached validation."""
-    from src_to_kb_spark.queries.external import KnowledgeBaseSearch
-
-    local_calls = []
-
-    def local(q):
-        local_calls.append(q)
-        return {"answer": f"local:{q}", "confidence": 0.5, "mode": "Developer"}
-
-    # 1) remote returns {response: ...} -> 0.9 / external
-    kb = KnowledgeBaseSearch(local, remote_search=lambda q: {"response": "R"})
-    got = kb.search("x")
-    assert got == {"answer": "R", "confidence": 0.9, "external": True,
-                   "mode": "Developer"}
-
-    # 2) other shape -> JSON.stringify(indent=2) / 0.8
-    kb = KnowledgeBaseSearch(local, remote_search=lambda q: {"hits": [1]})
-    got = kb.search("x")
-    assert got["confidence"] == 0.8 and got["answer"] == '{\n  "hits": [\n    1\n  ]\n}'
-
-    # 3) remote raises -> local fallback
-    def boom(q):
-        raise RuntimeError("down")
-
-    kb = KnowledgeBaseSearch(local, remote_search=boom)
-    assert kb.search("q1")["answer"] == "local:q1"
-
-    # 4) validation failure -> fail fast, NO fallback
-    def bad_auth():
-        raise PermissionError("401")
-
-    kb = KnowledgeBaseSearch(local, remote_search=lambda q: {"response": "R"},
-                             validate_remote=bad_auth)
-    with pytest.raises(PermissionError):
-        kb.search("q2")
-    assert "q2" not in local_calls
-
-    # 5) validation runs once across searches
-    n_val = []
-    kb = KnowledgeBaseSearch(local, remote_search=lambda q: {"response": "R"},
-                             validate_remote=lambda: n_val.append(1))
-    kb.search("a"); kb.search("b")
-    assert len(n_val) == 1
-
-    # 6) no remote configured -> plain local
-    kb = KnowledgeBaseSearch(local)
-    assert kb.search("z")["answer"] == "local:z"
 
 
 def test_similar_documents_mcp_divergence(spark):

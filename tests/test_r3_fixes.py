@@ -1,7 +1,7 @@
 """Round-3 regression tests for the r2 ADVICE items: alternating-star
 non-convergence must raise, empty Arrow batches through the numpy ANN
-UDFs, Notion JS-truthiness content fallback, content-hash (not mtime)
-stage-cache keys, and the deterministic duplicate-url survivor."""
+UDFs, content-hash (not mtime) stage-cache keys, and the deterministic
+duplicate-url survivor."""
 
 from __future__ import annotations
 
@@ -57,26 +57,6 @@ def test_ann_udfs_survive_empty_batches(spark):
     ).repartition(4)
     assert one.select(b_udf("embedding")).count() == 1
     assert one.select(a_udf("embedding")).count() == 1
-
-
-def test_notion_content_falls_back_on_null_rich_text():
-    """ADVICE r2: a block with rich_text: null plus a caption must
-    render the caption (JS truthiness), not '' (key presence)."""
-    from src_to_kb_spark.sources.notion import blocks_to_text
-
-    blocks = [
-        {
-            "type": "paragraph",
-            "paragraph": {
-                "rich_text": None,
-                "caption": [{"plain_text": "cap text", "type": "text"}],
-            },
-        }
-    ]
-    assert blocks_to_text(blocks) == "cap text"  # (renderer trims)
-    # empty ARRAY rich_text is truthy in JS: stays '' (no fallback)
-    blocks[0]["paragraph"]["rich_text"] = []
-    assert blocks_to_text(blocks) == ""
 
 
 def _wav_bytes(n=256, rate=8000) -> bytes:

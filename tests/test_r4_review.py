@@ -8,13 +8,11 @@
    keyword must not score chunks that match only as a REGEX.
 3. ``generate_answer`` returns the mode DISPLAY name ('Developer'),
    like search.js:384 and the external-search path.
-4. ``format_bytes`` ≥ 1 TB degrades like the reference ('N undefined')
-   instead of IndexError.
-5. The matmul rerank honors the input id type (string chunk_id ids
+4. The matmul rerank honors the input id type (string chunk_id ids
    from embed_chunks, not just bigint vec_id).
-6. ``embedding_neardup_pairs`` on an EMPTY frame returns an empty pair
+5. ``embedding_neardup_pairs`` on an EMPTY frame returns an empty pair
    set instead of crashing on the dim probe.
-7. SimHash near-dup excludes token-less docs (no empty-doc all-pairs
+6. SimHash near-dup excludes token-less docs (no empty-doc all-pairs
    blowup), Spark and DuckDB twin alike.
 """
 
@@ -27,7 +25,6 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from src_to_kb_spark.functions.misc import format_bytes
 from src_to_kb_spark.operators.dedup import (
     oracle_simhash_sql,
     simhash_neardup_pairs,
@@ -116,11 +113,6 @@ def test_generate_answer_mode_display_name():
     ]
     assert generate_answer("q", rows, mode="developer")["mode"] == "Developer"
     assert generate_answer("q", rows, mode="enduser")["mode"] == "End User"
-
-
-def test_format_bytes_tb_degrades_like_reference():
-    assert format_bytes(2 * 1024**4) == "2 undefined"
-    assert format_bytes(1024**3) == "1 GB"
 
 
 def test_matmul_rerank_string_ids(spark):

@@ -6,7 +6,6 @@ import os
 
 from pyspark.sql import functions as F
 
-from src_to_kb_spark.operators.chunker import chunk_documents
 from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.runtime.checkpoint import (
     is_committed,
@@ -16,7 +15,6 @@ from src_to_kb_spark.runtime.checkpoint import (
     write_stage,
 )
 from src_to_kb_spark.sources.pages import synthetic_pages
-from src_to_kb_spark.streaming.ingest import run_ingest_once
 
 
 def test_write_stage_metrics_and_resume(spark, tmp_path):
@@ -41,34 +39,6 @@ def test_write_stage_metrics_and_resume(spark, tmp_path):
 
     assert [x["stage"] for x in run_metrics(out)] == ["documents"]
     assert read_stage(spark, out, "documents").count() == 60
-
-
-def test_streaming_ingest_matches_batch(spark, tmp_path):
-    pages = synthetic_pages(spark, n=50)
-    in_dir = str(tmp_path / "pages_in")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    pages.write.parquet(in_dir)
-
-    run_ingest_once(spark, in_dir, out_dir, ck_dir)
-
-    stream_docs = spark.read.parquet(f"{out_dir}/documents")
-    batch_docs = extract_pages(spark.read.parquet(in_dir))
-    assert stream_docs.count() == 50
-    a = {(r["url"], r["checksum"]) for r in stream_docs.collect()}
-    b = {(r["url"], r["checksum"]) for r in batch_docs.collect()}
-    assert a == b
-
-    stream_chunks = spark.read.parquet(f"{out_dir}/chunks")
-    batch_chunks = chunk_documents(batch_docs)
-    assert stream_chunks.count() == batch_chunks.count()
-    sa = {(r["chunk_id"], r["content"]) for r in stream_chunks.collect()}
-    sb = {(r["chunk_id"], r["content"]) for r in batch_chunks.collect()}
-    assert sa == sb
-
-    # idempotent restart: re-running with same checkpoint ingests nothing new
-    run_ingest_once(spark, in_dir, out_dir, ck_dir)
-    assert spark.read.parquet(f"{out_dir}/documents").count() == 50
 
 
 def test_streaming_stateful_dedup_across_batches(spark, tmp_path):

@@ -66,11 +66,7 @@ const log = console.log; console.log = () => {}; console.error = () => {};
   const gen = new KnowledgeBaseGenerator({ outputPath: kbDir });
   await gen.processRepository(repoDir);
   const out = { searches: {}, stats: null, byType: {}, similar: {},
-                answers: {}, formatBytes: {} };
-  for (const n of [0, 1, 512, 1023, 1024, 1536, 10240, 1048576, 2621440,
-                   1073741824, 999, 123456789]) {
-    out.formatBytes[n] = gen.formatBytes(n);
-  }
+                answers: {} };
   for (const mode of cfg.modes) {
     const s = new KnowledgeBaseSearch(kbDir, mode);
     for (const q of cfg.queries) {
