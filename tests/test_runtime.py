@@ -6,6 +6,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from src_to_kb_spark.operators.chunker import chunk_documents
 from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.runtime.checkpoint import (
     is_committed,
@@ -15,6 +16,7 @@ from src_to_kb_spark.runtime.checkpoint import (
     write_stage,
 )
 from src_to_kb_spark.sources.pages import synthetic_pages
+from src_to_kb_spark.streaming.ingest import stream_documents, stream_pages
 
 
 def test_write_stage_metrics_and_resume(spark, tmp_path):
@@ -39,6 +41,50 @@ def test_write_stage_metrics_and_resume(spark, tmp_path):
 
     assert [x["stage"] for x in run_metrics(out)] == ["documents"]
     assert read_stage(spark, out, "documents").count() == 60
+
+
+def _drain(frame, path, checkpoint):
+    """Drain a streaming frame's backlog (availableNow) into a parquet
+    sink with exactly-once checkpointing."""
+    frame.writeStream.format("parquet").option("path", path).option(
+        "checkpointLocation", checkpoint
+    ).trigger(availableNow=True).start().awaitTermination()
+
+
+def test_streaming_ingest_matches_batch(spark, tmp_path):
+    """The stateless extract and chunk stages lift to streaming
+    unchanged: draining the page stream gives the batch documents and
+    chunks, and a restart on the same checkpoint ingests nothing."""
+    pages = synthetic_pages(spark, n=50)
+    in_dir = str(tmp_path / "pages_in")
+    out_dir = str(tmp_path / "out")
+    ck_dir = str(tmp_path / "ck")
+    pages.write.parquet(in_dir)
+
+    def run_ingest_once():
+        docs = stream_documents(stream_pages(spark, in_dir))
+        _drain(docs, f"{out_dir}/documents", f"{ck_dir}/documents")
+        _drain(chunk_documents(docs), f"{out_dir}/chunks", f"{ck_dir}/chunks")
+
+    run_ingest_once()
+
+    stream_docs = spark.read.parquet(f"{out_dir}/documents")
+    batch_docs = extract_pages(spark.read.parquet(in_dir))
+    assert stream_docs.count() == 50
+    a = {(r["url"], r["checksum"]) for r in stream_docs.collect()}
+    b = {(r["url"], r["checksum"]) for r in batch_docs.collect()}
+    assert a == b
+
+    stream_chunks = spark.read.parquet(f"{out_dir}/chunks")
+    batch_chunks = chunk_documents(batch_docs)
+    assert stream_chunks.count() == batch_chunks.count()
+    sa = {(r["chunk_id"], r["content"]) for r in stream_chunks.collect()}
+    sb = {(r["chunk_id"], r["content"]) for r in batch_chunks.collect()}
+    assert sa == sb
+
+    # idempotent restart: re-running with same checkpoint ingests nothing new
+    run_ingest_once()
+    assert spark.read.parquet(f"{out_dir}/documents").count() == 50
 
 
 def test_streaming_stateful_dedup_across_batches(spark, tmp_path):
