@@ -664,40 +664,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # synthesized present for ~80% of chunk ids by the same
         # deterministic md5 predicate upload_completeness uses, so both
         # engines compute the identical skip set.
-        from src_to_kb_spark.sinks.upload import (
-            _docs_with_chunks,
-            merge_embeddings_into_chunks,
-        )
+        from src_to_kb_spark.operators.kbio import embedding_coverage
 
         docs = _docs(spark, sf)
-        doc_cols = docs.select(
-            "doc_uid", "url", "size", "language_ext", "type", "text"
-        )
         chunks = chunk_documents(docs)
         emb = chunks.filter(
             ~F.substring(F.md5("chunk_id"), 1, 1).isin("0", "1", "2")
-        ).select(
-            "chunk_id",
-            F.array(F.length("content").cast("double")).alias("embedding"),
+        ).select("chunk_id")
+        cc = docs.select("doc_uid").join(
+            embedding_coverage(chunks, emb), "doc_uid", "left"
         )
-        co = _docs_with_chunks(doc_cols, chunks, with_embedding=False).select(
+        no_chunks = F.col("n_chunks").isNull()
+        return cc.select(
             "doc_uid",
             F.lit("chunks_only").alias("mode"),
             F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            F.col("chunks").isNull().alias("skipped"),
-        )
-        we = _docs_with_chunks(
-            doc_cols, merge_embeddings_into_chunks(chunks, emb),
-            with_embedding=True,
-        ).select(
+            no_chunks.alias("skipped"),
+        ).unionByName(cc.select(
             "doc_uid",
             F.lit("chunks_with_embeddings").alias("mode"),
             F.coalesce("n_chunks", F.lit(0)).alias("n_chunks"),
-            (F.col("chunks").isNull() | (F.col("n_missing") > 0)).alias(
-                "skipped"
-            ),
-        )
-        return co.unionByName(we)
+            (no_chunks | (F.col("n_missing") > 0)).alias("skipped"),
+        ))
 
     def q_modes(spark, sf):
         # the GET /api/v1/modes projection (modes.js:85-118 via
@@ -779,7 +767,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         media = media_from_pages(load_pages(spark, sf, keep_keys=False))
-        feats = extract_media_features(media, decode="real")
+        feats = extract_media_features(media)
         return feats.select(
             "url",
             "kind",
@@ -801,7 +789,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         media = media_from_pages(load_pages(spark, sf, keep_keys=False))
-        feats = extract_media_features(media, decode="real")
+        feats = extract_media_features(media)
         return feats.select(
             "url", "kind", "n_bytes",
             F.size("feature").alias("feature_dim"),

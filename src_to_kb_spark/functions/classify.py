@@ -88,12 +88,12 @@ DEFAULT_EXCLUDES = [
 ]
 
 
-def should_exclude(path: Column, excludes: list[str] | None = None) -> Column:
+def should_exclude(path: Column) -> Column:
     """S2 — substring containment against the exclude list
     (kb-generator.js:174-178).  At scale this predicate prunes files
     before any read, like the reference prunes directories pre-descent."""
     conds = None
-    for e in excludes if excludes is not None else DEFAULT_EXCLUDES:
+    for e in DEFAULT_EXCLUDES:
         c = path.contains(e)
         conds = c if conds is None else (conds | c)
     return conds if conds is not None else F.lit(False)

@@ -2,9 +2,11 @@
 connected components (SURVEY.md §7.2 stage 5).
 
 Input: undirected edges (key_a, key_b) — e.g. verified near-dup pairs
-or MinHash-matched entity-name pairs.  Output: (key, canon_id) where
-``canon_id`` is the minimum key of the component (deterministic
-labeling), including singleton members of the input node set.
+or MinHash-matched entity-name pairs.  Output: (key, canon_id) for
+every endpoint of a non-loop edge, where ``canon_id`` is the minimum
+key of its component (deterministic labeling).  Keys without edges
+get no label: they would only ever label themselves, and the pipeline
+emits same_as triples for non-self labels alone.
 
 Two paths:
 
@@ -37,11 +39,10 @@ _LABELS_PER_PARTITION = 1_000_000
 
 def connected_components(
     edges: DataFrame,
-    nodes: DataFrame | None = None,
     max_iter: int = 50,
     driver_threshold: int | None = 5_000_000,
 ) -> DataFrame:
-    """edges(key_a, key_b) [+ nodes(key)] → (key, canon_id).
+    """edges(key_a, key_b) → (key, canon_id).
 
     Hybrid strategy: LSH-verified candidate graphs are sparse, so when
     the edge set fits comfortably on the driver (≤ ``driver_threshold``
@@ -63,7 +64,7 @@ def connected_components(
     if driver_threshold is not None:
         probe = e.limit(driver_threshold + 1).toPandas()
         if len(probe) <= driver_threshold:
-            return _components_driver(spark, probe, nodes)
+            return _components_driver(spark, probe)
         # too big for the driver: fall through; the distributed path
         # re-reads `edges` (upstream should be a committed stage table
         # or checkpoint — true wherever the pipeline calls this)
@@ -76,12 +77,9 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     node_df = sym.select(F.col("a").alias("key")).distinct()
-    if nodes is not None:
-        node_df = node_df.union(nodes.select("key")).distinct()
-
     stars = _alternating_star(sym, max_iter)
 
-    # star forest → labels; nodes without edges are their own canon
+    # star forest → labels; a star root is its own canon
     return node_df.join(
         stars.select(F.col("u").alias("key"), F.col("v").alias("canon_id")),
         "key",
@@ -159,9 +157,7 @@ def _alternating_star(sym: DataFrame, max_iter: int) -> DataFrame:
     )
 
 
-def _components_driver(
-    spark, edge_pdf, nodes: DataFrame | None
-) -> DataFrame:
+def _components_driver(spark, edge_pdf) -> DataFrame:
     """Union-find on collected edges — the small-graph fast path.
 
     The labels go back as an Arrow table with an EXPLICIT schema, so
@@ -176,8 +172,6 @@ def _components_driver(
     import pyarrow as pa
 
     node_list = set(edge_pdf["a"].tolist()) | set(edge_pdf["b"].tolist())
-    if nodes is not None:
-        node_list |= {r["key"] for r in nodes.select("key").collect()}
 
     parent: dict[str, str] = {n: n for n in node_list}
 

@@ -54,24 +54,20 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 1000,
     overlap: int = 200,
-    id_col: str = "doc_uid",
-    text_col: str = "text",
-    carry_cols: tuple[str, ...] = ("url", "lang"),
 ) -> DataFrame:
-    """documents → chunks(doc_uid, chunk_id, chunk_index, content,
-    start_line, end_line, size, +carry_cols).
+    """documents → chunks(doc_uid, url, lang, chunk_id, chunk_index,
+    content, start_line, end_line, size).
 
     Defaults 1000/200 per kb-generator.js:17-18.
     """
     chunk_udf = _make_chunk_udf(chunk_size, overlap)
     exploded = docs.select(
-        F.col(id_col).alias("doc_uid"),
-        *[F.col(c) for c in carry_cols],
-        F.explode(chunk_udf(F.col(text_col))).alias("ch"),
+        "doc_uid", "url", "lang", F.explode(chunk_udf(F.col("text"))).alias("ch")
     )
     return exploded.select(
         "doc_uid",
-        *carry_cols,
+        "url",
+        "lang",
         F.expr(chunk_id("doc_uid", "ch.index")).alias("chunk_id"),
         F.col("ch.index").alias("chunk_index"),
         F.col("ch.content").alias("content"),
@@ -81,9 +77,7 @@ def chunk_documents(
     )
 
 
-def oracle_chunks_ctes(
-    chunk_size: int = 1000, overlap: int = 200, pages_rel: str = "pages"
-) -> str:
+def oracle_chunks_ctes() -> str:
     """DuckDB twin of :func:`chunk_documents` as a chain of CTEs ending
     in ``chunks_r(doc_uid, url, chunk_id, chunk_index, content,
     start_line, end_line, size)``.
@@ -98,13 +92,13 @@ def oracle_chunks_ctes(
 
     Must be appended after a ``WITH RECURSIVE``-opened pages CTE.
     """
-    C, O = chunk_size, overlap
+    C, O = 1000, 200
     return f"""
 cdoc AS (
   SELECT url, lang, 'doc_' || sha256(url) AS doc_uid,
          string_split(text, chr(10)) AS lines,
          len(string_split(text, chr(10))) AS n_lines
-  FROM {pages_rel}
+  FROM pages
 ),
 clines AS (
   SELECT url, i, length(line) AS llen,

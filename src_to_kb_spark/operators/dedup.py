@@ -88,8 +88,7 @@ def shingle_py(text: str) -> list[str]:
     return list(seen)
 
 
-def minhash_bands_py(sh: list[str], n_hashes: int = N_HASHES,
-                     n_bands: int = N_BANDS) -> list[str] | None:
+def minhash_bands_py(sh: list[str]) -> list[str] | None:
     """Band signatures from a shingle list: ONE md5 per shingle (its
     64-bit prefix — the same value the verification pass hashes to),
     then the K minhash functions are the universal family
@@ -111,14 +110,14 @@ def minhash_bands_py(sh: list[str], n_hashes: int = N_HASHES,
         b"".join(_hl.md5(s.encode("utf-8")).digest()[:8] for s in sh),
         dtype=">u8",
     ).astype(np.uint64)
-    a = np.array(MH_A[:n_hashes], dtype=np.uint64)
-    b_ = np.array(MH_B[:n_hashes], dtype=np.uint64)
+    a = np.array(MH_A, dtype=np.uint64)
+    b_ = np.array(MH_B, dtype=np.uint64)
     with np.errstate(over="ignore"):  # mod-2^64 wraparound is the hash
         mins = (hv[:, None] * a + b_).min(axis=0)
-    rpb = n_hashes // n_bands
+    rpb = N_HASHES // N_BANDS
     return [
         ",".join(str(int(m)) for m in mins[b * rpb : (b + 1) * rpb])
-        for b in range(n_bands)
+        for b in range(N_BANDS)
     ]
 
 
@@ -164,7 +163,7 @@ def make_shingle_hash_udf():
     return shh_udf
 
 
-def shingles(docs: DataFrame, key_col: str = "url", text_col: str = "text") -> DataFrame:
+def shingles(docs: DataFrame) -> DataFrame:
     """(key, shingle) — distinct 3-token shingles; map-only."""
     from pyspark.sql.functions import pandas_udf
 
@@ -173,8 +172,8 @@ def shingles(docs: DataFrame, key_col: str = "url", text_col: str = "text") -> D
         return text.map(shingle_py)
 
     return docs.select(
-        F.col(key_col).alias("key"),
-        F.explode(shingle_udf(F.col(text_col))).alias("shingle"),
+        F.col("url").alias("key"),
+        F.explode(shingle_udf(F.col("text"))).alias("shingle"),
     )
 
 
@@ -197,9 +196,7 @@ def shingle_hash_values(sh: DataFrame) -> DataFrame:
     )
 
 
-def band_signature_rows(
-    docs: DataFrame, key_col: str = "url", text_col: str = "text"
-) -> DataFrame:
+def band_signature_rows(docs: DataFrame) -> DataFrame:
     """(key, band, band_sig) — the LSH banding pass alone (one Arrow
     UDF emitting 2 short strings per doc).  Persisted as its own stage
     table by the pipeline job so a documents DELTA only bands the new
@@ -212,8 +209,8 @@ def band_signature_rows(
     evaluating the UDF twice per document."""
     bands_udf = make_bands_udf()
     return docs.select(
-        F.col(key_col).alias("key"),
-        F.posexplode_outer(bands_udf(F.col(text_col))).alias(
+        F.col("url").alias("key"),
+        F.posexplode_outer(bands_udf(F.col("text"))).alias(
             "band", "band_sig"
         ),
     ).filter(F.col("band").isNotNull())
@@ -267,8 +264,6 @@ def candidate_pairs_involving(
 def verify_candidate_pairs(
     docs: DataFrame,
     cands: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact 3-shingle-Jaccard verification of candidate pairs →
@@ -294,7 +289,7 @@ def verify_candidate_pairs(
     # calls this per delta batch — each call would leak another pinned
     # copy.  The checkpoint's blocks die with their RDD reference.
     cand_sets = (
-        docs.select(F.col(key_col).alias("key"), F.col(text_col).alias("_t"))
+        docs.select(F.col("url").alias("key"), F.col("text").alias("_t"))
         .join(cand_keys, "key", "left_semi")
         .select("key", shh_udf(F.col("_t")).alias("sh"))
         .localCheckpoint(eager=False)
@@ -322,12 +317,7 @@ def verify_candidate_pairs(
     )
 
 
-def neardup_pairs(
-    docs: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-    threshold: float = 0.8,
-) -> DataFrame:
+def neardup_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """LSH candidates verified with exact 3-shingle Jaccard ≥ threshold
     → (key_a, key_b, jaccard), jaccard rounded to 6 dp for stable
     cross-engine comparison: blocking (:func:`band_signature_rows`) →
@@ -335,45 +325,41 @@ def neardup_pairs(
     (:func:`verify_candidate_pairs`), the split the pipeline job
     commits as its ``bands`` and ``neardup_pairs`` stage tables."""
     return verify_candidate_pairs(
-        docs,
-        candidate_pairs_from_bands(band_signature_rows(docs, key_col, text_col)),
-        key_col,
-        text_col,
-        threshold=threshold,
+        docs, candidate_pairs_from_bands(band_signature_rows(docs)), threshold
     )
 
 
 # --------------------------- SimHash ---------------------------------------
 
-def simhash_py(text: str, bits: int = 64) -> int:
+def simhash_py(text: str) -> int:
     """Deterministic 64-bit SimHash over pinned-tokenization tokens:
     per-bit majority vote of md5-derived token hashes.  Shared by the
     pandas UDF and the pytest twin."""
     import hashlib as _hl
 
-    acc = [0] * bits
+    acc = [0] * 64
     toks = ascii_tokens(text)
     for tok in toks:
         hv = int.from_bytes(_hl.md5(tok.encode()).digest()[:8], "big")
-        for b in range(bits):
+        for b in range(64):
             acc[b] += 1 if (hv >> b) & 1 else -1
     sig = 0
-    for b in range(bits):
+    for b in range(64):
         if acc[b] > 0:
             sig |= 1 << b
     return sig - (1 << 63)  # wrap to signed 64-bit for Spark LongType
 
 
-def simhash_np(text: str, _hash_cache: dict | None = None) -> int:
+def simhash_np(text: str, hash_cache: dict) -> int:
     """Vectorized :func:`simhash_py` twin: md5 per token stays hashlib
     (C), but the 64-bit majority vote is ONE numpy unpack+sum instead
     of a 64-iteration Python loop per token — measured 13.6 s → ~3 s
-    over the sf0.1 corpus.  ``_hash_cache`` optionally memoizes
-    token → digest bytes across calls: web-text vocabularies are Zipfy
-    (distinct tokens ≪ token occurrences), so a per-batch cache
-    removes most md5 calls.  Bit-identical by construction (same
-    integer sums, same acc>0 rule); parity with simhash_py is pinned
-    in tests/test_misc_ops.py."""
+    over the sf0.1 corpus.  ``hash_cache`` memoizes token → digest
+    bytes across calls: web-text vocabularies are Zipfy (distinct
+    tokens ≪ token occurrences), so a per-batch cache removes most md5
+    calls.  Bit-identical by construction (same integer sums, same
+    acc>0 rule); parity of the UDF with simhash_py is pinned in
+    tests/test_misc_ops.py."""
     import hashlib as _hl
 
     import numpy as np
@@ -381,17 +367,14 @@ def simhash_np(text: str, _hash_cache: dict | None = None) -> int:
     toks = ascii_tokens(text)
     if not toks:
         return -(1 << 63)
-    if _hash_cache is None:
-        digest = b"".join(_hl.md5(t.encode()).digest()[:8] for t in toks)
-    else:
-        parts = []
-        for t in toks:
-            d = _hash_cache.get(t)
-            if d is None:
-                d = _hl.md5(t.encode()).digest()[:8]
-                _hash_cache[t] = d
-            parts.append(d)
-        digest = b"".join(parts)
+    parts = []
+    for t in toks:
+        d = hash_cache.get(t)
+        if d is None:
+            d = _hl.md5(t.encode()).digest()[:8]
+            hash_cache[t] = d
+        parts.append(d)
+    digest = b"".join(parts)
     hv = np.frombuffer(digest, dtype=">u8").astype(np.uint64)
     bits = (hv[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)
     acc = (2 * bits.astype(np.int64) - 1).sum(axis=0)
@@ -412,13 +395,11 @@ def make_simhash_udf():
     return simhash_udf
 
 
-def simhash_signatures(
-    docs: DataFrame, key_col: str = "url", text_col: str = "text"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(key, simhash) — Arrow-batched; map-only."""
     udf = make_simhash_udf()
     return docs.select(
-        F.col(key_col).alias("key"), udf(F.col(text_col)).alias("simhash")
+        F.col("url").alias("key"), udf(F.col("text")).alias("simhash")
     )
 
 
@@ -441,12 +422,7 @@ def simhash_blocks(max_hamming: int) -> list[tuple[int, int]]:
     return out
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    key_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64-bit signature into
     ``max_hamming + 1`` blocks (see :func:`simhash_blocks` for the
     pigeonhole guarantee), self-join on (block_idx, block), verify
@@ -467,10 +443,8 @@ def simhash_neardup_pairs(
 
     blocks_spec = simhash_blocks(max_hamming)
     has_token = "[^" + JAVA_WS_CLASS[1:]  # any char outside the ws class
-    docs = docs.filter(
-        F.col(text_col).isNotNull() & F.col(text_col).rlike(has_token)
-    )
-    sigs = simhash_signatures(docs, key_col, text_col)
+    docs = docs.filter(F.col("text").isNotNull() & F.col("text").rlike(has_token))
+    sigs = simhash_signatures(docs)
     blocks = sigs.select(
         "key",
         "simhash",
@@ -521,7 +495,7 @@ def simhash_neardup_pairs(
 
 # --------------------------- DuckDB twins ----------------------------------
 
-def oracle_shingles_cte(pages_rel: str = "pages") -> str:
+def oracle_shingles_cte() -> str:
     # Pinned tokenization (core/tokenize): explicit ASCII class, no
     # trim, empty tokens dropped — identical to shingle_py.
     return f"""
@@ -529,7 +503,7 @@ ptok0 AS (
   SELECT url AS key,
          unnest(string_split_regex(lower(text), '{RE2_WS_CLASS}+')) AS token,
          generate_subscripts(string_split_regex(lower(text), '{RE2_WS_CLASS}+'), 1) AS pos
-  FROM {pages_rel}
+  FROM pages
 ),
 ptok AS (
   SELECT * FROM ptok0 WHERE token <> ''
@@ -608,9 +582,9 @@ WHERE round(n_common::DOUBLE / (n_a + n_b - n_common), 6) >= {threshold}
 """
 
 
-def oracle_simhash_sql(max_hamming: int = 3, pages_rel: str = "pages") -> str:
+def oracle_simhash_sql(max_hamming: int = 3) -> str:
     """DuckDB twin of :func:`simhash_neardup_pairs` (append after a
-    CTE defining ``{pages_rel}(url, text, ...)``).
+    CTE defining ``pages(url, text, ...)``).
 
     The signed-long wrap in :func:`simhash_py` (``sig - 2**63``) is,
     bit-pattern-wise, just a flip of bit 63 — applied uniformly it
@@ -625,7 +599,7 @@ def oracle_simhash_sql(max_hamming: int = 3, pages_rel: str = "pages") -> str:
 , tok AS (
   SELECT url AS key,
          unnest(string_split_regex(lower(text), '{RE2_WS_CLASS}+')) AS token
-  FROM {pages_rel}
+  FROM pages
 ),
 th AS (
   SELECT key, ('0x' || substr(md5(token), 1, 16))::UBIGINT AS hv
@@ -647,7 +621,7 @@ sigs AS (
   -- from candidacy, matching the engine's has-token filter
   SELECT p.url AS key,
          xor(r.r::UBIGINT, (1::HUGEINT << 63)::UBIGINT) AS flip
-  FROM {pages_rel} p JOIN raw r ON r.key = p.url
+  FROM pages p JOIN raw r ON r.key = p.url
 ),
 blocks AS (
   SELECT key, flip, bs.blk, (flip >> bs.off) & bs.mask::UBIGINT AS val

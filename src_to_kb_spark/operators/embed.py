@@ -47,20 +47,15 @@ def _embed_texts(texts: list[str], dim: int) -> list[list[float]]:
     return out
 
 
-def make_embed_udf(dim: int = EMBED_DIM, vec_type: str = "float"):
+def make_embed_udf(vec_type: str):
     @pandas_udf(f"array<{vec_type}>")
     def embed_udf(content: pd.Series) -> pd.Series:
-        return pd.Series(_embed_texts(content.tolist(), dim))
+        return pd.Series(_embed_texts(content.tolist(), EMBED_DIM))
 
     return embed_udf
 
 
-def embed_chunks(
-    chunks: DataFrame,
-    dim: int = EMBED_DIM,
-    content_col: str = "content",
-    vec_type: str = "float",
-) -> DataFrame:
+def embed_chunks(chunks: DataFrame, vec_type: str = "float") -> DataFrame:
     """chunks → embeddings(chunk_id, embedding) — the S9 sink shape
     ({id, embedding} per chunk, kb-generator.js:477-484).
 
@@ -70,14 +65,11 @@ def embed_chunks(
     per-bucket sums are integers and the L2 norm is sqrt of an integer,
     so both engines compute bit-identical doubles.
     """
-    udf = make_embed_udf(dim, vec_type)
-    return chunks.select(
-        "chunk_id", udf(F.col(content_col)).alias("embedding")
-    )
+    udf = make_embed_udf(vec_type)
+    return chunks.select("chunk_id", udf(F.col("content")).alias("embedding"))
 
 
-def oracle_embeddings_sql(dim: int = EMBED_DIM,
-                          chunks_rel: str = "chunks_r") -> str:
+def oracle_embeddings_sql() -> str:
     """DuckDB twin of the exploded embedding projection
     (chunk_id, bucket, val≠0 rounded 6dp) over a chunker CTE."""
     from ..core.tokenize import RE2_WS_CLASS
@@ -88,7 +80,7 @@ def oracle_embeddings_sql(dim: int = EMBED_DIM,
            lower(substr(content, 1, {MAX_EMBED_CHARS})), '{RE2_WS_CLASS}+')) AS tok,
          generate_subscripts(string_split_regex(
            lower(substr(content, 1, {MAX_EMBED_CHARS})), '{RE2_WS_CLASS}+'), 1) AS i0
-  FROM {chunks_rel}
+  FROM chunks_r
 ),
 emb_tok AS (
   SELECT chunk_id, tok,
@@ -104,7 +96,7 @@ emb_grams AS (
 ),
 emb_acc AS (
   SELECT chunk_id,
-         (('0x' || substr(md5(g), 1, 8))::UBIGINT % {dim})::INT AS bucket,
+         (('0x' || substr(md5(g), 1, 8))::UBIGINT % {EMBED_DIM})::INT AS bucket,
          sum(CASE WHEN ('0x' || substr(md5(g), 9, 2))::INT & 1 = 1
                   THEN 1 ELSE -1 END)::DOUBLE AS v
   FROM emb_grams GROUP BY 1, 2

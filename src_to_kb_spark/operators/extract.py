@@ -31,14 +31,13 @@ from ..core.textproc import clean_content
 from ..functions.classify import detect_language, ext_col, file_type
 
 
-def _make_clean_udf(include_comments: bool):
+def _make_clean_udf():
     @pandas_udf("string")
     def clean_udf(html: pd.Series) -> pd.Series:
         # bytes → utf-8 str → reference-exact clean (T1-T4)
         return html.map(
             lambda b: clean_content(
-                (b if isinstance(b, str) else bytes(b).decode("utf-8", "replace")),
-                include_comments=include_comments,
+                b if isinstance(b, str) else bytes(b).decode("utf-8", "replace")
             )
         )
 
@@ -58,11 +57,7 @@ def doc_uid(url: str) -> str:
 MAX_FILE_SIZE = 10 * 1024 * 1024
 
 
-def extract_pages(
-    pages: DataFrame,
-    include_comments: bool = True,
-    max_file_size: int = MAX_FILE_SIZE,
-) -> DataFrame:
+def extract_pages(pages: DataFrame, max_file_size: int = MAX_FILE_SIZE) -> DataFrame:
     """pages(url, warc_ts, html, text, lang, ...) → documents table.
 
     Output: (doc_uid, url, warc_ts, lang, ext, language_ext, type,
@@ -73,7 +68,7 @@ def extract_pages(
       the committed table.
     * size gate — S4 (kb-generator.js:162-164) as a pushed-down filter.
     """
-    clean_udf = _make_clean_udf(include_comments)
+    clean_udf = _make_clean_udf()
     ext = ext_col(F.col("url"))
     return (
         pages.filter(F.length("html") <= max_file_size)

@@ -1,12 +1,15 @@
 """KB table round-trip operators: the per-document summary projection,
-content reconstruction and upload completeness verification
-(SURVEY.md §2.1 S10/S14/S15 and §3.3).
+content reconstruction and embedding coverage (SURVEY.md §2.1
+S10/S14/S15 and §3.3).
 
 The reference triplicates KB loading across search/upload/mcp
 (search.js:51-80, upload.js:44-97, mcp-server.mjs:36-61); here the
-"catalog" is just `spark.read` of the stage tables, and the
-upload-time join-and-verify (upload.js:146-158) becomes a real
-anti-join — one of the few natural joins in the system.
+"catalog" is just `spark.read` of the stage tables.  The uploader's
+join-and-verify (upload.js:146-158) is one plan,
+:func:`embedding_coverage`: chunks left-joined to the distinct
+embedded chunk ids, counted per document.  The completeness check and
+the contract's sendable-set decision (``upload_sendable``) both read
+it.
 """
 
 from __future__ import annotations
@@ -51,6 +54,25 @@ def reconstruct_content(chunks: DataFrame) -> DataFrame:
     )
 
 
+def embedding_coverage(chunks: DataFrame, embeddings: DataFrame) -> DataFrame:
+    """Per document with chunks: (doc_uid, n_chunks, n_missing), where
+    n_missing counts the chunks with no embedding row.  The reference
+    keys its embeddings by chunk id in a Map (upload.js:146-150), so a
+    chunk with several embedding rows still counts once: chunks are
+    left-joined to the DISTINCT embedded chunk ids."""
+    embedded = embeddings.select("chunk_id", F.lit(1).alias("has_emb"))
+    return (
+        chunks.join(embedded.distinct(), "chunk_id", "left")
+        .groupBy("doc_uid")
+        .agg(
+            F.count("*").alias("n_chunks"),
+            F.sum(F.when(F.col("has_emb").isNull(), 1).otherwise(0)).alias(
+                "n_missing"
+            ),
+        )
+    )
+
+
 def verify_upload_completeness(
     chunks: DataFrame, embeddings: DataFrame
 ) -> DataFrame:
@@ -58,18 +80,6 @@ def verify_upload_completeness(
     whose chunks lack embeddings → (doc_uid, n_chunks, n_missing).
     Incomplete docs are skipped-with-warning by the reference; we
     return them for the caller to decide."""
-    joined = chunks.join(
-        embeddings.select("chunk_id", F.lit(1).alias("has_emb")),
-        "chunk_id",
-        "left",
-    )
-    return (
-        joined.groupBy("doc_uid")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum(F.when(F.col("has_emb").isNull(), 1).otherwise(0)).alias(
-                "n_missing"
-            ),
-        )
-        .filter(F.col("n_missing") > 0)
+    return embedding_coverage(chunks, embeddings).filter(
+        F.col("n_missing") > 0
     )

@@ -87,12 +87,12 @@ def link_mentions_windowed(
     )
 
 
-def oracle_linked_cte(mentions_rel: str = "mentions", gaz_rel: str = "gazetteer") -> str:
-    return f"""
+def oracle_linked_cte() -> str:
+    return """
 cand AS (
   SELECT m.key, m.norm, m.n_mentions, g.entity_id, g.canonical_name,
          g.prior, g.prior * m.n_mentions AS score
-  FROM {mentions_rel} m JOIN {gaz_rel} g USING (norm)
+  FROM mentions m JOIN gazetteer g USING (norm)
 ),
 linked AS (
   SELECT key, norm, n_mentions, entity_id, canonical_name, prior, score

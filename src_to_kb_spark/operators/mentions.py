@@ -23,15 +23,13 @@ from pyspark.sql import functions as F
 from ..core.tokenize import JAVA_WS_CLASS, RE2_WS_CLASS, ascii_tokens
 
 
-def tokenize(docs: DataFrame, key_col: str = "url", text_col: str = "text") -> DataFrame:
+def tokenize(docs: DataFrame) -> DataFrame:
     """(key, token) — pinned tokenization (core/tokenize): explicit
     ASCII class, empty tokens dropped; no trim (redundant under the
     empty-token filter, and engine trims disagree on control chars)."""
     return docs.select(
-        F.col(key_col).alias("key"),
-        F.explode(
-            F.split(F.lower(F.col(text_col)), f"{JAVA_WS_CLASS}+")
-        ).alias("token"),
+        F.col("url").alias("key"),
+        F.explode(F.split(F.lower("text"), f"{JAVA_WS_CLASS}+")).alias("token"),
     ).filter(F.col("token") != "")
 
 
@@ -69,8 +67,6 @@ MAX_GAZETTEER_ALIASES = 5_000_000
 def detect_mentions(
     docs: DataFrame,
     gazetteer: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
     max_aliases: int = MAX_GAZETTEER_ALIASES,
 ) -> DataFrame:
     """→ mentions(key, norm, n_mentions).
@@ -95,8 +91,8 @@ def detect_mentions(
     counts_udf = make_mention_counts_udf(aliases)
     return (
         docs.select(
-            F.col(key_col).alias("key"),
-            F.explode(counts_udf(F.col(text_col))).alias("m"),
+            F.col("url").alias("key"),
+            F.explode(counts_udf(F.col("text"))).alias("m"),
         )
         .select(
             "key",
@@ -106,15 +102,10 @@ def detect_mentions(
     )
 
 
-def detect_mentions_exploded(
-    docs: DataFrame,
-    gazetteer: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def detect_mentions_exploded(docs: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """All-Catalyst variant (token explode → broadcast join → groupBy);
     the semantics twin of :func:`detect_mentions` and of the oracle."""
-    tokens = tokenize(docs, key_col, text_col)
+    tokens = tokenize(docs)
     aliases = gazetteer.select("norm").distinct()
     return (
         tokens.join(F.broadcast(aliases), tokens.token == aliases.norm)
@@ -123,18 +114,18 @@ def detect_mentions_exploded(
     )
 
 
-def oracle_mentions_cte(pages_rel: str = "pages", gaz_rel: str = "gazetteer") -> str:
+def oracle_mentions_cte() -> str:
     """DuckDB twin of detect_mentions over a pages-shaped relation."""
     return f"""
 tok AS (
   SELECT url AS key,
          unnest(string_split_regex(lower(text), '{RE2_WS_CLASS}+')) AS token
-  FROM {pages_rel}
+  FROM pages
 ),
 mentions AS (
   SELECT t.key, t.token AS norm, count(*) AS n_mentions
   FROM tok t
-  JOIN (SELECT DISTINCT norm FROM {gaz_rel}) g ON t.token = g.norm
+  JOIN (SELECT DISTINCT norm FROM gazetteer) g ON t.token = g.norm
   WHERE t.token <> ''
   GROUP BY 1, 2
 )"""

@@ -2,13 +2,12 @@
 typed metadata, with decode / feature-extract as Arrow-batched
 ``mapInPandas`` stages.
 
-``decode=\"real\"`` genuinely decodes the codec-free container formats
-with the stdlib alone — PCM WAV (``wave``), binary PPM, uncompressed
-24-bpp BMP — dispatched by magic bytes; compressed codecs
-(jpeg/png/h264/mp3) raise NotImplementedError where PIL/ffmpeg would
-be called (not shipped in this environment).  ``decode=\"fake\"`` runs
-a deterministic pure-numpy stand-in so the Spark-side plumbing —
-schema, batch shape, partition behavior — is testable for every kind.
+The decoder handles the codec-free container formats with the stdlib
+alone — PCM WAV (``wave``), binary PPM, uncompressed 24-bpp BMP —
+dispatched by magic bytes; compressed codecs (jpeg/png/h264/mp3) raise
+NotImplementedError where PIL/ffmpeg would be called (not shipped with
+the engine).  :func:`media_from_pages` derives real container payloads
+from page text, so the whole chain runs on driver-shaped input.
 
 Schema convention:
     media(url string, kind string, payload binary,
@@ -37,15 +36,6 @@ FEATURE_DIM = 32
 FEATURES_SCHEMA = (
     "url string, kind string, n_bytes long, feature array<float>"
 )
-
-
-def _fake_decode(payload: bytes, kind: str) -> np.ndarray:
-    """Deterministic stand-in for an image/audio decoder: expands the
-    payload bytes into a pseudo-signal via seeded hashing.  Real
-    decoding would be `PIL.Image.open` / `soundfile.read` here."""
-    seed = int.from_bytes(hashlib.md5(payload or b"").digest()[:4], "big")
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(256)
 
 
 def _decode_wav(payload: bytes) -> np.ndarray:
@@ -139,7 +129,7 @@ def _decode_bmp(payload: bytes) -> np.ndarray:
     return np.concatenate(rows) / 255.0
 
 
-def _real_decode(payload: bytes, kind: str) -> np.ndarray:
+def _decode(payload: bytes, kind: str) -> np.ndarray:
     """Pure-stdlib real decoding for the container formats that need no
     third-party codec: PCM WAV (stdlib ``wave``), binary PPM, and
     uncompressed 24-bpp BMP — dispatched by magic bytes.  Compressed
@@ -154,39 +144,35 @@ def _real_decode(payload: bytes, kind: str) -> np.ndarray:
         return _decode_bmp(payload)
     raise NotImplementedError(
         f"no stdlib decoder for this payload (kind={kind}; magic="
-        f"{payload[:4]!r}) — jpeg/png/h264/mp3 require PIL/ffmpeg; "
-        "use decode='fake' for plumbing tests"
+        f"{payload[:4]!r}) — jpeg/png/h264/mp3 require PIL/ffmpeg"
     )
 
 
-def extract_media_features(
-    media: DataFrame, dim: int = FEATURE_DIM, decode: str = "fake"
-) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """media → (url, kind, n_bytes, feature) via mapInPandas.
 
     Batch shape: whole Arrow batches in, one output row per input row;
     the decoder runs per element but all orchestration is vectorized.
     Map-only — partitioning preserved from the scan.
 
-    The feature vector is ALWAYS exactly ``dim`` long (zero-padded when
-    the decoded signal is shorter than ``2*(dim-1)`` samples): a
-    payload-length-dependent output width would make every downstream
-    ``element_at(feature, i)`` an ANSI INVALID_ARRAY_INDEX crash on a
-    short/empty input row, and a schema that varies with data is the
-    wrong contract for a 100 TB table anyway.
+    The feature vector is ALWAYS exactly ``FEATURE_DIM`` long
+    (zero-padded when the decoded signal is shorter than
+    ``2*(FEATURE_DIM-1)`` samples): a payload-length-dependent output
+    width would make every downstream ``element_at(feature, i)`` an
+    ANSI INVALID_ARRAY_INDEX crash on a short/empty input row, and a
+    schema that varies with data is the wrong contract for a 100 TB
+    table anyway.
     """
-    decoder = _fake_decode if decode == "fake" else _real_decode
-
     def _fixed_dim(spec: np.ndarray) -> list:
-        out = np.zeros(dim, dtype=np.float32)
-        n = min(dim, spec.shape[0])
+        out = np.zeros(FEATURE_DIM, dtype=np.float32)
+        n = min(FEATURE_DIM, spec.shape[0])
         out[:n] = spec[:n]
         return out.tolist()
 
     def _fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             signals = [
-                decoder(b if b is not None else b"", k)
+                _decode(b if b is not None else b"", k)
                 for b, k in zip(pdf["payload"], pdf["kind"])
             ]
             feats = [
@@ -221,18 +207,20 @@ def _encode_wav(data: bytes) -> bytes:
     return buf.getvalue()
 
 
-def _encode_ppm(data: bytes, w: int = 16, h: int = 16) -> bytes:
+def _encode_ppm(data: bytes) -> bytes:
     """data bytes → binary P6 PPM raster (tiled to w*h*3 bytes)."""
+    w = h = 16
     need = w * h * 3
     data = data or b"\0"
     raster = (data * (need // len(data) + 1))[:need]
     return b"P6\n%d %d\n255\n" % (w, h) + raster
 
 
-def _encode_bmp(data: bytes, w: int = 16, h: int = 4) -> bytes:
+def _encode_bmp(data: bytes) -> bytes:
     """data bytes → uncompressed 24-bpp bottom-up BMP (tiled raster)."""
     import struct
 
+    w, h = 16, 4
     row = ((24 * w + 31) // 32) * 4
     need = row * h
     data = data or b"\0"
@@ -245,13 +233,17 @@ def _encode_bmp(data: bytes, w: int = 16, h: int = 4) -> bytes:
     return header + raster
 
 
-def media_from_pages(pages: DataFrame, max_bytes: int = 2048) -> DataFrame:
+# text bytes per page that media_from_pages encodes
+MEDIA_MAX_BYTES = 2048
+
+
+def media_from_pages(pages: DataFrame) -> DataFrame:
     """Derive a deterministic ``media`` table from the ``pages`` corpus:
-    each page's first ``max_bytes`` text bytes become a REAL container
-    payload — WAV / PPM / BMP cycling on a stable hash of the url — so
-    the stdlib ``decode=\"real\"`` path runs end-to-end on
-    driver-shaped input (no image/audio libs needed).  Map-only
-    mapInPandas; partitioning preserved from the pages scan."""
+    each page's first ``MEDIA_MAX_BYTES`` text bytes become a REAL
+    container payload — WAV / PPM / BMP cycling on a stable hash of the
+    url — so the stdlib decoder runs end-to-end on driver-shaped input
+    (no image/audio libs needed).  Map-only mapInPandas; partitioning
+    preserved from the pages scan."""
     encoders = [
         ("audio", "pcm", _encode_wav),
         ("image", "ppm", _encode_ppm),
@@ -266,7 +258,7 @@ def media_from_pages(pages: DataFrame, max_bytes: int = 2048) -> DataFrame:
                     hashlib.md5(url.encode()).digest()[:2], "big"
                 ) % len(encoders)
                 kind, codec, enc = encoders[pick]
-                payload = enc((text or "").encode("utf-8")[:max_bytes])
+                payload = enc((text or "").encode("utf-8")[:MEDIA_MAX_BYTES])
                 kinds.append(kind)
                 payloads.append(payload)
                 metas.append(
@@ -390,23 +382,3 @@ SELECT url,
   32 AS feature_dim
 FROM feat
 """
-
-
-def synthetic_media(spark, n: int = 24, seed: int = 42):
-    """Deterministic media fixture rows."""
-    import random
-
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n):
-        kind = ["image", "audio", "video"][i % 3]
-        payload = bytes(rng.getrandbits(8) for _ in range(64 + i))
-        meta = {
-            "width": 64 if kind == "image" else None,
-            "height": 48 if kind == "image" else None,
-            "sample_rate": 16000 if kind == "audio" else None,
-            "duration_ms": 3500 if kind == "video" else None,
-            "codec": {"image": "png", "audio": "pcm", "video": "h264"}[kind],
-        }
-        rows.append((f"https://m.example.com/{kind}/{i}", kind, payload, meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -7,14 +7,17 @@
   broadcast the query, map-side score, global top-k (``orderBy +
   limit`` → Spark's TakeOrderedAndProject, which is a per-partition
   top-k + driver merge, NOT a full sort/shuffle).
-* :func:`lsh_bucket` / :func:`knn_lsh` — the scale path: random
-  hyperplane (SimHash) bucketing with md5-derived deterministic
-  hyperplanes; candidates = same bucket, exact re-rank inside.  At
-  100 TB brute force is O(N) per query; LSH probes one bucket
-  (~N / 2^bits rows).
+* :func:`lsh_bucket` / :func:`knn_lsh` and :func:`knn_ivf` — the scale
+  path: random-hyperplane (SimHash) buckets or md5-derived IVF lists,
+  candidates = the query's bucket or nearest lists, exact re-rank
+  inside.  :func:`build_ann_table` commits both assignments so
+  :func:`knn_lsh_kb` / :func:`knn_ivf_kb` probe a partition-pruned scan.
+* :func:`embedding_neardup_pairs` — multi-table LSH near-duplicate
+  pairs, scored by one numpy matmul per bucket.
 
-The *baseline* brute-force variant is the oracle-checked one; LSH is
-checked for recall against it in pytest.
+Brute force, the four ANN probes and embedding near-dup each have a
+DuckDB twin in the oracle; ANN recall against brute force is measured
+in pytest.
 """
 
 from __future__ import annotations
@@ -51,7 +54,6 @@ def knn_brute_force(
     query_vec: list[float],
     k: int = 10,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine to ``query_vec`` → (id, cos_sim).  The
     ANN probes call it on their bucket / list filter as the rerank."""
@@ -59,54 +61,21 @@ def knn_brute_force(
     return (
         embeddings.select(
             F.col(id_col),
-            F.round(cosine(F.col(vec_col), q), 4).alias("cos_sim"),
+            F.round(cosine(F.col("embedding"), q), 4).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
     )
 
 
-def auto_lsh_params(
-    n_vectors: int,
-    target_bucket: int = 4096,
-    base_tables: int = 8,
-) -> dict:
-    """Corpus-size-derived LSH knobs for :func:`embedding_neardup_pairs`
-    (r3 ADVICE medium #2's other half — the REGISTERED query pins
-    n_bits=3 because the DuckDB twin must be reproducible, but a
-    production caller should derive the knobs from |corpus|).
-
-    ``n_bits`` targets an expected bucket of ``target_bucket`` vectors
-    (per-group rerank work is O(|bucket|²) flops but O(block·|bucket|)
-    memory after row-blocking): n_bits = ceil(log2(n / target_bucket)),
-    clamped to [1, 24].  Each +1 bit halves the bucket AND the per-table
-    collision probability of a true pair, so recall is recovered by
-    growing ``n_tables`` with n_bits (OR-amplification: a pair is a
-    candidate if it collides in ANY table) — one extra table per bit
-    over the base-8 at the default 3 bits.
-    """
-    import math
-
-    n_bits = min(24, max(1, math.ceil(
-        math.log2(max(n_vectors, 2) / target_bucket)
-    )))
-    return {
-        "n_bits": n_bits,
-        "n_tables": base_tables + max(0, n_bits - 3),
-        "expected_bucket": max(1, n_vectors >> n_bits),
-    }
-
-
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.4,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucketed: bool = True,
     n_bits: int = 3,
     n_tables: int = 8,
     dim: int | None = None,
-    rerank: str = "matmul",
     block_cells: int = 4_000_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cos_sim ≥
@@ -114,33 +83,21 @@ def embedding_neardup_pairs(
 
     ``bucketed=True`` (default — the registered scale path) restricts
     candidates to pairs colliding in any of ``n_tables`` independent
-    ``n_bits``-hyperplane SimHash tables, vs the ``bucketed=False``
-    exact quadratic baseline (kept as the pytest recall reference — a
-    cross join would be a cartesian product at scale).  Pass ``dim``
-    to avoid a probe job.
-
-    ``rerank`` picks how bucket-colliding candidates are scored:
-
-    * ``"matmul"`` (default): ONE ``applyInPandas`` over the
-      ``(tbl, bucket)`` groups — each group's cosines are a single
-      numpy ``G @ G.T`` and each vector ships into the group shuffle
-      once per table (``n_tables × N`` rows), not twice per candidate
-      pair; the pair dedup then runs over post-THRESHOLD survivors
-      only.  Per-group work is O(|bucket|²) — the same candidate
-      count the join variant enumerates row-by-row — and |bucket| is
-      the documented scale knob (raise ``n_bits`` with corpus size,
-      ``n_tables`` for recall), so groups stay matmul-sized at 100×
-      data.  Measured 5.0 s → ~1.3 s on the sf0.1 bench vs the join
-      rerank.
-    * ``"join"``: equi-join candidate enumeration over narrow
-      (id, id) rows, then two joins re-attach vectors/norms and a
-      Catalyst HOF fold scores each pair — the semantics twin
-      (sequential summation exactly like the DuckDB oracle); pinned
-      equal to ``"matmul"`` on the testdata in pytest.
+    ``n_bits``-hyperplane SimHash tables and scores them with ONE
+    ``applyInPandas`` over the ``(tbl, bucket)`` groups: each group's
+    cosines are a single numpy ``G @ G.T`` and each vector ships into
+    the group shuffle once per table (``n_tables × N`` rows), not twice
+    per candidate pair; the pair dedup then runs over post-threshold
+    survivors only.  Per-group work is O(|bucket|²), and |bucket| is
+    the scale knob (raise ``n_bits`` with corpus size, ``n_tables`` for
+    recall), so groups stay matmul-sized at 100× data.  The
+    ``bucketed=False`` exact quadratic baseline is kept as the pytest
+    recall reference (a cross join would be a cartesian product at
+    scale).  Pass ``dim`` to avoid a probe job.
     """
     if bucketed:
         if dim is None:
-            probe = embeddings.select(vec_col).first()
+            probe = embeddings.select("embedding").first()
             if probe is None:
                 # empty input → empty pair set, the shape every other
                 # operator produces for empty input (an empty delta /
@@ -151,84 +108,15 @@ def embedding_neardup_pairs(
                     [], f"id_a {id_t}, id_b {id_t}, cos_sim double"
                 )
             dim = len(probe[0])
-
-        bucket_udf = make_multitable_bucket_udf(dim, n_bits, n_tables)
-
-        if rerank == "matmul":
-            return _neardup_bucket_matmul(
-                embeddings, bucket_udf, threshold, id_col, vec_col, dim,
-                block_cells=block_cells,
-            )
-
-        # one numpy matmul per Arrow batch computes every table's
-        # bucket (see make_multitable_bucket_udf — the Catalyst-HOF
-        # per-plane fold evaluates interpreted and anti-scales).  The
-        # bucketed rows are computed ONCE and lazily checkpointed so
-        # the self-join's two sides share the single UDF pass instead
-        # of re-running it per side (measured ~2× on the sf0.1 bench).
-        eb = embeddings.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(bucket_udf(F.col(vec_col))).alias("tbl", "bucket"),
-        ).localCheckpoint(eager=False)
-
-        # OR-amplified multi-table LSH: a pair is a candidate if it
-        # collides in ANY of the n_tables independent n_bits-plane
-        # tables (recall 1-(1-p^b)^T vs p^b for one table).  The join
-        # is a hash-partitioned equi-join on (table, bucket); at 100×
-        # data you raise n_bits (smaller buckets) and n_tables
-        # (recall) together — never a cross join.  The band join and
-        # the pair dedup run over NARROW (id, id) rows; vectors — with
-        # their norms computed ONCE per vector, not once per pair —
-        # re-attach afterwards, so the candidate-generation shuffles
-        # never carry 64-double payloads (measured 8.3 s → ~3 s at
-        # sf0.1's 1.3M candidate pairs).
-        joined = (
-            eb.select(F.col("id").alias("id_a"), "tbl", "bucket")
-            .join(
-                eb.select(F.col("id").alias("id_b"), "tbl", "bucket"),
-                ["tbl", "bucket"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        # (id, v, ||v||) — same _norm expression the per-pair cosine
-        # used, evaluated once per vector; identical doubles
-        vecs = embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            _norm(F.col(vec_col)).alias("nrm"),
-        )
-        return (
-            joined.join(
-                vecs.select(
-                    F.col("id").alias("id_a"), F.col("v").alias("v_a"),
-                    F.col("nrm").alias("nrm_a"),
-                ),
-                "id_a",
-            )
-            .join(
-                vecs.select(
-                    F.col("id").alias("id_b"), F.col("v").alias("v_b"),
-                    F.col("nrm").alias("nrm_b"),
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "cos_sim",
-                F.round(
-                    _dot(F.col("v_a"), F.col("v_b"))
-                    / (F.col("nrm_a") * F.col("nrm_b")),
-                    4,
-                ),
-            )
-            .filter(F.col("cos_sim") >= threshold)
-            .select("id_a", "id_b", "cos_sim")
+        return _neardup_bucket_matmul(
+            embeddings, make_multitable_bucket_udf(dim, n_bits, n_tables),
+            threshold, id_col, dim, block_cells,
         )
     a = embeddings.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a")
+        F.col(id_col).alias("id_a"), F.col("embedding").alias("v_a")
     )
     b = embeddings.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b")
+        F.col(id_col).alias("id_b"), F.col("embedding").alias("v_b")
     )
     joined = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     return (
@@ -245,12 +133,10 @@ def _neardup_bucket_matmul(
     bucket_udf,
     threshold: float,
     id_col: str,
-    vec_col: str,
     dim: int,
-    block_cells: int = 4_000_000,
+    block_cells: int,
 ) -> DataFrame:
-    """Per-bucket vectorized rerank (see
-    :func:`embedding_neardup_pairs` ``rerank="matmul"``).
+    """Per-bucket vectorized rerank of :func:`embedding_neardup_pairs`.
 
     Plan shape: map (bucket UDF + posexplode) → ONE hash shuffle on
     (tbl, bucket) → FlatMapGroupsInPandas (numpy ``G @ G.T`` per
@@ -258,8 +144,8 @@ def _neardup_bucket_matmul(
     self-join, no per-pair vector re-attach, no interpreted HOF fold.
     float64 blocked summation can differ from the sequential fold by
     ~1 ulp; at 4-dp rounding a flip needs a cosine within ~1e-12 of a
-    rounding boundary — measure-zero for real embeddings, and
-    matmul==join equality is pinned on the testdata in pytest.
+    rounding boundary — measure-zero for real embeddings, and the
+    DuckDB twin's sequential sums match on the testdata.
 
     Memory bound (r3 ADVICE medium): a dense n×n cosine matrix plus
     triu index arrays is ~32 B/pair — multi-GB single allocations once
@@ -275,8 +161,8 @@ def _neardup_bucket_matmul(
 
     eb = embeddings.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.posexplode(bucket_udf(F.col(vec_col))).alias("tbl", "bucket"),
+        F.col("embedding").alias("v"),
+        F.posexplode(bucket_udf(F.col("embedding"))).alias("tbl", "bucket"),
     )
 
     # id columns keep the INPUT id type — embeddings tables in this
@@ -309,8 +195,8 @@ def _neardup_bucket_matmul(
         parts_a, parts_b, parts_c = [], [], []
         for i0 in range(0, n, blk):
             i1 = min(i0 + blk, n)
-            # same dot/outer arithmetic as the unblocked form (and the
-            # join rerank twin): each entry is dot(m_i, m_j)/(n_i·n_j)
+            # same dot/outer arithmetic as the unblocked form: each
+            # entry is dot(m_i, m_j)/(n_i·n_j)
             cos = (m[i0:i1] @ m.T) / np.outer(nrm[i0:i1], nrm)
             # upper triangle only: j > i for each row i in the block
             mask = cols[None, :] > np.arange(i0, i1)[:, None]
@@ -328,7 +214,7 @@ def _neardup_bucket_matmul(
         ib = np.concatenate(parts_b)
         # group order is arbitrary → canonicalize id_a < id_b
         # (np.where, not np.minimum: works for object/string ids too,
-        # matching the join rerank's lexicographic id_a < id_b)
+        # ordered lexicographically like the exact baseline's id_a < id_b)
         swap = ib < ia
         return pd.DataFrame(
             {"id_a": np.where(swap, ib, ia),
@@ -452,10 +338,7 @@ def knn_lsh(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    dim: int | None = None,
     n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: probe only the query's SimHash bucket,
     computing bucket assignments INLINE — the ad-hoc / first-query
@@ -464,14 +347,13 @@ def knn_lsh(
     column and the probe is a partition-pruned scan.  Recall measured
     in tests vs brute force.
     """
-    if dim is None:
-        dim = len(query_vec)
+    dim = len(query_vec)
     qb = query_lsh_bucket(query_vec, dim, n_bits)
     bucketed = embeddings.withColumn(
-        "bucket", lsh_bucket(F.col(vec_col), dim, n_bits)
+        "bucket", lsh_bucket(F.col("embedding"), dim, n_bits)
     )
     return knn_brute_force(bucketed.filter(F.col("bucket") == qb),
-                           query_vec, k, id_col, vec_col)
+                           query_vec, k)
 
 
 # ------------------- committed ANN serving table + probes ------------------
@@ -482,7 +364,6 @@ def build_ann_table(
     n_bits: int = 4,
     n_centroids: int = 8,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """BUILD-time assignment of both ANN families' probe columns:
     (id, embedding, lsh_bucket, ivf_list).  Written once as a stage
@@ -501,9 +382,9 @@ def build_ann_table(
     assign_udf = make_ivf_assign_udf(dim, n_centroids)
     return embeddings.select(
         F.col(id_col),
-        F.col(vec_col),
-        bucket_udf(F.col(vec_col))[0].alias("lsh_bucket"),
-        assign_udf(F.col(vec_col)).alias("ivf_list"),
+        "embedding",
+        bucket_udf(F.col("embedding"))[0].alias("lsh_bucket"),
+        assign_udf(F.col("embedding")).alias("ivf_list"),
     )
 
 
@@ -514,7 +395,6 @@ def knn_lsh_kb(
     dim: int | None = None,
     n_bits: int = 4,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH top-k over a COMMITTED :func:`build_ann_table` table: the
     query's bucket is computed driver-side, the scan is pruned to that
@@ -524,7 +404,7 @@ def knn_lsh_kb(
         dim = len(query_vec)
     qb = query_lsh_bucket(query_vec, dim, n_bits)
     return knn_brute_force(ann.filter(F.col("lsh_bucket") == qb),
-                           query_vec, k, id_col, vec_col)
+                           query_vec, k, id_col)
 
 
 def knn_ivf_kb(
@@ -535,7 +415,6 @@ def knn_ivf_kb(
     n_centroids: int = 8,
     nprobe: int = 2,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k over a COMMITTED :func:`build_ann_table` table: the
     nprobe nearest centroids are found driver-side, the scan is pruned
@@ -544,7 +423,7 @@ def knn_ivf_kb(
         dim = len(query_vec)
     probes = _query_probe_lists(query_vec, dim, n_centroids, nprobe)
     return knn_brute_force(ann.filter(F.col("ivf_list").isin(probes)),
-                           query_vec, k, id_col, vec_col)
+                           query_vec, k, id_col)
 
 
 def _oracle_bucket_expr(
@@ -572,7 +451,6 @@ def oracle_embedding_neardup_sql(
     dim: int = 64,
     n_bits: int = 3,
     n_tables: int = 8,
-    emb_rel: str = "embeddings",
 ) -> str:
     """DuckDB twin of the BUCKETED :func:`embedding_neardup_pairs`
     (same hyperplane literals, same multi-table bucket-equality join,
@@ -592,7 +470,7 @@ def oracle_embedding_neardup_sql(
         " * sqrt(list_dot_product(b.v, b.v))), 4)"
     )
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {emb_rel}),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 eb AS (
   {table_rows}
 ),
@@ -653,11 +531,8 @@ def knn_ivf(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    dim: int | None = None,
     n_centroids: int = 8,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: scan only the ``nprobe`` inverted lists
     nearest to the query, exact cosine rerank inside.
@@ -667,15 +542,14 @@ def knn_ivf(
     hash bucket.  At scale the assignment is a partition/cluster
     column: probing = partition pruning, scanning ~nprobe/n_centroids
     of the table."""
-    if dim is None:
-        dim = len(query_vec)
+    dim = len(query_vec)
     probes = _query_probe_lists(query_vec, dim, n_centroids, nprobe)
     assign_udf = make_ivf_assign_udf(dim, n_centroids)
     assigned = embeddings.withColumn(
-        "ivf_list", assign_udf(F.col(vec_col))
+        "ivf_list", assign_udf(F.col("embedding"))
     )
     return knn_brute_force(assigned.filter(F.col("ivf_list").isin(probes)),
-                           query_vec, k, id_col, vec_col)
+                           query_vec, k)
 
 
 def oracle_knn_ivf_sql(
@@ -683,8 +557,6 @@ def oracle_knn_ivf_sql(
     dim: int = 64,
     n_centroids: int = 8,
     nprobe: int = 2,
-    emb_rel: str = "embeddings",
-    query_vec_id: int = 0,
 ) -> str:
     """DuckDB twin of :func:`knn_ivf` for a query vector taken from
     the table: identical centroid literals, identical first-max
@@ -705,12 +577,12 @@ def oracle_knn_ivf_sql(
     )
     return f"""
 WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM {emb_rel}
-  WHERE vec_id = {query_vec_id}
+  SELECT embedding::DOUBLE[] AS qv FROM embeddings
+  WHERE vec_id = 0
 ),
 e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM {emb_rel}
-  WHERE vec_id <> {query_vec_id}
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+  WHERE vec_id <> 0
 ),
 assigned AS (
   SELECT vec_id, v,
@@ -738,8 +610,6 @@ def oracle_knn_lsh_sql(
     k: int = 10,
     dim: int = 64,
     n_bits: int = 4,
-    emb_rel: str = "embeddings",
-    query_vec_id: int = 0,
 ) -> str:
     """DuckDB twin of :func:`knn_lsh` for a query vector taken from the
     table itself (bucket parity: see :func:`_oracle_bucket_expr`)."""
@@ -749,11 +619,11 @@ def oracle_knn_lsh_sql(
 
     return f"""
 WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM {emb_rel} WHERE vec_id = {query_vec_id}
+  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
 ),
 e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM {emb_rel}
-  WHERE vec_id <> {query_vec_id}
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+  WHERE vec_id <> 0
 ),
 eb AS (
   SELECT vec_id, v, {bucket_expr('v')} AS bucket FROM e

@@ -74,10 +74,10 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.array_join(_tokens(text), " "))
 
 
-def text_stats(docs: DataFrame, key_col: str = "url", text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
+def text_stats(docs: DataFrame) -> DataFrame:
+    t = F.col("text")
     return docs.select(
-        F.col(key_col).alias("key"),
+        F.col("url").alias("key"),
         token_count(t).alias("n_tokens"),
         bpe_ish_token_count(t).alias("n_tokens_bpe"),
         F.length(t).cast("long").alias("n_chars"),

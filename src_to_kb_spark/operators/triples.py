@@ -67,15 +67,13 @@ def same_as_triples(components: DataFrame) -> DataFrame:
     )
 
 
-def build_triples(*parts: DataFrame, distinct: bool = False) -> DataFrame:
-    """Union triple parts — map-only by default.
+def build_triples(*parts: DataFrame) -> DataFrame:
+    """Union triple parts — map-only.
 
     Every part above is (subj, pred, obj)-unique by construction for
     unique input urls (mention_triples dedups its one non-unique
-    piece), and predicates never collide across parts, so the union
-    needs NO global distinct — which would shuffle the entire edge
-    table.  Pass ``distinct=True`` for untrusted parts (e.g. a crawl
-    with repeated urls).
+    piece; the job enforces unique urls at ingest), and predicates
+    never collide across parts, so the union needs NO global distinct
+    — which would shuffle the entire edge table.
     """
-    out = reduce(DataFrame.unionAll, parts)
-    return out.distinct() if distinct else out
+    return reduce(DataFrame.unionAll, parts)

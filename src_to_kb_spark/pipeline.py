@@ -162,8 +162,6 @@ class PipelineResult:
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    chunk_size: int = 1000,
-    overlap: int = 200,
     neardup_threshold: float = 0.8,
     repartition_input: bool = True,
 ) -> PipelineResult:
@@ -181,8 +179,8 @@ def run_pipeline(
 
         pages = salted_repartition(pages)
 
-    params = StageParams(gazetteer_df(spark), chunk_size, overlap,
-                         neardup_threshold)
+    params = StageParams(gazetteer_df(spark),
+                         neardup_threshold=neardup_threshold)
     tables = {"pages": pages}
     for st in STAGES:
         df = st.build(params, *(tables[i] for i in st.inputs))

@@ -88,14 +88,14 @@ def format_answer(base_answer: str, results: list[dict], mode: str) -> str:
     return out
 
 
-def answer_from_df(query: str, results_df: DataFrame, mode: str = "developer") -> dict:
+def answer_from_df(query: str, results_df: DataFrame) -> dict:
+    """:func:`generate_answer` over collected developer-mode results."""
     rows = [r.asDict() for r in results_df.collect()]
-    return generate_answer(query, rows, mode)
+    return generate_answer(query, rows)
 
 
 def oracle_search_answer_sql(
-    query: str, mode: str = "developer", limit: int = 10,
-    chunks_rel: str = "chunks_r",
+    query: str, mode: str = "developer", limit: int = 10
 ) -> str:
     """DuckDB twin of :func:`answer_from_df` over :func:`generate_answer`
     for the non-empty-results developer path (the registered contract
@@ -112,7 +112,7 @@ def oracle_search_answer_sql(
     assert mode == "developer", "oracle covers the pass-through mode"
     q = query.replace("'", "''")
     nl = "chr(10)"
-    return oracle_search_chunks_ctes(query, mode, limit, chunks_rel) + f"""
+    return oracle_search_chunks_ctes(query, mode, limit) + f"""
 , ans_files AS (
   SELECT url, min(rn) AS first_rn FROM sc_ranked WHERE rn <= 5 GROUP BY url
 ),

@@ -81,29 +81,27 @@ def search_documents(
     docs: DataFrame,
     query: str,
     limit: int = 10,
-    key_col: str = "url",
-    text_col: str = "text",
 ) -> DataFrame:
     """Document-level relevance: score = Σ_kw occurrences in
     lower(text); keep score > 0; order score desc, key asc; limit
     (search.js:146-153,192,198 lifted from chunk to doc granularity)."""
-    lt = F.lower(F.col(text_col))
+    lt = F.lower(F.col("text"))
     score = None
     for kw in keywords_of(query):
         c = _substr_count(lt, kw)
         score = c if score is None else score + c
     scored = docs.select(
-        F.col(key_col).alias("key"), score.alias("score")
+        F.col("url").alias("key"), score.alias("score")
     ).filter(F.col("score") > 0)
     return scored.orderBy(F.desc("score"), F.asc("key")).limit(limit)
 
 
-def mode_filter(results: DataFrame, mode: str, path_col: str = "url") -> DataFrame:
+def mode_filter(results: DataFrame, mode: str) -> DataFrame:
     """F2 — drop rows whose path matches any mode exclude pattern
     (modes.js:121-133)."""
     out = results
     for pat in MODE_EXCLUDE.get(mode, []):
-        out = out.filter(~F.col(path_col).rlike(pat))
+        out = out.filter(~F.col("url").rlike(pat))
     return out
 
 
@@ -245,11 +243,7 @@ def search_chunks_mcp(
     )
 
 
-def oracle_search_chunks_mcp_sql(
-    query: str,
-    limit: int = 10,
-    chunks_rel: str = "chunks_r",
-) -> str:
+def oracle_search_chunks_mcp_sql(query: str, limit: int = 10) -> str:
     """DuckDB twin of :func:`search_chunks_mcp` over a chunker CTE.
     Snippets joined ' | ' (scalar compare, same projection registered
     Spark-side)."""
@@ -278,7 +272,7 @@ def oracle_search_chunks_mcp_sql(
 
     return f"""
 , mcp_base AS (
-  SELECT *, lower(content) AS lc FROM {chunks_rel}
+  SELECT *, lower(content) AS lc FROM chunks_r
 ),
 mcp_scored AS (
   SELECT doc_uid AS document_id, url AS document_path,
@@ -363,7 +357,7 @@ def similar_documents(
 
 
 def similar_documents_mcp(
-    docs: DataFrame, target_key: Column | str, limit: int | None = None
+    docs: DataFrame, target_key: str, limit: int | None = None
 ) -> DataFrame:
     """The MCP server's similar-files variant (mcp-server.mjs:188-213):
     +2 same EXTENSION (not type), +0.5 per target path part present in
@@ -405,10 +399,7 @@ def _re2_ws_class() -> str:
 
 
 def oracle_search_chunks_ctes(
-    query: str,
-    mode: str = "developer",
-    limit: int = 10,
-    chunks_rel: str = "chunks_r",
+    query: str, mode: str = "developer", limit: int = 10
 ) -> str:
     """DuckDB twin of :func:`search_chunks` over a chunker CTE
     (``chunks_r`` from ``oracle_chunks_ctes`` with a ``lang`` column).
@@ -473,7 +464,7 @@ def oracle_search_chunks_ctes(
 
     ctes = f"""
 , sc_base AS (
-  SELECT *, lower(content) AS lc FROM {chunks_rel}
+  SELECT *, lower(content) AS lc FROM chunks_r
 ),
 sc_scored AS (
   SELECT *, ({" + ".join(score_terms)}) AS score,
@@ -497,12 +488,9 @@ sc_ranked AS (
 
 
 def oracle_search_chunks_sql(
-    query: str,
-    mode: str = "developer",
-    limit: int = 10,
-    chunks_rel: str = "chunks_r",
+    query: str, mode: str = "developer", limit: int = 10
 ) -> str:
-    return oracle_search_chunks_ctes(query, mode, limit, chunks_rel) + """
+    return oracle_search_chunks_ctes(query, mode, limit) + """
 SELECT doc_uid, url, lang, chunk_id, chunk_index, content,
        start_line, end_line, size, score,
        array_to_string(kept_snips, ' | ') AS snippets,

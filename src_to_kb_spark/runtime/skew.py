@@ -25,22 +25,21 @@ def url_host(url: F.Column) -> F.Column:
 
 def salted_repartition(
     df: DataFrame,
-    url_col: str = "url",
     n_partitions: int | None = None,
     salt: int = 16,
 ) -> DataFrame:
     """Repartition by (host, xxhash64(url) % salt)."""
-    host = url_host(F.col(url_col))
-    salt_col = F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt))
+    host = url_host(F.col("url"))
+    salt_col = F.pmod(F.xxhash64("url"), F.lit(salt))
     if n_partitions:
         return df.repartition(n_partitions, host, salt_col)
     return df.repartition(host, salt_col)
 
 
-def host_distribution(df: DataFrame, url_col: str = "url") -> DataFrame:
+def host_distribution(df: DataFrame) -> DataFrame:
     """Diagnostic: rows per host, descending — how bad is the skew."""
     return (
-        df.groupBy(url_host(F.col(url_col)).alias("host"))
+        df.groupBy(url_host(F.col("url")).alias("host"))
         .agg(F.count("*").alias("n_rows"))
         .orderBy(F.desc("n_rows"))
     )

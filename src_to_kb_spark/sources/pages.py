@@ -180,9 +180,7 @@ _VOCAB = (
 _HOSTS = ["big.example.com"] + [f"h{i}.example.com" for i in range(1, 20)]
 
 
-def synthetic_pages_rows(
-    n: int = 200, seed: int = 42
-) -> list[tuple[str, str, bytes, str, str]]:
+def synthetic_pages_rows(n: int = 200) -> list[tuple[str, str, bytes, str, str]]:
     """Deterministic (url, warc_ts_str, html, text, lang) rows.
 
     ~30% of rows on one host (Zipf-ish skew); adversarial whitespace /
@@ -190,7 +188,7 @@ def synthetic_pages_rows(
     expected *raw decoded* text (extraction input), not the cleaned
     output — cleaning is the engine's job.
     """
-    rng = random.Random(seed)
+    rng = random.Random(42)
     rows = []
     for i in range(n):
         host = _HOSTS[0] if rng.random() < 0.3 else rng.choice(_HOSTS[1:])
@@ -231,29 +229,31 @@ def synthetic_pages_rows(
     return rows
 
 
-def synthetic_pages(spark: SparkSession, n: int = 200, seed: int = 42) -> DataFrame:
-    rows = synthetic_pages_rows(n, seed)
+def synthetic_pages(spark: SparkSession, n: int = 200) -> DataFrame:
+    rows = synthetic_pages_rows(n)
     df = spark.createDataFrame(
         rows, "url string, warc_ts string, html binary, text string, lang string"
     )
     return df.withColumn("warc_ts", F.to_timestamp("warc_ts"))
 
 
-def _gen_text(
-    i: int, seed: int = 42, cluster_size: int = 4
-) -> tuple[str, str, str]:
+# near-duplicate cluster size of the distributed corpus (see _gen_text)
+CLUSTER_SIZE = 4
+
+
+def _gen_text(i: int, seed: int) -> tuple[str, str, str]:
     """Deterministic (url, lang, text) for doc ``i`` — content depends
     only on (i, seed), never on partitioning, so any parallelism level
     sees the identical corpus.
 
-    Docs come in near-duplicate clusters of ``cluster_size`` (member k
+    Docs come in near-duplicate clusters of ``CLUSTER_SIZE`` (member k
     drops its k-th line and repeats its k-th-from-last line) — real
     crawls are 30-50% near-dup, candidate-pair count scales LINEARLY
     with corpus size (C(c,2) per cluster), and the Jaccard-verify /
     canonicalize stages get realistic weight.  Replicating a corpus
     k× instead creates k-cliques of IDENTICAL docs — a quadratic
     candidate structure no real n×-larger crawl has."""
-    member = i % cluster_size
+    member = i % CLUSTER_SIZE
     base = i - member
     rng = random.Random((seed << 32) ^ base)
     host = _HOSTS[0] if rng.random() < 0.3 else rng.choice(_HOSTS[1:])

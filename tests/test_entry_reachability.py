@@ -11,6 +11,11 @@ then its body is reached too. Imports inside functions count like any other
 import, but only once their function is reached. Code that only tests reach
 is either wired into an entry point or deleted; ``KEPT`` names the few test
 references and measuring tools that stay on purpose.
+
+The same holds one level down, for options: every defaulted parameter of
+a module-level ``def`` in the package must be passed by some call in the
+package, the entry points or ``tests/``.  An option no call sets is a
+constant in disguise; ``KEPT_OPTIONS`` names the ones that stay anyway.
 """
 
 import ast
@@ -22,7 +27,6 @@ PKG = "src_to_kb_spark"
 # Top-level functions that no entry point calls but a test needs, and why.
 KEPT = {
     f"{PKG}.sources.pages.synthetic_pages": "test data generator",
-    f"{PKG}.operators.multimodal.synthetic_media": "test data generator",
     f"{PKG}.operators.dedup.shingles": "Python twin the shingle tests compare against",
     f"{PKG}.operators.dedup.shingle_hash_values": "Python twin of the shingle-hash UDF",
     f"{PKG}.operators.dedup.simhash_py": "Python twin of the SimHash UDF",
@@ -31,8 +35,11 @@ KEPT = {
     f"{PKG}.operators.mentions.detect_mentions_exploded": "explode-plan twin of mention detection",
     f"{PKG}.operators.mentions.tokenize": "Python twin of the JVM tokenizer",
     f"{PKG}.runtime.skew.host_distribution": "the skew test's measurement",
-    f"{PKG}.operators.similarity.auto_lsh_params": "to be wired into ANN serving or deleted",
 }
+
+
+# Defaulted parameters that no call passes but stay on purpose, and why.
+KEPT_OPTIONS: dict[str, str] = {}
 
 
 def _entry_files():
@@ -134,3 +141,106 @@ def test_every_module_and_definition_is_reached_from_an_entry_point():
     )
     # the allowlist names only existing definitions that still need it
     assert set(KEPT) <= qualified - reached, sorted(set(KEPT) - (qualified - reached))
+
+
+# ------------------------------ options -----------------------------------
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _own_nodes(scope):
+    """The nodes of ``scope``, not descending into nested functions."""
+    todo = list(ast.iter_child_nodes(scope))
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, _SCOPES):
+            todo.extend(ast.iter_child_nodes(n))
+
+
+def _dict_keys(node, bound):
+    """The keys a ``**node`` argument passes, or None when the walk
+    cannot tell: a dict literal, ``dict(k=...)``, or a name bound to
+    either in the same function."""
+    if isinstance(node, ast.Dict) and all(
+        isinstance(k, ast.Constant) for k in node.keys
+    ):
+        return {k.value for k in node.keys}
+    if (
+        isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+        and node.func.id == "dict" and not node.args
+        and all(k.arg for k in node.keywords)
+    ):
+        return {k.arg for k in node.keywords}
+    if isinstance(node, ast.Name):
+        return bound.get(node.id)
+    return None
+
+
+def _passed_options(files):
+    """callee name -> what its calls pass: positional indexes, keyword
+    names, ``"*"`` (every position) and ``"**"`` (every keyword)."""
+    passed = {}
+    for path in files:
+        tree = ast.parse(path.read_text())
+        alias = {
+            a.asname: a.name for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom) for a in n.names if a.asname
+        }
+        scopes = [tree] + [n for n in ast.walk(tree) if isinstance(n, _SCOPES)]
+        for scope in scopes:
+            nodes = list(_own_nodes(scope))
+            bound = {}
+            for n in nodes:
+                if (
+                    isinstance(n, ast.Assign) and len(n.targets) == 1
+                    and isinstance(n.targets[0], ast.Name)
+                ):
+                    # a name bound twice passes the keys of both
+                    name, keys = n.targets[0].id, _dict_keys(n.value, {})
+                    prev = bound.get(name, set())
+                    bound[name] = None if keys is None or prev is None else prev | keys
+            for n in nodes:
+                if not isinstance(n, ast.Call):
+                    continue
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                got = passed.setdefault(alias.get(name, name), set())
+                for i, a in enumerate(n.args):
+                    got.add("*" if isinstance(a, ast.Starred) else i)
+                for k in n.keywords:
+                    keys = {k.arg} if k.arg else _dict_keys(k.value, bound)
+                    got.update({"**"} if keys is None else keys)
+    return passed
+
+
+def _defaulted(fn):
+    """(positional parameter names, names of the defaulted ones)."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    return pos, pos[len(pos) - len(a.defaults):] + [
+        p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def test_every_option_is_passed_by_some_call():
+    mods = _package_modules()
+    files = [*mods.values(), *_entry_files(), *sorted((ROOT / "tests").glob("*.py"))]
+    passed = _passed_options(files)
+    unset = set()
+    for m, path in mods.items():
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            pos, defaulted = _defaulted(fn)
+            got = passed.get(fn.name, set())
+            unset |= {
+                f"{m}.{fn.name}({p})" for p in defaulted
+                if p not in got and "**" not in got
+                and not (p in pos and (pos.index(p) in got or "*" in got))
+            }
+    assert not unset - set(KEPT_OPTIONS), (
+        f"options no call passes: {sorted(unset - set(KEPT_OPTIONS))}"
+    )
+    # the allowlist names only options that exist and still need it
+    assert set(KEPT_OPTIONS) <= unset, sorted(set(KEPT_OPTIONS) - unset)

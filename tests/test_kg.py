@@ -82,16 +82,6 @@ def test_connected_components_golden(spark, edges, expected, driver_threshold):
     assert components_py(set(edges), set(expected)) == expected
 
 
-def test_components_with_singleton_nodes(spark):
-    edf = spark.createDataFrame([("a", "b")], "key_a string, key_b string")
-    nodes = spark.createDataFrame([("a",), ("b",), ("solo",)], "key string")
-    got = {
-        r["key"]: r["canon_id"]
-        for r in connected_components(edf, nodes=nodes).collect()
-    }
-    assert got == {"a": "a", "b": "a", "solo": "solo"}
-
-
 def test_neardup_planted_dups(spark):
     """The driver corpus plants near-duplicates (doc copied + ' dup'
     tokens appended); MinHash-LSH must find them, and agree with the

@@ -1,5 +1,5 @@
 """Parity tests for the remaining small operators: answer assembly
-(J6), SimHash, embeddings, KB round-trip ops, multimodal plumbing."""
+(J6), SimHash, embeddings, KB round-trip ops, similarity search."""
 
 from __future__ import annotations
 
@@ -16,10 +16,6 @@ from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.operators.kbio import (
     reconstruct_content,
     verify_upload_completeness,
-)
-from src_to_kb_spark.operators.multimodal import (
-    extract_media_features,
-    synthetic_media,
 )
 from src_to_kb_spark.queries.answers import generate_answer
 
@@ -124,20 +120,6 @@ def test_kbio_roundtrip(spark):
     assert len(missing) == 1 and missing[0]["n_missing"] == 1
 
 
-def test_multimodal_plumbing(spark):
-    media = synthetic_media(spark, n=24)
-    feats = extract_media_features(media).collect()
-    assert len(feats) == 24
-    assert all(len(r["feature"]) == 32 for r in feats)
-    by_url = {r["url"]: r["feature"] for r in feats}
-    feats2 = {r["url"]: r["feature"]
-              for r in extract_media_features(media).collect()}
-    assert by_url == feats2  # deterministic
-
-    with pytest.raises(Exception):
-        extract_media_features(media, decode="real").collect()
-
-
 def test_simhash_blocks_cover_64_bits():
     from src_to_kb_spark.operators.dedup import simhash_blocks
 
@@ -201,27 +183,6 @@ def test_embedding_neardup_bucketed_recall(spark):
     # OR-amplified 8×3-bit tables: 1-(1-p^3)^8 ≈ 0.9 at the 0.4-cos
     # boundary (p ≈ 1 - θ/π ≈ 0.63); floor set below the measured value
     assert recall >= 0.7, recall
-
-
-def test_embedding_neardup_matmul_equals_join_rerank(spark):
-    """The registered per-bucket matmul rerank and the join/HOF rerank
-    must emit identical (pair, 4-dp cosine) sets — same buckets, same
-    arithmetic modulo float64 summation order."""
-    from src_to_kb_spark.operators.similarity import embedding_neardup_pairs
-
-    from .conftest import SF_SMOKE
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    kw = dict(threshold=0.4, bucketed=True, n_bits=3, n_tables=8, dim=64)
-    matmul = {
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in embedding_neardup_pairs(emb, rerank="matmul", **kw).collect()
-    }
-    join = {
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in embedding_neardup_pairs(emb, rerank="join", **kw).collect()
-    }
-    assert matmul == join and matmul
 
 
 def test_similar_documents_mcp_divergence(spark):

@@ -49,13 +49,13 @@ def test_bmp_encode_decode_dimensions():
 def test_media_from_pages_real_decode_end_to_end(spark):
     pages = synthetic_pages(spark, n=60)
     media = media_from_pages(pages)
-    feats = extract_media_features(media, decode="real").toPandas()
+    feats = extract_media_features(media).toPandas()
     assert len(feats) == 60
     # the url-hash dispatch exercises more than one container kind
     assert feats["kind"].nunique() >= 2
     assert all(len(f) == 32 for f in feats["feature"])
     # deterministic: a second run is identical
-    feats2 = extract_media_features(media, decode="real").toPandas()
+    feats2 = extract_media_features(media).toPandas()
     a = feats.sort_values("url").reset_index(drop=True)
     b = feats2.sort_values("url").reset_index(drop=True)
     assert a["n_bytes"].tolist() == b["n_bytes"].tolist()
@@ -69,7 +69,7 @@ def test_multimodal_pipeline_is_map_only(spark):
     map pass — no Exchange anywhere in the physical plan, so the job
     scales with input splits and never shuffles payload bytes."""
     pages = synthetic_pages(spark, n=12)
-    feats = extract_media_features(media_from_pages(pages), decode="real")
+    feats = extract_media_features(media_from_pages(pages))
     plan = feats._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -47,7 +47,7 @@ def test_feature_dim_invariant_on_degenerate_text(spark):
         (f"https://ex.com/deg2/{i}", None, None, "", "en") for i in range(12)
     ]
     media = media_from_pages(_pages(spark, rows))
-    feats = extract_media_features(media, decode="real")
+    feats = extract_media_features(media)
     got = feats.select(
         "url",
         F.size("feature").alias("dim"),
@@ -59,7 +59,7 @@ def test_feature_dim_invariant_on_degenerate_text(spark):
     assert all(r["dim"] == FEATURE_DIM for r in got)
     # at least one row went through the WAV encoder (the crash repro)
     kinds = {r["kind"] for r in extract_media_features(
-        media, decode="real").select("kind").collect()}
+        media).select("kind").collect()}
     assert "audio" in kinds
 
 
@@ -145,26 +145,6 @@ def test_two_batch_drain_suppresses_cross_batch_dups(spark, tmp_path):
     got = spark.read.parquet(f"{out_dir}/unique_documents").collect()
     assert len(got) == 10  # one per distinct content, dups suppressed
     assert all(not r["url"].startswith("zzz/") for r in got)
-
-
-def test_auto_lsh_params_scaling_shape():
-    """The production scale knobs grow with |corpus|: buckets stay near
-    target (bounded rerank groups), tables grow with bits (recall)."""
-    from src_to_kb_spark.operators.similarity import auto_lsh_params
-
-    small = auto_lsh_params(1_000)
-    assert small["n_bits"] == 1  # floor
-    mid = auto_lsh_params(1_000_000)
-    assert mid["n_bits"] == 8 and mid["n_tables"] == 13
-    assert 2_000 <= mid["expected_bucket"] <= 4_096
-    big = auto_lsh_params(10**12)
-    assert big["n_bits"] == 24 and big["expected_bucket"] <= 65_536
-    # monotone: more corpus never means fewer bits/tables
-    prev = (0, 0)
-    for n in (10**3, 10**5, 10**7, 10**9, 10**12):
-        p = auto_lsh_params(n)
-        assert (p["n_bits"], p["n_tables"]) >= prev
-        prev = (p["n_bits"], p["n_tables"])
 
 
 def test_multimodal_meta_twin_handles_null_text(spark, tmp_path):

@@ -116,28 +116,31 @@ def test_generate_answer_mode_display_name():
 
 
 def test_matmul_rerank_string_ids(spark):
-    """String chunk_id ids (embed_chunks output) through the default
-    matmul rerank — must equal the join rerank, not crash on a
-    hard-coded bigint schema."""
+    """String chunk_id ids (embed_chunks output) through the matmul
+    rerank — must equal a bigint vec_id run over the same vectors with
+    the ids mapped, not crash on a hard-coded bigint schema."""
     import numpy as np
 
     rng = np.random.RandomState(7)
     base = rng.rand(8).tolist()
-    rows = [(f"chunk_{i:02d}", [v + 0.01 * i for v in base]) for i in range(6)]
-    emb = spark.createDataFrame(
-        rows, "chunk_id string, embedding array<double>"
+    vecs = [[v + 0.01 * i for v in base] for i in range(6)]
+    names = [f"chunk_{i:02d}" for i in range(6)]
+    kw = dict(threshold=0.9, bucketed=True, n_bits=2, n_tables=4, dim=8)
+    by_name = spark.createDataFrame(
+        list(zip(names, vecs)), "chunk_id string, embedding array<double>"
     )
-    kw = dict(
-        threshold=0.9, id_col="chunk_id", bucketed=True, n_bits=2,
-        n_tables=4, dim=8,
+    by_num = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id bigint, embedding array<double>"
     )
     got = {
         (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in embedding_neardup_pairs(emb, rerank="matmul", **kw).collect()
+        for r in embedding_neardup_pairs(
+            by_name, id_col="chunk_id", **kw
+        ).collect()
     }
     want = {
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in embedding_neardup_pairs(emb, rerank="join", **kw).collect()
+        (names[r["id_a"]], names[r["id_b"]], r["cos_sim"])
+        for r in embedding_neardup_pairs(by_num, **kw).collect()
     }
     assert got == want and got
     assert all(a < b for a, b, _ in got)  # lexicographic canonical order

@@ -59,38 +59,3 @@ def test_incremental_components_equals_from_scratch(spark, base, delta):
     # front for the same reason — a key appearing only in (x, x)
     # edges gets no label from either path
     assert _labels(merged) == _labels(scratch)
-
-
-def test_dup_embedding_count_is_distinct_chunk_ids(spark):
-    """The dup-vector metric counts DISTINCT chunk_ids whose merge saw
-    more than one embedding — duplicate chunk ROWS in a malformed
-    chunks table must not fan the count out (2 dup rows × 2 vectors is
-    still 1 duplicated chunk_id)."""
-    from pyspark.sql import functions as F
-
-    from src_to_kb_spark.sinks.upload import (
-        _docs_with_chunks,
-        merge_embeddings_into_chunks,
-    )
-
-    docs = spark.createDataFrame(
-        [("d1", "u1", 10, "en", "code", "t")],
-        "doc_uid string, url string, size long, language_ext string, "
-        "type string, text string",
-    )
-    chunks = spark.createDataFrame(
-        [("c1", "d1", 0, "x", 1, 1), ("c1", "d1", 0, "x", 1, 1),
-         ("c2", "d1", 1, "y", 2, 2)],
-        "chunk_id string, doc_uid string, chunk_index int, "
-        "content string, start_line int, end_line int",
-    )
-    emb = spark.createDataFrame(
-        [("c1", [0.1]), ("c1", [0.2]), ("c2", [0.3])],
-        "chunk_id string, embedding array<double>",
-    )
-    joined = _docs_with_chunks(
-        docs, merge_embeddings_into_chunks(chunks, emb),
-        with_embedding=True,
-    )
-    total = joined.agg(F.coalesce(F.sum("n_dup"), F.lit(0))).first()[0]
-    assert total == 1
