@@ -192,10 +192,13 @@ def _stage_cache_dir(
 
 def _committed_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunks STAGE TABLE for ``sf_dir`` — computed once, committed
-    to a cache dir keyed on (sf_dir, input mtime), then served from the
-    parquet scan.  This is the real serving shape at 100 TB: search
+    to a cache dir keyed on (sf_dir, input content), then served from
+    the parquet scans.  This is the real serving shape at 100 TB: search
     queries hit the committed table, not an extract+chunk recompute
-    per invocation."""
+    per invocation.  ``content`` is not stored but derived on read from
+    the ``documents`` committed beside it, so the cache commits the
+    documents first; the scheme tag keeps a cache dir that stored
+    content without documents from being reused."""
     import os
 
     from src_to_kb_spark.runtime.checkpoint import (
@@ -205,12 +208,15 @@ def _committed_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base = _stage_cache_dir(
-        sf_dir, "chunks", scheme="chunk:size=1000,overlap=200"
+        sf_dir, "chunks",
+        scheme="chunk:size=1000,overlap=200,content=documents",
     )
     if not is_committed(base, "chunks"):
         os.makedirs(base, exist_ok=True)
+        write_stage(_docs(spark, sf_dir), base, "documents")
         write_stage(
-            chunk_documents(_docs(spark, sf_dir), 1000, 200), base, "chunks"
+            chunk_documents(read_stage(spark, base, "documents"), 1000, 200),
+            base, "chunks",
         )
     return read_stage(spark, base, "chunks")
 
@@ -1148,7 +1154,7 @@ FROM pages p LEFT JOIN cc ON cc.doc_uid = 'doc_' || sha256(p.url)
 
     search_answer_sql = f"""WITH RECURSIVE {pages.removeprefix('WITH ')},
 {chunk_ctes}
-{oracle_search_answer_sql(SEARCH_QUERY, mode="developer", limit=10)}
+{oracle_search_answer_sql(SEARCH_QUERY, limit=10)}
 """
 
     # Flagship: the FULL pipeline (doc + mention + link + same_as +

@@ -31,8 +31,10 @@ and only triples recompute outright (a union of per-stage parts,
 rebalanced on ``pred`` before its partitioned write).  Parquet stage
 tables are zstd-compressed, and ``summary.json`` counts their rows from
 the parquet footers, so counting launches no Spark job.  A stage table
-stores only the columns it cannot recompute from the same row: the
-document and chunk ids and linked's ``score`` are derived when a stage
+stores only the columns it cannot recompute: the document and chunk
+ids, linked's ``score`` and a chunk's ``content`` (the slice of its
+committed document's text between its stored line boundaries; every
+write commits ``documents`` before ``chunks``) are derived when a stage
 is read (``runtime/checkpoint.py`` ``DERIVED``), so every stage sees
 the columns its operator produced, and a KB whose tables store them
 resumes as is.

@@ -6,13 +6,20 @@ in native SQL, so it is the one genuinely UDF-shaped operator in the
 ingest path.  It runs as a vectorized ``pandas_udf`` returning
 ``array<struct>`` per document, followed by ``posexplode`` — i.e. the
 classic Spark UDTF pattern: 1 row in, N struct rows out, all Arrow
-batched, no per-row Python round-trips.
+batched, no per-row Python round-trips.  The UDF returns each chunk's
+boundaries only (index, start and end line, size); the content is the
+slice of its document's lines between them, cut in the JVM by
+:func:`chunk_content`, so no text crosses back from Python.  The lines
+are split once per document, before the explode, so a document's cost
+stays linear in its length however many chunks it has.
 
 Map-only, shuffle-free; chunk ids are derived deterministically from
 the parent ``doc_uid`` (P7, kb-generator.js:381) so the stage is
 idempotent and resume-safe.  Both ids are pure functions of ``url`` and
-``chunk_index``, so the committed ``chunks`` table stores neither: the
-checkpoint layer drops them on write and derives them again on read
+``chunk_index``, and the content of its document's text and the
+chunk's boundaries, so the committed ``chunks`` table stores none of
+them: the checkpoint layer drops them on write and derives them again
+on read, the content from the KB's ``documents`` table
 (``runtime/checkpoint.py`` ``DERIVED``).
 """
 
@@ -25,9 +32,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..core.textproc import create_chunks
 
-CHUNK_SCHEMA = (
-    "array<struct<index:int,content:string,start_line:int,end_line:int,size:int>>"
-)
+CHUNK_SCHEMA = "array<struct<index:int,start_line:int,end_line:int,size:int>>"
 
 
 def _make_chunk_udf(chunk_size: int, overlap: int):
@@ -35,7 +40,7 @@ def _make_chunk_udf(chunk_size: int, overlap: int):
     def chunk_udf(text: pd.Series) -> pd.Series:
         return text.map(
             lambda t: [
-                (c["index"], c["content"], c["start_line"], c["end_line"], c["size"])
+                (c["index"], c["start_line"], c["end_line"], c["size"])
                 for c in create_chunks(t or "", chunk_size, overlap)
             ]
         )
@@ -50,6 +55,26 @@ def chunk_id(doc_uid: str, chunk_index: str) -> str:
     return f"concat({doc_uid}, '_chunk_', cast({chunk_index} as string))"
 
 
+def chunk_lines(text: str) -> str:
+    """The SQL expression for the lines of the SQL expression ``text``
+    that :func:`chunk_content` slices: ``create_chunks``'s
+    ``text.split('\\n')``, a null text as ``''``."""
+    return f"split(coalesce({text}, ''), '\\n', -1)"
+
+
+def chunk_content(lines: str, chunk_index: str, start_line: str,
+                  end_line: str) -> str:
+    """A chunk's content as a SQL expression over its document's
+    :func:`chunk_lines` and its stored boundaries: lines ``first`` to
+    ``end_line`` joined by newlines.  ``create_chunks`` records
+    ``start_line`` one past the true first line after an overlap carry
+    (kb-generator.js:396), also for an empty carry, so ``first`` is
+    ``start_line - 1`` for every chunk but the first."""
+    first = f"({start_line} - if({chunk_index} > 0, 1, 0))"
+    return (f"array_join(slice({lines}, {first} + 1, "
+            f"{end_line} - {first} + 1), '\\n')")
+
+
 def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 1000,
@@ -61,8 +86,14 @@ def chunk_documents(
     Defaults 1000/200 per kb-generator.js:17-18.
     """
     chunk_udf = _make_chunk_udf(chunk_size, overlap)
+    # split each document once, before the explode: a select holding the
+    # generator evaluates its other expressions once per chunk row
     exploded = docs.select(
-        "doc_uid", "url", "lang", F.explode(chunk_udf(F.col("text"))).alias("ch")
+        "doc_uid", "url", "lang", "text",
+        F.expr(chunk_lines("text")).alias("lines"),
+    ).select(
+        "doc_uid", "url", "lang", "lines",
+        F.explode(chunk_udf(F.col("text"))).alias("ch"),
     )
     return exploded.select(
         "doc_uid",
@@ -70,7 +101,8 @@ def chunk_documents(
         "lang",
         F.expr(chunk_id("doc_uid", "ch.index")).alias("chunk_id"),
         F.col("ch.index").alias("chunk_index"),
-        F.col("ch.content").alias("content"),
+        F.expr(chunk_content("lines", "ch.index", "ch.start_line",
+                             "ch.end_line")).alias("content"),
         F.col("ch.start_line").alias("start_line"),
         F.col("ch.end_line").alias("end_line"),
         F.col("ch.size").alias("size"),

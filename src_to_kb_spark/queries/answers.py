@@ -94,9 +94,7 @@ def answer_from_df(query: str, results_df: DataFrame) -> dict:
     return generate_answer(query, rows)
 
 
-def oracle_search_answer_sql(
-    query: str, mode: str = "developer", limit: int = 10
-) -> str:
+def oracle_search_answer_sql(query: str, limit: int = 10) -> str:
     """DuckDB twin of :func:`answer_from_df` over :func:`generate_answer`
     for the non-empty-results developer path (the registered contract
     query): single row (answer, confidence, total_matches, mode).
@@ -109,10 +107,9 @@ def oracle_search_answer_sql(
     """
     from .search import oracle_search_chunks_ctes
 
-    assert mode == "developer", "oracle covers the pass-through mode"
     q = query.replace("'", "''")
     nl = "chr(10)"
-    return oracle_search_chunks_ctes(query, mode, limit) + f"""
+    return oracle_search_chunks_ctes(query, "developer", limit) + f"""
 , ans_files AS (
   SELECT url, min(rn) AS first_rn FROM sc_ranked WHERE rn <= 5 GROUP BY url
 ),

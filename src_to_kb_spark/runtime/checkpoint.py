@@ -18,22 +18,35 @@ A stage is read with the schema Spark stored in its files' footers
 (:func:`read_parquet`), so a read plans without the one-task Spark job
 that parquet schema inference runs.
 
-A stage table stores only the columns it cannot recompute from the
-same row.  :data:`DERIVED` declares, per stage, the columns that are
-pure functions of others — ``doc_uid`` (``'doc_' || sha2(url, 256)``)
-in ``documents`` and ``chunks``, ``chunk_id`` (``doc_uid || '_chunk_'
-|| chunk_index``) in ``chunks`` and ``score`` (``prior × n_mentions``)
-in ``linked`` — with the operator expression that builds each and the
-column it precedes.  :func:`write_stage` drops them (Spark then prunes
-them from the write plan, so e.g. the extract write never evaluates
-``sha2(url)``), and :func:`read_stage` drops any stored copy and
-derives each again at its declared position, so a reader sees the
-columns the operator produced.  A KB written before this stored the
-ids; it reads back the same, as does a table mixing such files with
-appended ones, whichever file's footer supplies the schema.  Every
-other column is stored: ``documents.checksum`` and ``lines`` would
-need a scan of the text, and the gazetteer columns of ``linked`` would
-tie an old KB to the current gazetteer.
+A stage table stores only the columns it cannot recompute.
+:data:`DERIVED` declares, per stage, the columns that are pure
+functions of others — ``doc_uid`` (``'doc_' || sha2(url, 256)``) in
+``documents`` and ``chunks``, ``chunk_id`` (``doc_uid || '_chunk_' ||
+chunk_index``) and ``content`` in ``chunks`` and ``score`` (``prior ×
+n_mentions``) in ``linked`` — with the operator expression that builds
+each and the column it precedes.  A derived column may also read its
+document's row: a chunk's ``content`` is the slice of its document's
+text between the chunk's stored line boundaries, so a ``chunks`` read
+looks up its row of the same KB's committed ``documents`` by ``url``
+in a correlated scalar subquery (one split of the text per document).
+Spark prunes the subquery when ``content`` is not selected and
+otherwise plans it as a single join: no aggregate makes the documents
+side unique, a url with two document rows raises, and so does a chunk
+whose document row is missing, when its content is read.  Every
+writer commits ``documents`` before ``chunks``; :func:`write_stage`
+raises before writing a stage whose derived columns read a
+``documents`` table that is not committed in the same output.
+:func:`write_stage` drops the derived columns (Spark then prunes them
+from the write plan, so e.g. the extract write never evaluates
+``sha2(url)`` and the chunk write never cuts content), and
+:func:`read_stage` drops any stored copy and derives each again at its
+declared position, so a reader sees the columns the operator produced.
+A KB written before this stored the ids and the content; it reads back
+the same, as does a table mixing such files with appended ones,
+whichever file's footer supplies the schema.  Every other column is
+stored: ``documents.checksum`` and ``lines`` would need a scan of the
+text, and the gazetteer columns of ``linked`` would tie an old KB to
+the current gazetteer.
 
 The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
 :class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
@@ -66,7 +79,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..operators.chunker import chunk_id
+from ..operators.chunker import chunk_content, chunk_id, chunk_lines
 from ..operators.extract import doc_uid
 from ..operators.linking import link_score
 
@@ -81,7 +94,8 @@ _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 @dataclass(frozen=True)
 class Derived:
     """A stage column that is a pure function of the stored columns
-    ``inputs`` of its row: not stored, derived on read as the SQL
+    ``inputs`` of its row (and, when ``document``, of its document's
+    row, as :data:`_DOC_ROW`): not stored, derived on read as the SQL
     expression ``expr`` and placed before column ``before`` (last when
     None)."""
 
@@ -89,7 +103,12 @@ class Derived:
     inputs: tuple[str, ...]
     expr: str
     before: str | None = None
+    document: bool = False
 
+
+# What a derived column may read of its document's row: the committed
+# ``documents`` of the same KB, looked up by ``url`` as these columns.
+_DOC_ROW = ("url AS _doc_url", f"{chunk_lines('text')} AS _doc_lines")
 
 _DOC_UID = Derived("doc_uid", ("url",), doc_uid("url"), before="url")
 
@@ -100,6 +119,12 @@ DERIVED: dict[str, tuple[Derived, ...]] = {
         Derived("chunk_id", ("url", "chunk_index"),
                 chunk_id(doc_uid("url"), "chunk_index"),
                 before="chunk_index"),
+        Derived("content", ("url", "chunk_index", "start_line", "end_line"),
+                "if(_doc_lines IS NULL, raise_error(concat("
+                "'chunks: no committed documents row for url ', url)), "
+                + chunk_content("_doc_lines", "chunk_index", "start_line",
+                                "end_line") + ")",
+                before="start_line", document=True),
     ),
     "linked": (
         Derived("score", ("prior", "n_mentions"),
@@ -108,10 +133,11 @@ DERIVED: dict[str, tuple[Derived, ...]] = {
 }
 
 
-def _stored(df: DataFrame, stage: str) -> DataFrame:
+def _stored(df: DataFrame, stage: str, out_dir: str) -> DataFrame:
     """``df`` without its derived columns.  Raises when a derived column
     could not be derived back from what is stored (e.g. ``chunk_id``
-    without ``url``): dropping it would lose the ids."""
+    without ``url``, or ``content`` without a committed ``documents``
+    in ``out_dir``): dropping it would lose the ids or the text."""
     derived = [d for d in DERIVED.get(stage, ()) if d.name in df.columns]
     stored = set(df.columns) - {d.name for d in derived}
     for d in derived:
@@ -121,13 +147,32 @@ def _stored(df: DataFrame, stage: str) -> DataFrame:
                 f"stage {stage!r}: column {d.name!r} is derived on read "
                 f"from {list(d.inputs)}, but {missing} would not be stored"
             )
+    for d in derived:
+        if d.document and not is_committed(out_dir, "documents"):
+            raise ValueError(
+                f"stage {stage!r}: column {d.name!r} is derived on read "
+                f"from its document's row, but {out_dir!r} has no "
+                "committed 'documents'"
+            )
     return df.drop(*(d.name for d in derived)) if derived else df
 
 
-def _with_derived(df: DataFrame, stage: str) -> DataFrame:
+def _broadcastable(df: DataFrame) -> bool:
+    """Whether Spark's planner would broadcast ``df`` as a join side:
+    its estimated size is within ``spark.sql.autoBroadcastJoinThreshold``
+    (Spark's own test, on the same estimate)."""
+    limit = df.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= size <= limit
+
+
+def _with_derived(df: DataFrame, stage: str,
+                  documents: DataFrame | None) -> DataFrame:
     """``df`` with each derived column of ``stage`` whose inputs it has
-    computed again (replacing any stored copy) at its declared place.
-    One ``selectExpr`` of SQL strings: every Column built on the Python
+    computed again (replacing any stored copy) at its declared place,
+    with its row of ``documents`` when one reads its document's row.  One
+    ``selectExpr`` of SQL strings: every Column built on the Python
     side would cost a round trip to the JVM."""
     derived = [d for d in DERIVED.get(stage, ())
                if set(d.inputs) <= set(df.columns)]
@@ -135,6 +180,19 @@ def _with_derived(df: DataFrame, stage: str) -> DataFrame:
         return df
     names = {d.name for d in derived}
     kept = [c for c in df.columns if c not in names]
+    if any(d.document for d in derived):
+        # a correlated scalar subquery, not a join: Spark prunes it when
+        # no derived column that reads it is selected, and otherwise
+        # plans a single join (raising when a url has two document rows)
+        # with no aggregate to make the documents side unique
+        doc = documents.selectExpr(*_DOC_ROW)
+        if not _broadcastable(doc):
+            # a single join Spark does not broadcast plans as a nested
+            # loop; hash the documents side after a shuffle instead
+            doc = doc.hint("shuffle_hash")
+        lines = (doc.where(F.col("_doc_url") == F.col("_chunk.url").outer())
+                 .select("_doc_lines").scalar())
+        df = df.alias("_chunk").select("*", lines.alias("_doc_lines"))
     exprs = []
     for c in kept + [None]:
         exprs += [f"{d.expr} AS `{d.name}`" for d in derived
@@ -338,12 +396,15 @@ def write_stage(
     stage takes them from the written files' footers, so counting adds
     no Spark job; ``partition_id`` is the writing task's index.
 
-    The stage's :data:`DERIVED` columns are not written.
+    The stage's :data:`DERIVED` columns are not written.  Raises
+    ``ValueError``, before writing anything, when one could not be
+    derived back on read.
     """
     fmt = fmt or ParquetFormat(out_dir)
     t0 = time.time()
     commit_ref, parts = fmt.write(
-        _stored(df, stage), stage, mode=mode, partition_by=partition_by
+        _stored(df, stage, out_dir), stage, mode=mode,
+        partition_by=partition_by,
     )
     metrics = {
         "stage": stage,
@@ -370,9 +431,13 @@ def read_stage(
     spark: SparkSession, out_dir: str, stage: str,
     fmt: ParquetFormat | IcebergFormat | None = None,
 ) -> DataFrame:
-    """A committed stage table, its :data:`DERIVED` columns included."""
-    return _with_derived((fmt or ParquetFormat(out_dir)).read(spark, stage),
-                         stage)
+    """A committed stage table, its :data:`DERIVED` columns included;
+    those that read their document's row read the committed
+    ``documents`` of the same output."""
+    fmt = fmt or ParquetFormat(out_dir)
+    documents = (fmt.read(spark, "documents")
+                 if any(d.document for d in DERIVED.get(stage, ())) else None)
+    return _with_derived(fmt.read(spark, stage), stage, documents)
 
 
 def resume_delta(

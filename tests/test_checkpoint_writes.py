@@ -59,17 +59,33 @@ def _data_files(path: str) -> list[str]:
 
 def _derived(stage: str) -> dict:
     """The columns a stage read derives, spelled out independently of
-    the operators: name → expression over the stored columns."""
+    the operators: name → expression over the stored columns and, for
+    ``content``, the ``_doc_text`` that :func:`_with_document` joins."""
     doc_uid = F.concat(F.lit("doc_"), F.sha2(F.col("url"), 256))
+    # after an overlap carry start_line is one past the first line
+    first = F.col("start_line") - F.when(F.col("chunk_index") > 0, 1).otherwise(0)
     return {
         "documents": {"doc_uid": doc_uid},
         "chunks": {
             "doc_uid": doc_uid,
             "chunk_id": F.concat(doc_uid, F.lit("_chunk_"),
                                  F.col("chunk_index").cast("string")),
+            "content": F.array_join(
+                F.slice(F.split(F.col("_doc_text"), "\n", -1), first + 1,
+                        F.col("end_line") - first + 1), "\n"),
         },
         "linked": {"score": F.col("prior") * F.col("n_mentions")},
     }.get(stage, {})
+
+
+def _with_document(spark, kb: str, stage: str, df):
+    """``df`` of ``stage``, with a chunk's committed document text as
+    ``_doc_text`` for :func:`_derived`'s ``content``."""
+    if stage != "chunks":
+        return df
+    doc = read_stage(spark, kb, "documents").select(
+        F.col("url").alias("_doc_url"), F.col("text").alias("_doc_text"))
+    return df.join(doc, F.col("url") == F.col("_doc_url"), "left")
 
 
 def _footer_columns(path: str) -> set[str]:
@@ -226,7 +242,7 @@ def test_read_stage_costs_no_spark_job(spark, tmp_path):
         assert inferred.exceptAll(stored).count() == 0, stage
         for name, expr in _derived(stage).items():
             assert name in read[0].columns, (stage, name)
-            assert read[0].filter(
+            assert _with_document(spark, out, stage, read[0]).filter(
                 ~F.col(name).eqNullSafe(expr)).count() == 0, (stage, name)
 
 
@@ -296,7 +312,8 @@ def test_stored_ids_plus_append_read_back_derived(spark, tmp_path,
         back = read_stage(spark, out, stage)
         _same_frame(back, df)
         for name, expr in _derived(stage).items():
-            assert back.filter(~F.col(name).eqNullSafe(expr)).count() == 0
+            assert _with_document(spark, out, stage, back).filter(
+                ~F.col(name).eqNullSafe(expr)).count() == 0
 
 
 def test_write_stage_raises_on_ids_it_could_not_derive(spark, tmp_path,
@@ -338,4 +355,169 @@ def test_resume_over_stored_ids_kb_matches_fresh_build(spark, tmp_path,
         assert json.load(f)["mode"] == "append"
     job_main(["--input", grown, "--output", ref])
     for stage in ("triples", "components", "documents", "chunks", "linked"):
+        assert _rows(spark, out, stage) == _rows(spark, ref, stage), stage
+
+
+def _kb_with_chunks(tmp_path, stage_frames, docs=None) -> str:
+    """A KB holding ``docs`` (default: all) of the 30 pages as
+    ``documents`` and all their chunks."""
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    write_stage(stage_frames["documents"] if docs is None else docs, out,
+                "documents")
+    write_stage(stage_frames["chunks"], out, "chunks")
+    return out
+
+
+def _random_text(rng) -> str | None:
+    """Texts that stress the line slicing: empty and newline-only texts,
+    trailing newlines, lines longer than any chunk budget, carriage
+    returns, tabs and non-ASCII characters."""
+    kind = rng.randrange(12)
+    if kind == 0:
+        return rng.choice(["", "\n", "\n\n", None])
+    alphabet = "abc xyz\t\ré中\U0001f600 ."
+    lines = []
+    for _ in range(rng.randrange(1, 60)):
+        n = rng.choice([0, rng.randrange(1, 40), rng.randrange(40, 200),
+                        rng.randrange(1000, 1300)])
+        lines.append("".join(rng.choice(alphabet) for _ in range(n)))
+    return "\n".join(lines) + ("\n" if kind == 1 else "")
+
+
+@pytest.mark.parametrize("chunk_size,overlap", [
+    (1000, 200), (1000, 0), (100, 99), (50, 10), (1000, 999), (10, 5)])
+def test_read_back_content_equals_create_chunks(spark, tmp_path,
+                                                chunk_size, overlap):
+    """``content`` is not stored; the content a read derives from the
+    committed document text is ``create_chunks``'s, chunk for chunk."""
+    import random
+
+    from src_to_kb_spark.core.textproc import create_chunks
+
+    rng = random.Random(chunk_size * 1000 + overlap)
+    texts = {f"https://t/{i}": _random_text(rng) for i in range(150)}
+    docs = spark.createDataFrame(
+        [(u, "en", t) for u, t in texts.items()],
+        "url string, lang string, text string",
+    ).withColumn("doc_uid", F.concat(F.lit("doc_"), F.sha2("url", 256)))
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    write_stage(docs, out, "documents")
+    write_stage(chunk_documents(docs, chunk_size, overlap), out, "chunks")
+    assert "content" not in _footer_columns(os.path.join(out, "chunks"))
+
+    got = {(r.url, r.chunk_index): r.content for r in
+           read_stage(spark, out, "chunks")
+           .select("url", "chunk_index", "content").collect()}
+    want = {(u, c["index"]): c["content"] for u, t in texts.items()
+            for c in create_chunks(t or "", chunk_size, overlap)}
+    assert len(want) > len(texts)
+    assert got == want
+
+
+def test_chunk_ids_read_without_the_documents_join(spark, tmp_path,
+                                                   stage_frames):
+    """Only ``content`` reads the document row: a read that does not
+    select it plans the bare chunks scan, one that does scans
+    ``documents`` too."""
+    from .test_plans import _plan
+
+    out = _kb_with_chunks(tmp_path, stage_frames)
+    chunks = read_stage(spark, out, "chunks")
+    ids = _plan(chunks.select("url", "chunk_id"))
+    assert "Join" not in ids
+    assert ids.count("FileScan") == 1 and "text:string" not in ids
+    full = _plan(chunks.select("url", "content"))
+    assert "Join" in full
+    assert full.count("FileScan") == 2 and "text:string" in full
+    # the documents side is not aggregated to make it unique on url
+    assert "Aggregate" not in full and "Exchange hashpartitioning" not in full
+
+
+def test_content_read_past_broadcast_limit_hashes_documents(spark, tmp_path,
+                                                          stage_frames):
+    """A documents side Spark does not broadcast is joined by a hash
+    join after a shuffle, never by a nested loop over every pair."""
+    from .test_plans import _plan
+
+    out = _kb_with_chunks(tmp_path, stage_frames)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        chunks = read_stage(spark, out, "chunks")
+        plan = _plan(chunks.select("url", "content"))
+        assert "ShuffledHashJoin" in plan and "NestedLoop" not in plan
+        _same_frame(chunks, chunk_documents(read_stage(spark, out,
+                                                       "documents")))
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_chunk_with_two_document_rows_raises_on_content(spark, tmp_path,
+                                                        stage_frames):
+    docs = stage_frames["documents"]
+    twice = docs.unionByName(docs.orderBy("url").limit(1))
+    out = _kb_with_chunks(tmp_path, stage_frames, docs=twice)
+    chunks = read_stage(spark, out, "chunks")
+    assert chunks.select("chunk_id").count() == stage_frames["chunks"].count()
+    with pytest.raises(Exception, match="SCALAR_SUBQUERY_TOO_MANY_ROWS"):
+        chunks.select("content").collect()
+
+
+def test_chunk_without_document_row_raises_on_content(spark, tmp_path,
+                                                      stage_frames):
+    docs = stage_frames["documents"]
+    gone = docs.orderBy("url").first()["url"]
+    out = _kb_with_chunks(tmp_path, stage_frames,
+                          docs=docs.filter(F.col("url") != gone))
+    orphan = read_stage(spark, out, "chunks").filter(F.col("url") == gone)
+    assert orphan.select("chunk_id").count() > 0
+    with pytest.raises(Exception, match="no committed documents row"):
+        orphan.select("content").collect()
+
+
+def test_write_chunks_without_committed_documents_raises(spark, tmp_path,
+                                                         stage_frames):
+    out = str(tmp_path / "kb")
+    os.makedirs(out)
+    with pytest.raises(ValueError, match="documents"):
+        write_stage(stage_frames["chunks"], out, "chunks")
+    assert os.listdir(out) == []
+
+
+def test_job_kb_chunks_store_no_content(spark, tmp_path):
+    """A job KB's chunk footers hold no text; the content it reads back
+    is the chunker's over its committed documents."""
+    out = str(tmp_path / "kb")
+    job_main(["--input", SF_SMOKE, "--output", out])
+    stored = _footer_columns(os.path.join(out, "chunks"))
+    assert stored and "content" not in stored
+    _same_frame(read_stage(spark, out, "chunks"),
+                chunk_documents(read_stage(spark, out, "documents")))
+
+
+def test_resume_over_stored_content_kb_matches_fresh_build(spark, tmp_path,
+                                                           monkeypatch):
+    """A KB whose chunks store their content but not their ids (as
+    written before the content was derived) resumes into the same KB as
+    a fresh build."""
+    src = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    base, grown = str(tmp_path / "base"), str(tmp_path / "grown")
+    src.filter("doc_id < 150").write.parquet(f"{base}/documents.parquet")
+    src.filter("doc_id < 200").write.parquet(f"{grown}/documents.parquet")
+    out, ref = str(tmp_path / "kb"), str(tmp_path / "ref")
+
+    with monkeypatch.context() as m:
+        m.setitem(checkpoint.DERIVED, "chunks", tuple(
+            d for d in checkpoint.DERIVED["chunks"] if d.name != "content"))
+        job_main(["--input", base, "--output", out])
+    stored = _footer_columns(os.path.join(out, "chunks"))
+    assert "content" in stored and "chunk_id" not in stored
+
+    job_main(["--input", grown, "--output", out])
+    job_main(["--input", grown, "--output", ref])
+    assert "content" not in _footer_columns(os.path.join(ref, "chunks"))
+    for stage in ("triples", "documents", "chunks"):
         assert _rows(spark, out, stage) == _rows(spark, ref, stage), stage

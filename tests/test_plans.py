@@ -32,6 +32,14 @@ def test_ingest_is_map_only(spark):
     assert "Exchange" not in _plan(chunks), "extract+chunk must not shuffle"
 
 
+def test_chunker_splits_each_document_once(spark):
+    """The chunk content slices lines split below the explode, once per
+    document, not once per chunk row."""
+    plan = _plan(chunk_documents(extract_pages(synthetic_pages(spark, n=5))))
+    gen = plan.index("Generate")
+    assert plan.count("split(") == 1 and plan.index("split(") > gen
+
+
 def test_mentions_is_map_only_closure_udf(spark):
     """The shipped mention detector counts aliases in-row (dictionary
     in the Arrow UDF closure): no join, no exchange — one map pass."""
