@@ -38,11 +38,6 @@ write commits ``documents`` before ``chunks``) are derived when a stage
 is read (``runtime/checkpoint.py`` ``DERIVED``), so every stage sees
 the columns its operator produced, and a KB whose tables store them
 resumes as is.
-``--table-format iceberg`` routes the same stage
-I/O through Iceberg tables (``runtime/checkpoint.py``
-:class:`IcebergFormat`): writes become catalog snapshots and each
-``_committed_<stage>`` marker records the committed snapshot id — the
-resume contract is identical, the markers just point into the catalog.
 """
 
 from __future__ import annotations
@@ -66,15 +61,6 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--cpus", type=int, default=None,
                     help="local cores when the job starts its own session "
                          "(default: get_spark's)")
-    ap.add_argument("--table-format", choices=("parquet", "iceberg"),
-                    default="parquet",
-                    help="physical stage-table layer: bare parquet dirs "
-                         "under --output (default), or Iceberg tables "
-                         "<--table-prefix>.<stage> in a configured Spark "
-                         "catalog (markers then record snapshot ids)")
-    ap.add_argument("--table-prefix", default="kb.main",
-                    help="iceberg only: catalog.namespace holding the "
-                         "stage tables")
     args = ap.parse_args(argv)
 
     from concurrent.futures import Future, ThreadPoolExecutor
@@ -91,12 +77,11 @@ def main(argv: list[str] | None = None) -> dict:
         invalidated_by,
     )
     from src_to_kb_spark.runtime.checkpoint import (
-        IcebergFormat,
-        ParquetFormat,
         is_committed,
         read_stage,
         resume_delta,
         run_metrics,
+        stage_rows,
         write_stage,
     )
     from src_to_kb_spark.runtime.skew import salted_repartition
@@ -110,15 +95,6 @@ def main(argv: list[str] | None = None) -> dict:
         "kg-pipeline", cpus=args.cpus
     )
     os.makedirs(args.output, exist_ok=True)
-    # Physical table layer: --output always holds the control plane
-    # (markers/metrics/params sidecars); the stage DATA lives either in
-    # parquet dirs under it (default) or in Iceberg tables, where every
-    # commit marker records the committed snapshot id (north_star:
-    # "resumes from the last committed Iceberg snapshot checkpoint").
-    fmt = (
-        IcebergFormat(spark, args.table_prefix)
-        if args.table_format == "iceberg" else ParquetFormat(args.output)
-    )
 
     # Untrusted-input precondition: every downstream triple part is
     # (subj, pred, obj)-unique ONLY for unique urls (operators/
@@ -189,59 +165,21 @@ def main(argv: list[str] | None = None) -> dict:
     # masquerading as the 0.6 result would drop every 0.6 ≤ j < 0.8
     # pair from components and same_as triples.  Record the params; on
     # mismatch invalidate each stage whose identity holds a changed
-    # key, plus everything downstream of it in the stage graph.
+    # key, plus everything downstream of it in the stage graph.  Only
+    # these keys are compared, so a sidecar holding others (an older
+    # job also recorded its table layer) still resumes.
     params = {
         "chunk_size": args.chunk_size,
         "overlap": args.overlap,
         "neardup_threshold": args.neardup_threshold,
-        # The PHYSICAL table layer is part of the identity too: a
-        # _committed_documents marker written by a parquet run says
-        # nothing about the state of Iceberg tables under
-        # --table-prefix (and vice versa) — trusting it would resume
-        # against a different table layer's contents or crash with
-        # TABLE_OR_VIEW_NOT_FOUND deep inside resume_delta.
-        "table_format": args.table_format,
-        "table_prefix": args.table_prefix,
     }
     params_path = os.path.join(args.output, "_scheme_params")
     prev_params = {}
     if os.path.exists(params_path):
         with open(params_path) as f:
             prev_params = json.load(f)
-
-    def marker_layer():
-        # Pre-format-era params files lack the format keys; the KB's
-        # actual layer is still knowable from marker CONTENT (Iceberg
-        # markers carry 'snapshot=<id>', parquet markers a timestamp),
-        # read from the first marker that survives, documents first.
-        # None when no marker can be read: an unknown layer never
-        # matches, so its markers are not trusted.
-        for st in STAGES:
-            try:
-                with open(marker(st.name)) as fh:
-                    head = fh.read()
-            except OSError:
-                continue
-            return "iceberg" if head.startswith("snapshot=") else "parquet"
-        return None
-
-    def identity(p):
-        # A legacy iceberg sidecar stored no prefix, so the caller's is
-        # assumed (resume-with-same-args, the only recoverable case).
-        # The prefix otherwise participates only under iceberg.
-        f = p.get("table_format") or marker_layer()
-        prefix = p.get("table_prefix", args.table_prefix)
-        return {
-            "table_layer": (f, prefix if f == "iceberg" else None),
-            "chunk_size": p.get("chunk_size"),
-            "overlap": p.get("overlap"),
-            "neardup_threshold": p.get("neardup_threshold"),
-        }
-
-    changed = set()
-    if prev_params and prev_params != params:
-        prev_id, cur_id = identity(prev_params), identity(params)
-        changed = {k for k in cur_id if prev_id[k] != cur_id[k]}
+    changed = {k for k, v in params.items()
+               if prev_params and prev_params.get(k) != v}
     # Committed bands are only delta-joinable against bands of the
     # SAME signature scheme: a KB written by an older scheme would
     # otherwise band-join with zero collisions and silently miss every
@@ -266,7 +204,7 @@ def main(argv: list[str] | None = None) -> dict:
     # as one partition.
     docs_delta = None  # extracted rows appended this run, if resuming
     if is_committed(args.output, root.name):
-        delta = resume_delta(pages, spark, args.output, root.name, fmt=fmt)
+        delta = resume_delta(pages, spark, args.output, root.name)
         if delta.limit(1).count() > 0:
             docs_delta = root.delta(
                 sp, {}, {"pages": salted_repartition(delta)}
@@ -275,12 +213,11 @@ def main(argv: list[str] | None = None) -> dict:
             # downstream stages reconcile, a crash must invalidate them
             with open(pending_marker, "w") as f:
                 f.write("reconciling documents delta")
-            write_stage(docs_delta, args.output, root.name, mode="append",
-                        fmt=fmt)
+            write_stage(docs_delta, args.output, root.name, mode="append")
     else:
         write_stage(root.build(sp, salted_repartition(pages)), args.output,
-                    root.name, fmt=fmt)
-    documents = read_stage(spark, args.output, root.name, fmt=fmt)
+                    root.name)
+    documents = read_stage(spark, args.output, root.name)
 
     # -- downstream stages, each committed-or-computed ---------------------
     # Without a documents delta a committed stage is re-read as is.
@@ -307,22 +244,21 @@ def main(argv: list[str] | None = None) -> dict:
         elif (committed and st.delta is not None
               and all(v is not None for v in new.values())):
             if st.seeded:
-                full[st.name] = read_stage(spark, args.output, st.name,
-                                           fmt=fmt)
+                full[st.name] = read_stage(spark, args.output, st.name)
             # materialized BEFORE the write: downstream deltas re-read
             # it, and a seeded delta overwrites the table it reads
             rows = st.delta(sp, full, new).localCheckpoint()
             write_stage(rows, args.output, st.name,
                         mode="overwrite" if st.seeded else "append",
-                        partition_by=part, fmt=fmt)
+                        partition_by=part)
             added = None if st.seeded else rows
         else:
             write_stage(st.build(sp, *(full[n] for n in st.inputs)),
-                        args.output, st.name, partition_by=part, fmt=fmt)
+                        args.output, st.name, partition_by=part)
         if st.name == "bands":
             with open(scheme_path, "w") as f:
                 f.write(BANDS_SCHEME)
-        return read_stage(spark, args.output, st.name, fmt=fmt), added
+        return read_stage(spark, args.output, st.name), added
 
     # chunks, mention-linking, and near-dup→components are independent
     # given the committed documents table — their stage writes run as
@@ -348,7 +284,7 @@ def main(argv: list[str] | None = None) -> dict:
         os.remove(pending_marker)
 
     summary = {
-        n: fmt.count(spark, n)
+        n: stage_rows(args.output, n)
         for n in ("documents", "chunks", "linked", "neardup_pairs",
                   "components", "triples")
     }

@@ -224,9 +224,8 @@ def incremental_components(
     map-side broadcast joins (semi-join against the delta's endpoint
     keys; remap join against the merged-canon map) — never shuffled,
     never iterated.  The O(log n)-round star algorithm sees only the
-    contracted delta edges.  On Iceberg the final write is a MERGE of
-    the O(affected) changed rows; locally the caller overwrites the
-    (small, paired-nodes-only) stage table.
+    contracted delta edges.  The caller overwrites the (small,
+    paired-nodes-only) stage table.
     """
     lbl = committed.select("key", "canon_id")
     # drop self-loops up front, exactly like connected_components: a

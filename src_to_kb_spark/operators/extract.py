@@ -16,7 +16,7 @@ Execution shape (100 TB view):
   drops it on write and derives it again on read
   (``runtime/checkpoint.py`` ``DERIVED``);
 * map-only: no shuffle — the stage preserves the input partitioning,
-  so at scale it pipelines directly off the Parquet/Iceberg scan with
+  so at scale it pipelines directly off the parquet scan with
   filters and column pruning pushed down.
 """
 

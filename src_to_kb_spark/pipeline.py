@@ -103,8 +103,7 @@ def _bands(p: StageParams, documents: DataFrame) -> DataFrame:
 STAGES: tuple[Stage, ...] = (
     Stage("documents", ("pages",),
           lambda p, pages: extract_pages(pages),
-          delta=lambda p, full, new: extract_pages(new["pages"]),
-          identity=("table_layer",)),
+          delta=lambda p, full, new: extract_pages(new["pages"])),
     Stage("chunks", ("documents",), _chunks,
           delta=lambda p, full, new: _chunks(p, new["documents"]),
           identity=("chunk_size", "overlap")),

@@ -2,12 +2,13 @@
 (SURVEY.md §7.2 stage 8; north_rule: "resumable from checkpoint with
 per-partition lineage + metrics").
 
-Every pipeline stage writes to its own table; a ``_metrics`` sidecar
-records per-partition row counts and wall time, and a ``_committed``
-marker makes the write atomic-observable.  Restart = anti-join the
-committed keys.
+Every pipeline stage writes its own parquet directory under the output
+dir; a ``_metrics`` sidecar records per-partition row counts and wall
+time, and a ``_committed`` marker (its content the commit timestamp)
+makes the write atomic-observable.  Restart = anti-join the committed
+keys.
 
-A parquet stage is written once, zstd-compressed, and never read back:
+A stage is written once, zstd-compressed, and never read back:
 the lineage counts come from the row counts in the footers of the files
 the write added (read in-process, no Spark job), keyed by the writing
 task's index in each ``part-NNNNN`` file name.  A partitioned write
@@ -47,18 +48,6 @@ whichever file's footer supplies the schema.  Every other column is
 stored: ``documents.checksum`` and ``lines`` would need a scan of the
 text, and the gazetteer columns of ``linked`` would tie an old KB to
 the current gazetteer.
-
-The PHYSICAL table layer is pluggable (:class:`ParquetFormat` /
-:class:`IcebergFormat`, ``--table-format`` on the pipeline job).  The
-default writes bare parquet directories under ``out_dir``.  On an
-Iceberg deployment the same stages go through
-``df.writeTo(catalog.ns.stage)`` / ``spark.read.table(...)`` — writes
-are snapshot-atomic in the catalog — and the ``_committed_<stage>``
-marker CONTENT becomes the committed snapshot id, so "resumes from the
-last committed Iceberg snapshot checkpoint" (BASELINE.json north_star)
-is literally the marker contract: the control flow (markers, params
-sidecars, ``_delta_pending`` crash recovery) is identical across
-formats, only the bytes under the table ident change.
 
 The reference analog is the run-stats object + summary sink
 (kb-generator.js:36-41, :487-509) and the API's background-generation
@@ -249,142 +238,15 @@ def _lineage(files: set[str]) -> list[dict]:
     ]
 
 
-class ParquetFormat:
-    """Default physical layer: one parquet directory per stage under
-    ``out_dir``.  ``commit_ref`` has no catalog snapshot to point at,
-    so the marker carries the write timestamp (pre-round-5 behavior,
-    byte-compatible with existing KBs)."""
-
-    name = "parquet"
-
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-
-    def _path(self, stage: str) -> str:
-        return os.path.join(self.out_dir, stage)
-
-    def write(
-        self,
-        df: DataFrame,
-        stage: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> tuple[str | None, list[dict]]:
-        """→ (commit ref, per-partition row counts of the files this
-        write added).  An append lists the table before and after, so
-        only its own files count."""
-        path = self._path(stage)
-        before = _part_files(path) if mode == "append" else set()
-        if partition_by:
-            df = df.hint("rebalance", *partition_by)
-        writer = df.write.mode(mode).option("compression", CODEC)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        return None, _lineage(_part_files(path) - before)
-
-    def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return read_parquet(spark, self._path(stage))
-
-    def count(self, spark: SparkSession, stage: str) -> int:
-        return sum(_footer_rows(p) for p in _part_files(self._path(stage)))
-
-
-class IcebergFormat:
-    """Iceberg physical layer: stages are tables
-    ``<table_prefix>.<stage>`` in a configured Spark catalog; every
-    write commits a snapshot and :func:`write_stage` records that
-    snapshot id in the ``_committed_<stage>`` marker.
-
-    Requires the Iceberg Spark runtime on the classpath and a catalog
-    conf, e.g.::
-
-        spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \\
-          --conf spark.sql.catalog.kb=org.apache.iceberg.spark.SparkCatalog \\
-          --conf spark.sql.catalog.kb.type=hadoop \\
-          --conf spark.sql.catalog.kb.warehouse=/data/warehouse \\
-          jobs/run_kg_pipeline.py --table-format iceberg --table-prefix kb.crawl ...
-
-    Fails fast at construction when the catalog is not configured (the
-    sandbox ships no Iceberg jar — ``tests/test_runtime.py`` pins the
-    error message and skips the live path when the jar is absent)."""
-
-    name = "iceberg"
-
-    def __init__(self, spark: SparkSession, table_prefix: str):
-        catalog = table_prefix.split(".", 1)[0]
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-        if not impl:
-            raise RuntimeError(
-                f"--table-format iceberg needs a configured Spark "
-                f"catalog: set spark.sql.catalog.{catalog} (e.g. "
-                "org.apache.iceberg.spark.SparkCatalog) plus its "
-                "type/warehouse confs, and ship the "
-                "iceberg-spark-runtime jar via --packages"
-            )
-        self.table_prefix = table_prefix
-
-    def _ident(self, stage: str) -> str:
-        return f"{self.table_prefix}.{stage}"
-
-    def write(
-        self,
-        df: DataFrame,
-        stage: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> tuple[str | None, list[dict]]:
-        ident = self._ident(stage)
-        spark = df.sparkSession
-        w = df.writeTo(ident)
-        if mode == "append" and spark.catalog.tableExists(ident):
-            w.append()
-        else:
-            if partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
-        # The table's CURRENT snapshot (the `main` branch head in the
-        # `refs` metadata table), not `snapshots ORDER BY committed_at`:
-        # committed_at has millisecond granularity, so a timestamp sort
-        # is ambiguous even in the single-writer case.  Each stage
-        # table has ONE writer (this job) by design, so the branch head
-        # read here IS this write's commit; under an out-of-contract
-        # concurrent writer the head could advance between commit and
-        # read — a far narrower window than the timestamp sort, and
-        # "the last committed snapshot checkpoint" (the resume
-        # contract) is still what the marker records.
-        row = spark.sql(
-            f"SELECT snapshot_id FROM {ident}.refs WHERE name = 'main'"
-        ).first()
-        # lineage: an overwrite reads the written table back, an append
-        # counts the delta (re-reading the table would make every
-        # per-document delta append O(corpus))
-        counted = df if mode == "append" else self.read(spark, stage)
-        per_part = (
-            counted.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("n_rows"))
-            .collect()
-        )
-        return f"snapshot={row[0]}" if row else None, sorted(
-            (r.asDict() for r in per_part), key=lambda d: d["partition_id"]
-        )
-
-    def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.table(self._ident(stage))
-
-    def count(self, spark: SparkSession, stage: str) -> int:
-        return self.read(spark, stage).count()
-
-
 def write_stage(
     df: DataFrame,
     out_dir: str,
     stage: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    fmt: ParquetFormat | IcebergFormat | None = None,
 ) -> dict:
-    """Write a stage output + per-partition lineage metrics.
+    """Write a stage output as a parquet directory under ``out_dir`` +
+    per-partition lineage metrics.
 
     Returns the metrics dict: {stage, wall_sec, n_rows, partitions:
     [{partition_id, n_rows}, ...]}.
@@ -392,24 +254,29 @@ def write_stage(
     The counts describe THIS write: the whole table for
     ``mode='overwrite'``, only the appended rows for ``mode='append'``
     (the resume path's delta writes — the sidecar then holds the
-    lineage of the increment, not of the cumulative table).  A parquet
-    stage takes them from the written files' footers, so counting adds
-    no Spark job; ``partition_id`` is the writing task's index.
+    lineage of the increment, not of the cumulative table).  They come
+    from the footers of the files the write added (an append lists the
+    table before and after), so counting adds no Spark job;
+    ``partition_id`` is the writing task's index.
 
     The stage's :data:`DERIVED` columns are not written.  Raises
     ``ValueError``, before writing anything, when one could not be
     derived back on read.
     """
-    fmt = fmt or ParquetFormat(out_dir)
     t0 = time.time()
-    commit_ref, parts = fmt.write(
-        _stored(df, stage, out_dir), stage, mode=mode,
-        partition_by=partition_by,
-    )
+    df = _stored(df, stage, out_dir)
+    path = os.path.join(out_dir, stage)
+    before = _part_files(path) if mode == "append" else set()
+    if partition_by:
+        df = df.hint("rebalance", *partition_by)
+    writer = df.write.mode(mode).option("compression", CODEC)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    parts = _lineage(_part_files(path) - before)
     metrics = {
         "stage": stage,
         "mode": mode,
-        "format": fmt.name,
         "wall_sec": round(time.time() - t0, 3),
         "n_rows": sum(p["n_rows"] for p in parts),
         "partitions": parts,
@@ -417,9 +284,7 @@ def write_stage(
     with open(os.path.join(out_dir, f"_metrics_{stage}.json"), "w") as f:
         json.dump(metrics, f, indent=1)
     with open(os.path.join(out_dir, f"_committed_{stage}"), "w") as f:
-        # parquet: commit wall time; iceberg: the committed snapshot id
-        # — the marker IS the "last committed snapshot checkpoint"
-        f.write(commit_ref or str(int(time.time())))
+        f.write(str(int(time.time())))
     return metrics
 
 
@@ -427,32 +292,35 @@ def is_committed(out_dir: str, stage: str) -> bool:
     return os.path.exists(os.path.join(out_dir, f"_committed_{stage}"))
 
 
-def read_stage(
-    spark: SparkSession, out_dir: str, stage: str,
-    fmt: ParquetFormat | IcebergFormat | None = None,
-) -> DataFrame:
+def stage_rows(out_dir: str, stage: str) -> int:
+    """Rows of a committed stage table, summed from its files' footers
+    (no Spark job)."""
+    return sum(_footer_rows(p)
+               for p in _part_files(os.path.join(out_dir, stage)))
+
+
+def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     """A committed stage table, its :data:`DERIVED` columns included;
     those that read their document's row read the committed
     ``documents`` of the same output."""
-    fmt = fmt or ParquetFormat(out_dir)
-    documents = (fmt.read(spark, "documents")
+    documents = (read_parquet(spark, os.path.join(out_dir, "documents"))
                  if any(d.document for d in DERIVED.get(stage, ())) else None)
-    return _with_derived(fmt.read(spark, stage), stage, documents)
+    return _with_derived(read_parquet(spark, os.path.join(out_dir, stage)),
+                         stage, documents)
 
 
 def resume_delta(
     inputs: DataFrame, spark: SparkSession, out_dir: str, stage: str,
-    key: str = "url",
-    fmt: ParquetFormat | IcebergFormat | None = None,
 ) -> DataFrame:
-    """Rows of ``inputs`` not yet present in the committed stage output
-    — the restart anti-join (left_anti keeps the big side map-local
-    when the committed key set is broadcastable; at scale this is a
-    shuffled anti-join on the key, which is exactly what we want)."""
+    """Rows of ``inputs`` whose ``url`` is not yet present in the
+    committed stage output — the restart anti-join (left_anti keeps the
+    big side map-local when the committed key set is broadcastable; at
+    scale this is a shuffled anti-join on the key, which is exactly
+    what we want)."""
     if not is_committed(out_dir, stage):
         return inputs
-    done = read_stage(spark, out_dir, stage, fmt=fmt).select(key).distinct()
-    return inputs.join(done, on=key, how="left_anti")
+    done = read_stage(spark, out_dir, stage).select("url").distinct()
+    return inputs.join(done, on="url", how="left_anti")
 
 
 def run_metrics(out_dir: str) -> list[dict]:

@@ -16,11 +16,9 @@ to obtain it:
   pytest (FIXTURES.md §1).  Skew is real, not decorative: ~30% of rows
   land on one host so salted-repartition paths are exercised.
 
-At 100 TB the "adapter" disappears: ``spark.read.table('cc.pages')``
-over a partitioned Iceberg/Parquet table (the stage-table side of the
-same deployment is real code — ``runtime/checkpoint.py``
-:class:`IcebergFormat` behind ``--table-format iceberg``); everything
-downstream only sees the ``pages`` schema.
+At 100 TB the "adapter" disappears: :func:`load_pages` reads a real,
+partitioned parquet pages table directly; everything downstream only
+sees the ``pages`` schema.
 """
 
 from __future__ import annotations
@@ -131,7 +129,7 @@ def load_pages(spark: SparkSession, sf_dir: str, keep_keys: bool = True) -> Data
       the pages shape;
     * a REAL pages table — ``sf_dir`` is itself a parquet dataset with
       the north-rule columns ``(url, warc_ts, html, text, lang)``
-      (e.g. an Iceberg/parquet export of a crawl) → read directly.
+      (e.g. a parquet export of a crawl) → read directly.
       Anything else fails fast with the column diff rather than
       silently re-synthesizing urls from a lookalike table.
 

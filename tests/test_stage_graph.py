@@ -17,7 +17,6 @@ ALL = {"documents", "chunks", "linked", "bands", "neardup_pairs",
     ({"chunk_size", "overlap"}, {"chunks", "triples"}),
     ({"neardup_threshold"}, {"neardup_pairs", "components", "triples"}),
     ({"bands_scheme"}, {"bands", "neardup_pairs", "components", "triples"}),
-    ({"table_layer"}, ALL),
     (set(), set()),
 ])
 def test_invalidation_closure(changed, stale):
