@@ -26,18 +26,16 @@ gazetteer and a driver-labelled components table are local relations
 Resume cost is O(delta), not O(corpus): per-doc stages (documents,
 chunks, linked, bands) append rows derived from the new docs only,
 near-dup pairs come from joining the delta's bands against the
-committed bands table, components update from the committed labeling,
-and only triples recompute outright (a union of per-stage parts,
-rebalanced on ``pred`` before its partitioned write).  Parquet stage
-tables are zstd-compressed, and ``summary.json`` counts their rows from
-the parquet footers, so counting launches no Spark job.  A stage table
-stores only the columns it cannot recompute: the document and chunk
-ids, linked's ``score`` and a chunk's ``content`` (the slice of its
-committed document's text between its stored line boundaries; every
-write commits ``documents`` before ``chunks``) are derived when a stage
-is read (``runtime/checkpoint.py`` ``DERIVED``), so every stage sees
-the columns its operator produced, and a KB whose tables store them
-resumes as is.
+committed bands table, and components, the one table a resume rewrites
+whole, update from the committed labeling.  Parquet stage tables are
+zstd-compressed; ``summary.json`` counts their rows from the footers,
+and the triples with one count of the view.  A KB stores only what
+it cannot recompute: the ids, linked's ``score``, a chunk's
+``content`` (its document's text between its stored line bounds;
+every write commits ``documents`` before ``chunks``) and the triples
+are derived when read (``runtime/checkpoint.py`` ``DERIVED`` and
+``VIEWS``), so every stage sees what its operator produced; a KB that
+stores them resumes as is, less its stored triples.
 """
 
 from __future__ import annotations
@@ -45,6 +43,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -77,6 +76,7 @@ def main(argv: list[str] | None = None) -> dict:
         invalidated_by,
     )
     from src_to_kb_spark.runtime.checkpoint import (
+        VIEWS,
         is_committed,
         read_stage,
         resume_delta,
@@ -143,10 +143,13 @@ def main(argv: list[str] | None = None) -> dict:
     def marker(st):
         return os.path.join(args.output, f"_committed_{st}")
 
+    def remove(path):
+        if os.path.exists(path):
+            os.remove(path)
+
     def invalidate(stages):
         for st in stages:
-            if os.path.exists(marker(st)):
-                os.remove(marker(st))
+            remove(marker(st))
 
     # Crash recovery: a `_delta_pending` marker means a previous run
     # died between appending a documents delta and reconciling the
@@ -158,6 +161,13 @@ def main(argv: list[str] | None = None) -> dict:
     if os.path.exists(pending_marker):
         invalidate(sorted(downstream({root.name}) - {root.name}))
         os.remove(pending_marker)
+
+    # An older job stored the views; a stale copy would disagree with
+    # the view after a delta.  Marker first: no committed partial table.
+    for v in VIEWS:
+        invalidate([v])
+        shutil.rmtree(os.path.join(args.output, v), ignore_errors=True)
+        remove(os.path.join(args.output, f"_metrics_{v}.json"))
 
     # Stage PARAMETERS are part of the resume identity: a committed
     # chunks table built with --chunk-size 1000 is NOT the answer to a
@@ -221,13 +231,13 @@ def main(argv: list[str] | None = None) -> dict:
 
     # -- downstream stages, each committed-or-computed ---------------------
     # Without a documents delta a committed stage is re-read as is.
-    # With one, a stage that can absorb it does so in O(delta):
+    # With one, every stage absorbs it in O(delta):
     # per-document stages (chunks, linked, bands) append rows derived
     # from the new documents only, near-dup pairs append the pairs the
     # delta's bands find against all bands, and components update from
     # the committed labeling (quotient-graph contraction, see
-    # incremental_components).  Anything else — triples, or a stage
-    # whose input was rebuilt whole this run — recomputes outright.
+    # incremental_components).  A stage whose input was rebuilt whole
+    # this run recomputes outright.
     # The seed is whatever components table was committed when the
     # stage is reached: a crash mid-delta re-enters through the
     # _delta_pending invalidation above, which also clears the seed.
@@ -236,25 +246,22 @@ def main(argv: list[str] | None = None) -> dict:
         appended to it or None)."""
         full = {n: inputs[n][0] for n in st.inputs}
         new = {n: inputs[n][1] for n in st.inputs}
-        part = list(st.partition_by) if st.partition_by else None
         added = None
         committed = is_committed(args.output, st.name)
         if committed and docs_delta is None:
             pass
-        elif (committed and st.delta is not None
-              and all(v is not None for v in new.values())):
+        elif committed and all(v is not None for v in new.values()):
             if st.seeded:
                 full[st.name] = read_stage(spark, args.output, st.name)
             # materialized BEFORE the write: downstream deltas re-read
             # it, and a seeded delta overwrites the table it reads
             rows = st.delta(sp, full, new).localCheckpoint()
             write_stage(rows, args.output, st.name,
-                        mode="overwrite" if st.seeded else "append",
-                        partition_by=part)
+                        mode="overwrite" if st.seeded else "append")
             added = None if st.seeded else rows
         else:
             write_stage(st.build(sp, *(full[n] for n in st.inputs)),
-                        args.output, st.name, partition_by=part)
+                        args.output, st.name)
         if st.name == "bands":
             with open(scheme_path, "w") as f:
                 f.write(BANDS_SCHEME)
@@ -280,14 +287,17 @@ def main(argv: list[str] | None = None) -> dict:
         for f in futures.values():
             f.result()
     # every downstream stage is now consistent with the appended delta
-    if os.path.exists(pending_marker):
-        os.remove(pending_marker)
+    remove(pending_marker)
 
     summary = {
         n: stage_rows(args.output, n)
         for n in ("documents", "chunks", "linked", "neardup_pairs",
-                  "components", "triples")
+                  "components")
     }
+    # the triples view over the stage tables read above: what
+    # read_stage(…, "triples") returns, without reading them again
+    fn, inputs = VIEWS["triples"]
+    summary["triples"] = fn(*(futures[n].result()[0] for n in inputs)).count()
     summary["stages"] = run_metrics(args.output)
     with open(os.path.join(args.output, "summary.json"), "w") as f:
         json.dump(summary, f, indent=1)

@@ -11,11 +11,11 @@ depends on it):
 * chunk       — (url, has_chunk, chunk_id)      [chunker-derived]
 * same_as     — (url, same_as, canon_id)        [canonicalization]
 
-The pipeline commits the table partitioned by ``pred`` (predicate-
-selective scans), rebalanced on ``pred`` first so each predicate
-directory holds a few files; it is not bucketed.  Here we return the
-union DataFrame and let callers sink it.  All unions are map-only over
-already-computed inputs.
+The edge table is not stored: :func:`kb_triples` computes it from the
+four stage tables it reads, in memory (``run_pipeline``) and on every
+read of a KB (``read_stage(…, "triples")``).  Each predicate comes from
+one source table, so a filter on ``pred`` scans only that table.  All
+unions are map-only over already-computed inputs.
 """
 
 from __future__ import annotations
@@ -23,21 +23,20 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
-def _t(df: DataFrame, subj, pred: str, obj) -> DataFrame:
-    return df.select(
-        subj.alias("subj"), F.lit(pred).alias("pred"), obj.cast("string").alias("obj")
-    )
+def _t(df: DataFrame, subj: str, pred: str, obj: str) -> DataFrame:
+    # one selectExpr of SQL strings: each Column built on the Python
+    # side would cost a round trip to the JVM
+    return df.selectExpr(f"{subj} AS subj", f"'{pred}' AS pred",
+                         f"CAST({obj} AS STRING) AS obj")
 
 
 def doc_triples(docs: DataFrame) -> DataFrame:
-    u = F.col("url")
     parts = [
-        _t(docs, u, "has_language", F.col("lang")),
-        _t(docs, u, "has_type", F.col("type")),
-        _t(docs, u, "has_checksum", F.col("checksum")),
+        _t(docs, "url", "has_language", "lang"),
+        _t(docs, "url", "has_type", "type"),
+        _t(docs, "url", "has_checksum", "checksum"),
     ]
     return reduce(DataFrame.unionAll, parts)
 
@@ -46,34 +45,33 @@ def mention_triples(linked: DataFrame) -> DataFrame:
     # (key, mentions, norm) is unique by construction (one linked row
     # per (key, norm)); (key, linked_to, canonical) is NOT — two
     # aliases of the same entity in one document collapse — so only
-    # that part pays a dedup shuffle, over narrow rows.
-    return _t(linked, F.col("key"), "mentions", F.col("norm")).unionAll(
-        _t(linked, F.col("key"), "linked_to", F.col("canonical_name"))
-        .dropDuplicates(["subj", "obj"])
-    )
+    # that part pays a dedup shuffle, over narrow rows.  The dedup sits
+    # below the literal ``pred``, so a filter on ``pred`` prunes it.
+    return _t(linked, "key", "mentions", "norm").unionAll(
+        _t(linked.select("key", "canonical_name").dropDuplicates(),
+           "key", "linked_to", "canonical_name"))
 
 
 def chunk_triples(chunks: DataFrame) -> DataFrame:
-    return _t(chunks, F.col("url"), "has_chunk", F.col("chunk_id"))
+    return _t(chunks, "url", "has_chunk", "chunk_id")
 
 
 def same_as_triples(components: DataFrame) -> DataFrame:
     """(key, canon_id) → same_as edges for non-self labels only."""
-    return _t(
-        components.filter(F.col("key") != F.col("canon_id")),
-        F.col("key"),
-        "same_as",
-        F.col("canon_id"),
-    )
+    return _t(components.where("key != canon_id"), "key", "same_as",
+              "canon_id")
 
 
 def build_triples(*parts: DataFrame) -> DataFrame:
-    """Union triple parts — map-only.
-
-    Every part above is (subj, pred, obj)-unique by construction for
-    unique input urls (mention_triples dedups its one non-unique
-    piece; the job enforces unique urls at ingest), and predicates
-    never collide across parts, so the union needs NO global distinct
-    — which would shuffle the entire edge table.
-    """
+    """Union triple parts — map-only, with NO global distinct (it would
+    shuffle the whole edge table): every part above is (subj, pred,
+    obj)-unique for unique input urls (the job enforces them at
+    ingest), and predicates never collide across parts."""
     return reduce(DataFrame.unionAll, parts)
+
+
+def kb_triples(documents: DataFrame, linked: DataFrame,
+               components: DataFrame, chunks: DataFrame) -> DataFrame:
+    """The KG's edge table over its four stage tables."""
+    return build_triples(doc_triples(documents), mention_triples(linked),
+                         same_as_triples(components), chunk_triples(chunks))

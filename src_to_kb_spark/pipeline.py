@@ -1,10 +1,11 @@
 """The KG stage graph, declared once (SURVEY.md §7.2).
 
 pages → documents → chunks / linked / bands → neardup_pairs →
-components → triples.  Each :class:`Stage` names its input stages, its
-full-build function, how it absorbs a documents delta, its partitioning
-and the job parameters in its resume identity.  Two callers walk
-:data:`STAGES`: :func:`run_pipeline` in memory and the
+components, and the triples over four of them (a view, never stored:
+``runtime/checkpoint.py`` ``VIEWS``).  Each :class:`Stage` names its
+input stages, its full-build function, how it absorbs a documents
+delta and the job parameters in its resume identity.  Two callers
+walk :data:`STAGES`: :func:`run_pipeline` in memory and the
 ``jobs/run_kg_pipeline.py`` job with per-stage commit and resume.
 
 Stage functions look operators up through their module
@@ -24,13 +25,7 @@ from .operators.chunker import chunk_documents
 from .operators.extract import extract_pages
 from .operators.linking import link_mentions
 from .operators.mentions import detect_mentions
-from .operators.triples import (
-    build_triples,
-    chunk_triples,
-    doc_triples,
-    mention_triples,
-    same_as_triples,
-)
+from .runtime.checkpoint import VIEWS
 from .sources.gazetteer import gazetteer_df
 
 
@@ -55,7 +50,6 @@ class Stage:
     ``new`` to the rows this run added to it.  Without ``seeded`` it
     returns rows to append; with ``seeded`` ``full`` also holds the
     stage's own committed table and it returns the replacement table.
-    A stage without ``delta`` is rebuilt whenever documents change.
     ``identity`` names the resume-identity keys (job parameters) whose
     change invalidates the stage and everything downstream of it.
     """
@@ -63,9 +57,8 @@ class Stage:
     name: str
     inputs: tuple[str, ...]
     build: Callable[..., DataFrame]
-    delta: Callable[..., DataFrame] | None = None
+    delta: Callable[..., DataFrame]
     seeded: bool = False
-    partition_by: tuple[str, ...] | None = None
     identity: tuple[str, ...] = ()
 
 
@@ -122,13 +115,6 @@ STAGES: tuple[Stage, ...] = (
           delta=lambda p, full, new: canonicalize.incremental_components(
               full["components"], new["neardup_pairs"]),
           seeded=True),
-    # partitioned by predicate: a query touching one predicate scans
-    # one directory
-    Stage("triples", ("documents", "linked", "components", "chunks"),
-          lambda p, documents, linked, components, chunks: build_triples(
-              doc_triples(documents), mention_triples(linked),
-              same_as_triples(components), chunk_triples(chunks)),
-          partition_by=("pred",)),
 )
 
 
@@ -191,5 +177,7 @@ def run_pipeline(
         if sum(st.name in s.inputs for s in STAGES) > 1:
             df = df.localCheckpoint(eager=False)
         tables[st.name] = df
+    fn, inputs = VIEWS["triples"]
+    tables["triples"] = fn(*(tables[n] for n in inputs))
     return PipelineResult(*(tables[n] for n in (
         "documents", "chunks", "linked", "components", "triples")))

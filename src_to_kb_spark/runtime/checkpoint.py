@@ -12,42 +12,38 @@ A stage is written once, zstd-compressed, and never read back:
 the lineage counts come from the row counts in the footers of the files
 the write added (read in-process, no Spark job), keyed by the writing
 task's index in each ``part-NNNNN`` file name.  A partitioned write
-(triples by ``pred``, the ANN table by bucket/list) is rebalanced on its
-partition columns first, so each partition directory gets a few files
-rather than one per upstream task, and AQE still splits a hot one.
+(the ANN table by bucket/list) is rebalanced on its partition columns
+first, so each partition directory gets a few files rather than one
+per upstream task, and AQE still splits a hot one.
 A stage is read with the schema Spark stored in its files' footers
 (:func:`read_parquet`), so a read plans without the one-task Spark job
 that parquet schema inference runs.
 
-A stage table stores only the columns it cannot recompute.
-:data:`DERIVED` declares, per stage, the columns that are pure
-functions of others — ``doc_uid`` (``'doc_' || sha2(url, 256)``) in
-``documents`` and ``chunks``, ``chunk_id`` (``doc_uid || '_chunk_' ||
-chunk_index``) and ``content`` in ``chunks`` and ``score`` (``prior ×
-n_mentions``) in ``linked`` — with the operator expression that builds
-each and the column it precedes.  A derived column may also read its
-document's row: a chunk's ``content`` is the slice of its document's
-text between the chunk's stored line boundaries, so a ``chunks`` read
-looks up its row of the same KB's committed ``documents`` by ``url``
-in a correlated scalar subquery (one split of the text per document).
-Spark prunes the subquery when ``content`` is not selected and
-otherwise plans it as a single join: no aggregate makes the documents
-side unique, a url with two document rows raises, and so does a chunk
-whose document row is missing, when its content is read.  Every
-writer commits ``documents`` before ``chunks``; :func:`write_stage`
-raises before writing a stage whose derived columns read a
-``documents`` table that is not committed in the same output.
-:func:`write_stage` drops the derived columns (Spark then prunes them
-from the write plan, so e.g. the extract write never evaluates
-``sha2(url)`` and the chunk write never cuts content), and
-:func:`read_stage` drops any stored copy and derives each again at its
-declared position, so a reader sees the columns the operator produced.
-A KB written before this stored the ids and the content; it reads back
-the same, as does a table mixing such files with appended ones,
-whichever file's footer supplies the schema.  Every other column is
-stored: ``documents.checksum`` and ``lines`` would need a scan of the
-text, and the gazetteer columns of ``linked`` would tie an old KB to
-the current gazetteer.
+A stage stores only what it cannot recompute.  :data:`DERIVED`
+declares, per stage, the columns that are pure functions of others
+(the document and chunk ids, linked's ``score`` and a chunk's
+``content``), each with its operator's expression and the column it
+precedes.  :func:`write_stage` drops them (Spark then prunes them from
+the write plan, so the extract write never evaluates ``sha2(url)`` and
+the chunk write never cuts content), and :func:`read_stage` drops any
+stored copy and derives each again in place, so a reader sees the
+columns the operator produced, also from a KB, or a table, whose older
+files store them, whichever file's footer supplies the schema.
+A chunk's ``content`` is its document's text between the chunk's
+stored line boundaries: a ``chunks`` read looks up the same KB's
+committed ``documents`` row by ``url`` in a correlated scalar
+subquery (one split of the text per document), which Spark prunes
+when ``content`` is not selected and otherwise plans as a single join
+with no aggregate; a url with two document rows, or none, raises when
+its content is read, and :func:`write_stage` raises before writing
+``chunks`` into an output with no committed ``documents``.
+``documents.checksum`` and ``lines`` stay stored (they would need a
+scan of the text), as do linked's gazetteer columns (they would tie an
+old KB to the current gazetteer).
+:data:`VIEWS` applies the rule to whole tables: ``triples`` is a
+function of other committed stages and is never written by the job;
+:func:`read_stage` computes it from them, ignoring any stored copy,
+and selects no chunk ``content``, so the read is join-free.
 
 The reference analog is the run-stats object + summary sink
 (kb-generator.js:36-41, :487-509) and the API's background-generation
@@ -71,6 +67,7 @@ from pyspark.sql.types import StructType
 from ..operators.chunker import chunk_content, chunk_id, chunk_lines
 from ..operators.extract import doc_uid
 from ..operators.linking import link_score
+from ..operators.triples import kb_triples
 
 # Per write, not session-wide: the pages input and every other parquet
 # write keep their codec.  Snappy barely compresses this text-heavy KB.
@@ -120,6 +117,11 @@ DERIVED: dict[str, tuple[Derived, ...]] = {
                 link_score("prior", "n_mentions")),
     ),
 }
+
+
+# stage -> (its function, the committed stages it reads)
+VIEWS = {"triples": (kb_triples, ("documents", "linked", "components",
+                                  "chunks"))}
 
 
 def _stored(df: DataFrame, stage: str, out_dir: str) -> DataFrame:
@@ -300,9 +302,11 @@ def stage_rows(out_dir: str, stage: str) -> int:
 
 
 def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    """A committed stage table, its :data:`DERIVED` columns included;
-    those that read their document's row read the committed
-    ``documents`` of the same output."""
+    """A committed stage table with its :data:`DERIVED` columns, or a
+    :data:`VIEWS` stage computed from its committed inputs."""
+    if stage in VIEWS:
+        fn, inputs = VIEWS[stage]
+        return fn(*(read_stage(spark, out_dir, s) for s in inputs))
     documents = (read_parquet(spark, os.path.join(out_dir, "documents"))
                  if any(d.document for d in DERIVED.get(stage, ())) else None)
     return _with_derived(read_parquet(spark, os.path.join(out_dir, stage)),

@@ -161,18 +161,19 @@ def test_partitioned_append_counts_only_the_delta(spark, tmp_path):
     n_base, n_delta = base.count(), delta.count()
     assert n_base > 0 and n_delta > 0
 
-    m1 = write_stage(base, out, "triples", partition_by=["pred"])
+    # a stage name no view shadows: read_stage reads what was written
+    m1 = write_stage(base, out, "edges", partition_by=["pred"])
     assert m1["n_rows"] == n_base
-    m2 = write_stage(delta, out, "triples", mode="append",
+    m2 = write_stage(delta, out, "edges", mode="append",
                      partition_by=["pred"])
     assert m2["mode"] == "append"
     assert m2["n_rows"] == n_delta
     assert sum(p["n_rows"] for p in m2["partitions"]) == n_delta
     assert all(p["n_rows"] > 0 for p in m2["partitions"])
-    assert read_stage(spark, out, "triples").count() == n_base + n_delta
+    assert read_stage(spark, out, "edges").count() == n_base + n_delta
     # rebalanced on pred: a few files per predicate, not one per task
     for pred in ("has_type", "has_language"):
-        assert len(_data_files(os.path.join(out, "triples",
+        assert len(_data_files(os.path.join(out, "edges",
                                             f"pred={pred}"))) <= 4
 
 
@@ -222,11 +223,13 @@ def test_job_summary_counts_match_tables_after_resume(spark, tmp_path):
 
 def test_read_stage_costs_no_spark_job(spark, tmp_path):
     """Schema inference runs a one-task Spark job per read; a stage read
-    takes the schema from its footers instead and gets the same frame,
-    the partitioned triples table's discovered ``pred`` column too."""
+    takes the schema from its footers instead and gets the same frame.
+    The triples view reads four such tables, so it costs none either."""
     out = str(tmp_path / "kb")
     job_main(["--input", SF_SMOKE, "--output", out])
-    for stage in STAGES:
+    assert _jobs_in_group(spark, "read-triples",
+                          lambda: read_stage(spark, out, "triples")) == 0
+    for stage in (s for s in STAGES if s != "triples"):
         path = os.path.join(out, stage)
         assert _jobs_in_group(spark, f"infer-{stage}",
                               lambda: spark.read.parquet(path)) >= 1, stage

@@ -14,6 +14,7 @@ import os
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 
 from jobs.run_kg_pipeline import main
+from src_to_kb_spark.runtime.checkpoint import read_stage
 
 from .conftest import SF_SMOKE
 
@@ -24,19 +25,22 @@ def test_job_runs_and_resumes(spark, tmp_path):
     assert s1["triples"] > 0
     assert s1["documents"] == 500
     for stage in ["documents", "chunks", "linked", "neardup_pairs",
-                  "components", "triples"]:
+                  "components"]:
         assert os.path.exists(os.path.join(out, f"_committed_{stage}"))
         m = json.load(open(os.path.join(out, f"_metrics_{stage}.json")))
         assert m["n_rows"] == sum(p["n_rows"] for p in m["partitions"])
+    # the triples are a view over the stage tables, never committed
+    assert not os.path.exists(os.path.join(out, "_committed_triples"))
 
     # full resume: nothing recomputed, same outputs re-read
-    mtime = os.path.getmtime(os.path.join(out, "_committed_triples"))
+    mtime = os.path.getmtime(os.path.join(out, "_committed_components"))
     s2 = main(["--input", SF_SMOKE, "--output", out])
     assert s2["triples"] == s1["triples"]
-    assert os.path.getmtime(os.path.join(out, "_committed_triples")) == mtime
+    assert os.path.getmtime(
+        os.path.join(out, "_committed_components")) == mtime
 
     # partial resume: drop one stage marker -> only that stage recomputed
-    os.remove(os.path.join(out, "_committed_triples"))
+    os.remove(os.path.join(out, "_committed_components"))
     s3 = main(["--input", SF_SMOKE, "--output", out])
     assert s3["triples"] == s1["triples"]
 
@@ -44,7 +48,7 @@ def test_job_runs_and_resumes(spark, tmp_path):
 def _triple_set(spark, out):
     return {
         (r["subj"], r["pred"], r["obj"])
-        for r in spark.read.parquet(os.path.join(out, "triples"))
+        for r in read_stage(spark, out, "triples")
         .select("subj", "pred", "obj").collect()
     }
 

@@ -8,14 +8,17 @@ and global top-k compiles to TakeOrderedAndProject (per-partition heap
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from jobs.run_kg_pipeline import main as job_main
 from src_to_kb_spark.operators.chunker import chunk_documents
 from src_to_kb_spark.operators.extract import extract_pages
 from src_to_kb_spark.operators.linking import link_mentions
 from src_to_kb_spark.operators.mentions import detect_mentions
 from src_to_kb_spark.operators.similarity import knn_brute_force
 from src_to_kb_spark.queries.search import search_documents
+from src_to_kb_spark.runtime.checkpoint import read_stage
 from src_to_kb_spark.sources.gazetteer import gazetteer_df
 from src_to_kb_spark.sources.pages import load_pages, synthetic_pages
 
@@ -269,3 +272,32 @@ def test_linking_variants_agree(spark):
     a = {tuple(r) for r in link_mentions(m, gaz).collect()}
     b = {tuple(r) for r in link_mentions_windowed(m, gaz).collect()}
     assert a == b and len(a) > 0
+
+
+@pytest.fixture(scope="module")
+def job_kb(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("plans") / "kb")
+    job_main(["--input", SF_SMOKE, "--output", out])
+    return out
+
+
+def _scans(df) -> list[str]:
+    return [line for line in _plan(df).split("\n") if "FileScan" in line]
+
+
+def test_triples_pred_filter_scans_one_table(spark, job_kb):
+    """Each predicate of the triples view comes from one stage table, so
+    a filter on ``pred`` scans that table alone."""
+    view = read_stage(spark, job_kb, "triples")
+    for pred, cols in (("same_as", "[key#"), ("has_chunk", "[url#")):
+        scans = _scans(view.filter(F.col("pred") == pred))
+        assert len(scans) == 1 and cols in scans[0], (pred, scans)
+
+
+def test_triples_view_reads_no_text(spark, job_kb):
+    """The view selects no chunk ``content``: its plan holds no document
+    lines lookup and scans no ``documents.text``."""
+    view = read_stage(spark, job_kb, "triples")
+    assert "_doc_lines" not in _plan(view)
+    scans = _scans(view)
+    assert scans and not any("text#" in s for s in scans), scans

@@ -297,12 +297,12 @@ def test_job_size_gated_page_is_not_a_phantom_delta(spark, tmp_path):
     out = str(tmp_path / "kb")
     s1 = job_main(["--input", inp, "--output", out])
     assert s1["documents"] == 50  # gated page excluded
-    mtime = os.path.getmtime(os.path.join(out, "_committed_triples"))
+    mtime = os.path.getmtime(os.path.join(out, "_committed_components"))
     s2 = job_main(["--input", inp, "--output", out])  # no-op resume
     assert s2["triples"] == s1["triples"]
     # global stages untouched: the gated page did NOT register as new
     assert os.path.getmtime(
-        os.path.join(out, "_committed_triples")
+        os.path.join(out, "_committed_components")
     ) == mtime
     assert not os.path.exists(os.path.join(out, "_delta_pending"))
 

@@ -195,11 +195,10 @@ def test_job_resumes_a_kb_whose_sidecar_names_its_table_layer(spark,
         assert json.load(f) == params
 
 
-def test_job_chunk_parameters_rebuild_only_chunks_and_triples(spark,
-                                                               tmp_path):
+def test_job_chunk_parameters_rebuild_only_chunks(spark, tmp_path):
     """``--chunk-size`` and ``--overlap`` are resume identity: a re-run
-    that changes them rewrites only ``chunks`` and ``triples``, and both
-    equal a fresh build at the new parameters."""
+    that changes them rewrites only ``chunks``, and it and the triples
+    view over it equal a fresh build at the new parameters."""
     from jobs.run_kg_pipeline import main as job_main
 
     from .conftest import SF_SMOKE
@@ -209,7 +208,7 @@ def test_job_chunk_parameters_rebuild_only_chunks_and_triples(spark,
     job_main(["--input", SF_SMOKE, "--output", out])
     _mark(out, *STAGES)
     job_main(["--input", SF_SMOKE, "--output", out, *new])
-    assert _rewritten(out) == {"chunks", "triples"}
+    assert _rewritten(out) == {"chunks"}
 
     fresh = str(tmp_path / "fresh")
     job_main(["--input", SF_SMOKE, "--output", fresh, *new])
@@ -217,3 +216,33 @@ def test_job_chunk_parameters_rebuild_only_chunks_and_triples(spark,
         got, want = (read_stage(spark, d, st) for d in (out, fresh))
         assert got.exceptAll(want).count() == 0, st
         assert want.exceptAll(got).count() == 0, st
+
+
+def test_job_removes_the_triples_table_an_older_job_stored(spark, tmp_path):
+    """An older job stored the triples as a ``pred``-partitioned table
+    with a marker and a metrics sidecar.  A re-run removes all three,
+    rewrites no stage, and counts the triples a fresh build counts."""
+    from jobs.run_kg_pipeline import main as job_main
+
+    from .conftest import SF_SMOKE
+
+    src = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").filter(
+        "doc_id < 40"
+    )
+    inp = str(tmp_path / "in")
+    src.write.parquet(f"{inp}/documents.parquet")
+    out = str(tmp_path / "kb")
+    job_main(["--input", inp, "--output", out])
+    write_stage(read_stage(spark, out, "triples"), out, "triples",
+                partition_by=["pred"])
+    _mark(out, *STAGES)
+    stored = [os.path.join(out, f) for f in
+              ("triples", "_committed_triples", "_metrics_triples.json")]
+    assert all(os.path.exists(f) for f in stored)
+
+    s = job_main(["--input", inp, "--output", out])
+    assert _rewritten(out) == set()
+    assert not any(os.path.exists(f) for f in stored)
+    assert "triples" not in {m["stage"] for m in s["stages"]}
+    fresh = job_main(["--input", inp, "--output", str(tmp_path / "fresh")])
+    assert s["triples"] == fresh["triples"]

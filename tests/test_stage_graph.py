@@ -8,15 +8,15 @@ import pytest
 from src_to_kb_spark.pipeline import STAGES, downstream, invalidated_by
 
 ALL = {"documents", "chunks", "linked", "bands", "neardup_pairs",
-       "components", "triples"}
+       "components"}
 
 
 @pytest.mark.parametrize("changed,stale", [
-    ({"chunk_size"}, {"chunks", "triples"}),
-    ({"overlap"}, {"chunks", "triples"}),
-    ({"chunk_size", "overlap"}, {"chunks", "triples"}),
-    ({"neardup_threshold"}, {"neardup_pairs", "components", "triples"}),
-    ({"bands_scheme"}, {"bands", "neardup_pairs", "components", "triples"}),
+    ({"chunk_size"}, {"chunks"}),
+    ({"overlap"}, {"chunks"}),
+    ({"chunk_size", "overlap"}, {"chunks"}),
+    ({"neardup_threshold"}, {"neardup_pairs", "components"}),
+    ({"bands_scheme"}, {"bands", "neardup_pairs", "components"}),
     (set(), set()),
 ])
 def test_invalidation_closure(changed, stale):
