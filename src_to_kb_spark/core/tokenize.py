@@ -14,12 +14,16 @@ tabs).  So: tokenization everywhere is
     ``[ \\t\\n\\x0B\\f\\r]``, drop empty tokens
 
 with NO trim step (empty-token filtering makes trimming irrelevant),
-expressed through the three literals below.
+expressed through the three literals below; :func:`jvm_tokens` is the
+one Catalyst spelling of it.
 """
 
 from __future__ import annotations
 
 import re
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 # The pinned class, as each engine's regex literal.
 ASCII_WS_CHARS = " \t\n\x0b\f\r"
@@ -33,3 +37,9 @@ def ascii_tokens(text: str | None) -> list[str]:
     if not text:
         return []
     return [t for t in PY_WS_RE.split(text.lower()) if t]
+
+
+def jvm_tokens(text: Column) -> Column:
+    """The Catalyst :func:`ascii_tokens`, from Column functions: in a
+    SQL string literal ``\\f`` loses its backslash."""
+    return F.filter(F.split(F.lower(text), f"{JAVA_WS_CLASS}+"), lambda x: x != "")

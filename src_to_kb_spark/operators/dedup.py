@@ -2,9 +2,9 @@
 pipeline operators; graded first-class alongside SURVEY.md §2).
 
 Hashing is anchored on ``md5`` (hashlib in the Arrow UDFs,
-``F.md5``/DuckDB ``md5`` in the twins) so all three engines compute
-bit-identical values: ONE md5 per shingle/token, with any further
-hash functions derived from its 64-bit prefix by universal
+``F.md5``/DuckDB ``md5`` in the JVM and the twins) so all three
+engines compute bit-identical values: ONE md5 per shingle/token, with
+any further hash functions derived from its 64-bit prefix by universal
 multiply-add arithmetic mod 2^64 (numpy uint64 wraparound ≡ DuckDB
 UHUGEINT-mod — pinned by the oracle rows and unit tests).
 
@@ -12,34 +12,37 @@ UHUGEINT-mod — pinned by the oracle rows and unit tests).
   MinHash + LSH banding: 3-token shingles (lead-window construction),
   K minhashes per doc from the universal family
   h_j(x) = (A_j·x + B_j) mod 2^64 over the shingle's md5-prefix, band
-  signatures, pairs sharing any band.  :func:`shingles` and
-  :func:`shingle_hash_values` are the row-per-shingle twins the tests
-  compare the UDFs against.
+  signatures, pairs sharing any band.
 * :func:`verify_candidate_pairs` / :func:`neardup_pairs` — candidates
-  verified with true 3-shingle Jaccard ≥ threshold.
+  verified with true 3-shingle Jaccard ≥ threshold over
+  :func:`shingle_hashes`, the JVM expression of which
+  :func:`shingle_hashes_py` is the Python reference.
 * :func:`simhash_neardup_pairs` — SimHash signatures, pairs within a
   Hamming distance.
 
 Scale shape: shingling, minhashing, and banding are computed in ONE
 Arrow-batched pandas UDF pass over the corpus — map-only, no
-token-stream shuffle at all.  (An earlier all-Catalyst variant used
-``transform``/``array_min`` higher-order functions; HOFs evaluate
-interpreted — reflection-heavy per-call ``MessageDigest`` churn that
-gets *slower* with more threads — while hashlib md5 in the Arrow batch
-is plain C.)  The only shuffles are the band self-join (bounded bucket
-sizes — banding exists precisely to keep buckets tiny at 100 TB,
-versus the quadratic brute-force join) and the Jaccard verification,
-which joins the (tiny) candidate pair set back to the per-key shingle
-arrays and counts intersections in the JVM (``array_intersect``).
+token-stream shuffle at all.  (hashlib md5 in the Arrow batch is plain
+C; the same hashes from :func:`shingle_hashes` in the JVM gave
+identical bands at more CPU: 1.92 → 2.35 CPU-s over 600 near-dup
+documents, 4.62 → 5.78 over 5,000 unique ones, 4 cores.)  The only
+shuffles are the band self-join (bounded bucket sizes — banding exists
+precisely to keep buckets tiny at 100 TB, versus the quadratic
+brute-force join) and the Jaccard verification, which runs no Python:
+it hashes the candidate members' shingles in the JVM (2.21 → 2.12
+CPU-s against the pandas UDF it replaced over 723 candidates, 6.99 →
+6.97 over 6,124, 4 cores; JVM md5 in a lambda slowed down with more
+threads in an earlier all-Catalyst band pass, so more cores are
+unmeasured) and counts intersections with ``array_intersect``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.tokenize import RE2_WS_CLASS, ascii_tokens
+from ..core.tokenize import JAVA_WS_CLASS, RE2_WS_CLASS, ascii_tokens, jvm_tokens
 
 N_HASHES = 8
 N_BANDS = 2  # 4 rows per band
@@ -136,11 +139,12 @@ def make_bands_udf():
 
 def shingle_hashes_py(text: str) -> list[int]:
     """Sorted distinct signed-int64 md5-prefix hashes of the 3-token
-    shingles.  ~3× narrower than the string arrays through shuffle and
-    Arrow, and distinct, so ``size(array_intersect)`` counts an
-    intersection exactly.  The DuckDB oracle
-    hashes shingles with the SAME md5 prefix, so even a hash collision
-    (≈1e-6 per corpus) collapses identically in both engines."""
+    shingles: the Python reference of :func:`shingle_hashes`, which
+    verify runs.  ~3× narrower than the shingle strings through
+    shuffle, and distinct, so ``size(array_intersect)`` counts an
+    intersection exactly.  The DuckDB oracle hashes shingles with the
+    SAME md5 prefix, so even a hash collision (≈1e-6 per corpus)
+    collapses identically in both engines."""
     import hashlib as _hl
 
     out = {
@@ -150,50 +154,20 @@ def shingle_hashes_py(text: str) -> list[int]:
     return sorted(v - (1 << 64) if v >= (1 << 63) else v for v in out)
 
 
-def make_shingle_hash_udf():
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+def shingle_hashes(tokens: Column) -> Column:
+    """The JVM expression of :func:`shingle_hashes_py` over a projected
+    :func:`~..core.tokenize.jvm_tokens` column, unsorted; empty below 3
+    tokens.  ``conv(hex, 16, -10)`` is the same two's-complement wrap.
+    Inlining the split instead re-runs it per ``tokens[i]`` (20× CPU)."""
 
-    @pandas_udf("array<long>")
-    def shh_udf(text: pd.Series) -> pd.Series:
-        return text.map(
-            lambda t: np.array(shingle_hashes_py(t), dtype="int64")
-        )
+    def hv(i):
+        shingle = F.concat_ws(" ", tokens[i], tokens[i + 1], tokens[i + 2])
+        return F.conv(F.substring(F.md5(shingle), 1, 16), 16, -10).cast("bigint")
 
-    return shh_udf
-
-
-def shingles(docs: DataFrame) -> DataFrame:
-    """(key, shingle) — distinct 3-token shingles; map-only."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def shingle_udf(text: pd.Series) -> pd.Series:
-        return text.map(shingle_py)
-
-    return docs.select(
-        F.col("url").alias("key"),
-        F.explode(shingle_udf(F.col("text"))).alias("shingle"),
-    )
-
-
-def shingle_hash_values(sh: DataFrame) -> DataFrame:
-    """(key, hv: long) from exploded (key, shingle) rows — the
-    all-Catalyst twin of the 64-bit md5-prefix shingle hash
-    (``conv(hex, 16, -10)`` reinterprets the unsigned value as two's
-    complement, matching :func:`shingle_hashes_py`'s signed wrap).
-    This is the cross-engine surface where Java-vs-Python
-    whitespace/lower/md5 semantics can diverge, so it is what the
-    parity test pins; the (A_j·x + B_j) mod 2^64 minhash chain on top
-    is pure integer arithmetic, pinned by the DuckDB oracle (UHUGEINT
-    twin in :func:`oracle_minhash_ctes`) and a unit test — Catalyst
-    cannot express a wraparound multiply under ANSI mode."""
-    return sh.select(
-        "key",
-        F.expr(
-            "cast(conv(substring(md5(shingle), 1, 16), 16, -10) as long)"
-        ).alias("hv"),
-    )
+    n = F.size(tokens)
+    return F.when(
+        n >= 3, F.array_distinct(F.transform(F.sequence(F.lit(0), n - 3), hv))
+    ).otherwise(F.array().cast("array<bigint>"))
 
 
 def band_signature_rows(docs: DataFrame) -> DataFrame:
@@ -269,21 +243,23 @@ def verify_candidate_pairs(
     """Exact 3-shingle-Jaccard verification of candidate pairs →
     (key_a, key_b, jaccard ≥ threshold), jaccard rounded 6 dp.
 
-    The shingle-hash UDF runs ONLY over candidate-pair members (a
-    left-semi join keeps it a tiny fraction of the corpus) and is the
-    only Python in the plan: both hash arrays are distinct, so
-    ``size(array_intersect)`` counts the intersection exactly in the
-    JVM; division + rounding stay in Catalyst so cross-engine rounding
-    semantics (HALF_UP) match the DuckDB oracle."""
+    Runs no Python: only candidate members' texts (a left-semi join)
+    are tokenized, once, and hashed by :func:`shingle_hashes`.  Both
+    hash arrays are distinct, so ``size(array_intersect)`` counts the
+    intersection exactly; division + rounding stay in Catalyst so
+    rounding (HALF_UP) matches the DuckDB oracle.  The count is bound
+    as a lambda argument and the threshold filters that one-element
+    array, exploded (outer: no inferred filter) into zero or one row: a
+    filter on a ``jaccard`` column would be pushed into the join
+    condition with the count inlined, intersecting three times."""
     cands = cands.localCheckpoint(eager=False)
-    shh_udf = make_shingle_hash_udf()
     cand_keys = (
         cands.select(F.col("key_a").alias("key"))
         .union(cands.select(F.col("key_b").alias("key")))
         .distinct()
     )
     # two consumers (a/b sides of the verify join) — lazy localCheckpoint
-    # (NOT .cache()) so the shingle-hash UDF runs once over the
+    # (NOT .cache()) so the shingle hashes are computed once over the
     # candidate members: a cache would pin the ~2 kB/doc hash arrays in
     # executor storage for the session's lifetime, and the resume path
     # calls this per delta batch — each call would leak another pinned
@@ -291,29 +267,22 @@ def verify_candidate_pairs(
     cand_sets = (
         docs.select(F.col("url").alias("key"), F.col("text").alias("_t"))
         .join(cand_keys, "key", "left_semi")
-        .select("key", shh_udf(F.col("_t")).alias("sh"))
+        .select("key", jvm_tokens(F.col("_t")).alias("_toks"))
+        .select("key", shingle_hashes(F.col("_toks")).alias("sh"))
         .localCheckpoint(eager=False)
     )
-    sets_a = cand_sets.select(
-        F.col("key").alias("key_a"), F.col("sh").alias("sh_a")
+    sets_a = cand_sets.toDF("key_a", "sh_a")
+    sets_b = cand_sets.toDF("key_b", "sh_b")
+    n_common = F.array(F.size(F.array_intersect("sh_a", "sh_b")))
+    jaccard = F.transform(
+        n_common, lambda n: F.round(n / (F.size("sh_a") + F.size("sh_b") - n), 6)
     )
-    sets_b = cand_sets.select(
-        F.col("key").alias("key_b"), F.col("sh").alias("sh_b")
-    )
+    passing = F.filter(jaccard, lambda j: j >= threshold)
     return (
         cands.join(sets_a, "key_a")
         .join(sets_b, "key_b")
-        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("key_a", "key_b", "jaccard")
+        .select("key_a", "key_b", F.explode_outer(passing).alias("jaccard"))
+        .filter(F.col("jaccard").isNotNull())
     )
 
 
@@ -439,8 +408,6 @@ def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     The DuckDB twin applies the same exclusion (inner join on the
     token aggregate).
     """
-    from ..core.tokenize import JAVA_WS_CLASS
-
     blocks_spec = simhash_blocks(max_hamming)
     has_token = "[^" + JAVA_WS_CLASS[1:]  # any char outside the ws class
     docs = docs.filter(F.col("text").isNotNull() & F.col("text").rlike(has_token))

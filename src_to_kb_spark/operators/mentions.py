@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.tokenize import JAVA_WS_CLASS, RE2_WS_CLASS, ascii_tokens
+from ..core.tokenize import RE2_WS_CLASS, ascii_tokens, jvm_tokens
 
 
 def tokenize(docs: DataFrame) -> DataFrame:
@@ -28,14 +28,8 @@ def tokenize(docs: DataFrame) -> DataFrame:
     ASCII class, empty tokens dropped; no trim (redundant under the
     empty-token filter, and engine trims disagree on control chars)."""
     return docs.select(
-        F.col("url").alias("key"),
-        F.explode(F.split(F.lower("text"), f"{JAVA_WS_CLASS}+")).alias("token"),
-    ).filter(F.col("token") != "")
-
-
-def tokenize_py(text: str) -> list[str]:
-    """Python twin of :func:`tokenize` (same pinned ASCII class)."""
-    return ascii_tokens(text)
+        F.col("url").alias("key"), F.explode(jvm_tokens(F.col("text"))).alias("token")
+    )
 
 
 def make_mention_counts_udf(aliases: frozenset[str]):
@@ -48,7 +42,7 @@ def make_mention_counts_udf(aliases: frozenset[str]):
     @pandas_udf("array<struct<norm: string, n: int>>")
     def counts_udf(text: pd.Series) -> pd.Series:
         def one(t):
-            c = Counter(tok for tok in tokenize_py(t) if tok in aliases)
+            c = Counter(tok for tok in ascii_tokens(t) if tok in aliases)
             return [(k, v) for k, v in c.items()]
 
         return text.map(one)

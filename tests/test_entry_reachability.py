@@ -27,13 +27,12 @@ PKG = "src_to_kb_spark"
 # Top-level functions that no entry point calls but a test needs, and why.
 KEPT = {
     f"{PKG}.sources.pages.synthetic_pages": "test data generator",
-    f"{PKG}.operators.dedup.shingles": "Python twin the shingle tests compare against",
-    f"{PKG}.operators.dedup.shingle_hash_values": "Python twin of the shingle-hash UDF",
+    f"{PKG}.operators.dedup.shingle_hashes_py": "Python reference of the shingle-hash expression",
     f"{PKG}.operators.dedup.simhash_py": "Python twin of the SimHash UDF",
     f"{PKG}.operators.similarity.ivf_assign": "Python twin of the IVF list assignment",
     f"{PKG}.operators.linking.link_mentions_windowed": "window-plan twin of the linker",
     f"{PKG}.operators.mentions.detect_mentions_exploded": "explode-plan twin of mention detection",
-    f"{PKG}.operators.mentions.tokenize": "Python twin of the JVM tokenizer",
+    f"{PKG}.operators.mentions.tokenize": "token rows of the explode-plan twin",
     f"{PKG}.runtime.skew.host_distribution": "the skew test's measurement",
 }
 

@@ -120,35 +120,55 @@ def test_knn_lsh_subset_of_bruteforce_values(spark):
 def test_minhash_udf_matches_catalyst_md5(spark):
     """Cross-engine LSH parity, pinned at the two seams:
 
-    1. the 64-bit md5-prefix SHINGLE hash — hashlib over
-       Python-shingled text vs Catalyst F.md5 over split/lead shingles
-       (Java-vs-Python whitespace/lower/md5 semantics);
+    1. the 64-bit md5-prefix SHINGLE hash — verify's JVM expression
+       (``shingle_hashes`` over ``jvm_tokens``) against its Python
+       reference ``shingle_hashes_py``, on every smoke document and on
+       fixed edge cases (Java-vs-Python whitespace/lower/md5 semantics,
+       too few tokens, one 200 KB document);
     2. the universal-hash minhash chain on top — numpy uint64
        wraparound vs arbitrary-precision Python ints (the DuckDB
        UHUGEINT twin is pinned by the neardup oracle row).
     """
+    from src_to_kb_spark.core.tokenize import jvm_tokens
     from src_to_kb_spark.operators.dedup import (
         MH_A,
         MH_B,
         N_BANDS,
         N_HASHES,
         minhash_bands_py,
-        shingle_hash_values,
+        shingle_hashes,
         shingle_hashes_py,
         shingle_py,
-        shingles,
     )
 
     docs = extract_pages(load_pages(spark, SF_SMOKE)).select("url", "text")
-    cat = {}
-    for r in shingle_hash_values(shingles(docs)).collect():
-        cat.setdefault(r["key"], set()).add(r["hv"])
-    py = {
-        r["url"]: set(shingle_hashes_py(r["text"]))
-        for r in docs.collect()
-        if shingle_py(r["text"])
-    }
-    assert cat == py and len(py) > 0
+    long_doc = "\n".join(
+        " ".join(f"w{(i * 7919 + j) % 4001}" for j in range(12))
+        for i in range(3000)
+    )
+    assert len(long_doc) >= 200_000
+    fixed = [
+        None, "", "one", "two words",
+        "nbsp\xa0joins one token here", "v\x0btab splits\x0bhere too",
+        "form\ffeed splits here", "crlf line\r\nnext line\r\n",
+        "\ttabs\tlead\tand\ttrail\t",
+        "İstanbul İzmir Ankara İstanbul", "ΣΑΣ ΟΔΟΣ ΣΑΣ ΟΔΟΣ", "ΌΣΟΣ ΌΣΟΣ ΌΣΟΣ",
+        long_doc,
+    ]
+    edge = spark.createDataFrame(
+        [(f"edge{i}", t) for i, t in enumerate(fixed)], "url string, text string"
+    )
+    rows = (
+        docs.unionByName(edge)
+        .select("url", "text", jvm_tokens(F.col("text")).alias("toks"))
+        .select("url", "text", shingle_hashes(F.col("toks")).alias("sh"))
+        .collect()
+    )
+    assert len(rows) == docs.count() + len(fixed)
+    for r in rows:
+        assert sorted(r["sh"]) == shingle_hashes_py(r["text"]), r["url"]
+    assert sum(1 for r in rows if r["sh"] and r["url"].startswith("edge")) == 9
+    assert sum(1 for r in rows if r["sh"]) > len(fixed)
 
     # 2: numpy wraparound ≡ exact big-int arithmetic, per band
     for r in docs.limit(20).collect():

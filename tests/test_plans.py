@@ -154,20 +154,29 @@ def test_band_signature_rows_single_arrow_pass(spark):
     assert len(evals) == 1, plan
 
 
-def test_verify_runs_only_the_shingle_hash_udf(spark, monkeypatch):
-    """Verify's only Python is the shingle-hash UDF over the candidate
-    members; the intersection is counted in the JVM, not by a pandas UDF
-    the optimizer evaluates in both the filter and the projection.  The
-    frames verify checkpoints are recorded so their plans count too."""
+VERIFY_TEXTS = {"u1": "a b c d e f g", "u2": "a b c d e f h", "u3": "x y z w"}
+
+
+def _verify_inputs(spark):
+    docs = spark.createDataFrame(list(VERIFY_TEXTS.items()),
+                                 "url string, text string")
+    cands = spark.createDataFrame([("u1", "u2"), ("u1", "u3")],
+                                  "key_a string, key_b string")
+    return docs, cands
+
+
+def test_verify_runs_no_python_udf(spark, monkeypatch):
+    """Verify runs no Python: the shingle hashes and the intersection
+    are JVM expressions, in verify's plan and in the plans of the
+    frames it checkpoints, which are recorded so they count too.  The
+    tokens are projected before they are hashed, so each text is split
+    once, not once per shingle."""
     from src_to_kb_spark.operators.dedup import (
         shingle_hashes_py,
         verify_candidate_pairs,
     )
 
-    texts = {"u1": "a b c d e f g", "u2": "a b c d e f h", "u3": "x y z w"}
-    docs = spark.createDataFrame(list(texts.items()), "url string, text string")
-    cands = spark.createDataFrame([("u1", "u2"), ("u1", "u3")],
-                                  "key_a string, key_b string")
+    docs, cands = _verify_inputs(spark)
     checkpointed = []
     cls = type(docs)
     orig = cls.localCheckpoint
@@ -178,19 +187,36 @@ def test_verify_runs_only_the_shingle_hash_udf(spark, monkeypatch):
 
     monkeypatch.setattr(cls, "localCheckpoint", recording)
     pairs = verify_candidate_pairs(docs, cands, threshold=0.0)
+    frames = (pairs, *checkpointed)
     # a lazily checkpointed frame's plan is already final: skip its
     # initial plan, which repeats the same nodes
-    evals = [ln for df in (pairs, *checkpointed)
+    evals = [ln for df in frames
              for ln in _plan(df).split("== Initial Plan ==")[0].splitlines()
              if "ArrowEvalPython" in ln]
-    assert len(evals) == 1 and "shh_udf" in evals[0], evals
+    assert not evals, evals
+    optimized = [df._jdf.queryExecution().optimizedPlan().toString()
+                 for df in frames]
+    assert sum(p.count("split(") for p in optimized) == 1, optimized
 
     def jaccard(a, b):
-        x, y = set(shingle_hashes_py(texts[a])), set(shingle_hashes_py(texts[b]))
+        x = set(shingle_hashes_py(VERIFY_TEXTS[a]))
+        y = set(shingle_hashes_py(VERIFY_TEXTS[b]))
         return round(len(x & y) / len(x | y), 6)
 
     assert sorted(tuple(r) for r in pairs.collect()) == [
         ("u1", "u2", jaccard("u1", "u2")), ("u1", "u3", 0.0)]
+
+
+def test_verify_intersects_each_pair_once(spark):
+    """The threshold filter is not pushed into the join condition with
+    the intersection count inlined: the executed plan holds one
+    ``array_intersect``, and a pair below the threshold is dropped."""
+    from src_to_kb_spark.operators.dedup import verify_candidate_pairs
+
+    docs, cands = _verify_inputs(spark)
+    pairs = verify_candidate_pairs(docs, cands, threshold=0.5)
+    assert _plan(pairs).count("array_intersect") == 1, _plan(pairs)
+    assert [tuple(r)[:2] for r in pairs.collect()] == [("u1", "u2")]
 
 
 def test_embedding_neardup_registered_is_not_quadratic(spark):

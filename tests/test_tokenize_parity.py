@@ -13,9 +13,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from src_to_kb_spark.core.tokenize import (
-    JAVA_WS_CLASS,
     RE2_WS_CLASS,
     ascii_tokens,
+    jvm_tokens,
 )
 
 # adversarial alphabet: ASCII ws incl. vertical tab, Unicode ws
@@ -48,12 +48,15 @@ def test_python_duckdb_token_parity(text):
 
 
 def test_spark_token_parity_on_adversarial_batch(spark):
-    """Spark's java regex split (the Catalyst twin in
-    operators/mentions.tokenize) against Python, one batched job over
-    a fixed adversarial corpus."""
+    """Spark's java regex split (``jvm_tokens``, which verify's shingle
+    hashes and operators/mentions.tokenize use) against Python, one
+    batched job over a fixed adversarial corpus.  DuckDB agrees on all
+    but the ``lower_only`` cases: its ``lower()`` maps U+0130 to a bare
+    ``i`` and gives no final sigma."""
     from pyspark.sql import functions as F
 
-    cases = [
+    lower_only = ["İstanbul", "ΣΑΣ ΟΔΟΣ", "ΌΣΟΣ"]
+    cases = lower_only + [
         "",
         " ",
         "\x0b",
@@ -69,16 +72,12 @@ def test_spark_token_parity_on_adversarial_batch(spark):
         "a\fb\rc\nd e",
     ]
     df = spark.createDataFrame([(c,) for c in cases], "t string")
-    got = df.select(
-        "t",
-        F.filter(
-            F.split(F.lower(F.col("t")), f"{JAVA_WS_CLASS}+"),
-            lambda x: x != "",
-        ).alias("toks"),
-    ).collect()
+    got = df.select("t", jvm_tokens(F.col("t")).alias("toks")).collect()
+    assert len(got) == len(cases)
     for r in got:
         assert list(r["toks"]) == ascii_tokens(r["t"]), repr(r["t"])
-        assert ascii_tokens(r["t"]) == duck_tokens(r["t"]), repr(r["t"])
+        if r["t"] not in lower_only:
+            assert ascii_tokens(r["t"]) == duck_tokens(r["t"]), repr(r["t"])
 
 
 @settings(max_examples=150, deadline=None)
