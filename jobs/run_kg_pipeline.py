@@ -3,12 +3,18 @@
 
 Usage (cluster):
     python tools/package_pyfiles.py          # -> dist/src_to_kb_spark.zip
-    spark-submit --py-files dist/src_to_kb_spark.zip \
+    spark-submit --driver-java-options "-XX:TieredStopAtLevel=1" \
+        --py-files dist/src_to_kb_spark.zip \
         jobs/run_kg_pipeline.py --input /data/pages --output /data/kb
 
 Usage (local smoke):
-    spark-submit jobs/run_kg_pipeline.py \
-        --input /root/testdata/sf0.001 --output /tmp/kb_out
+    spark-submit --driver-java-options "-XX:TieredStopAtLevel=1" \
+        jobs/run_kg_pipeline.py --input /root/testdata/sf0.001 --output /tmp/kb_out
+
+A spark-submit JVM starts before this job runs, so it never gets the
+flags ``session.get_spark`` gives a Python-launched session's driver;
+``--driver-java-options`` passes the same ``session.DRIVER_JAVA_OPTIONS``
+(C1 only, see ``session.py``).
 
 The stages are the graph declared once in ``src_to_kb_spark/pipeline.py``
 (``STAGES``); this job walks it.  Each stage writes its own parquet

@@ -185,15 +185,14 @@ def _components_driver(spark, edge_pdf) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[ra] = rb
-    groups: dict[str, list[str]] = {}
-    for n in node_list:
-        groups.setdefault(find(n), []).append(n)
-    keys: list[str] = []
-    canons: list[str] = []
-    for members in groups.values():
-        canon = min(members)
-        keys.extend(members)
-        canons.extend([canon] * len(members))
+    # sorted by key: the driver's str hash is salted per process, so set
+    # order would write the same rows in a different order (and bytes)
+    # on every run; ascending keys also meet each group's min first
+    keys = sorted(node_list)
+    canon: dict[str, str] = {}
+    for n in keys:
+        canon.setdefault(find(n), n)
+    canons = [canon[find(n)] for n in keys]
     out = pa.table({"key": pa.array(keys, pa.string()),
                     "canon_id": pa.array(canons, pa.string())})
     n_parts = max(1, -(-len(keys) // _LABELS_PER_PARTITION))

@@ -10,6 +10,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 
+# A marker mtime set before a re-run: a rewritten marker is then newer
+# than PAST and an untouched one equals it, however coarse the file
+# system's timestamps and however fast the re-run.
+PAST = 1_000_000_000
+
+
+def backdate(*paths: str) -> None:
+    for path in paths:
+        os.utime(path, (PAST, PAST))
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -16,7 +16,7 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from jobs.run_kg_pipeline import main
 from src_to_kb_spark.runtime.checkpoint import read_stage
 
-from .conftest import SF_SMOKE
+from .conftest import PAST, SF_SMOKE, backdate
 
 
 def test_job_runs_and_resumes(spark, tmp_path):
@@ -33,11 +33,11 @@ def test_job_runs_and_resumes(spark, tmp_path):
     assert not os.path.exists(os.path.join(out, "_committed_triples"))
 
     # full resume: nothing recomputed, same outputs re-read
-    mtime = os.path.getmtime(os.path.join(out, "_committed_components"))
+    backdate(os.path.join(out, "_committed_components"))
     s2 = main(["--input", SF_SMOKE, "--output", out])
     assert s2["triples"] == s1["triples"]
     assert os.path.getmtime(
-        os.path.join(out, "_committed_components")) == mtime
+        os.path.join(out, "_committed_components")) == PAST
 
     # partial resume: drop one stage marker -> only that stage recomputed
     os.remove(os.path.join(out, "_committed_components"))
@@ -261,11 +261,11 @@ def test_job_rebuilds_neardup_on_bands_scheme_change(spark, tmp_path):
     # simulate a KB written under an older scheme, then grow the input
     with open(scheme_path, "w") as f:
         f.write("mh-legacy-halves")
-    bands_mtime = os.path.getmtime(os.path.join(out, "_committed_bands"))
+    backdate(os.path.join(out, "_committed_bands"))
     src.write.mode("overwrite").parquet(f"{inp}/documents.parquet")
     s2 = main(["--input", inp, "--output", out])
     assert open(scheme_path).read() == BANDS_SCHEME
-    assert os.path.getmtime(os.path.join(out, "_committed_bands")) > bands_mtime
+    assert os.path.getmtime(os.path.join(out, "_committed_bands")) > PAST
 
     out_ref = str(tmp_path / "kb_ref")
     s3 = main(["--input", inp, "--output", out_ref])

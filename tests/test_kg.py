@@ -4,6 +4,8 @@ and LSH sanity."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,6 +82,25 @@ def test_connected_components_golden(spark, edges, expected, driver_threshold):
     assert got == expected
     # python union-find twin agrees
     assert components_py(set(edges), set(expected)) == expected
+
+
+def test_driver_components_rows_come_out_in_key_order(spark):
+    """The driver path emits its labels sorted by key, so two builds over
+    the same edges write the same rows in the same order (a Python set's
+    order follows the per-process salted str hash)."""
+    rng = random.Random(7)
+    keys = [f"k{i:03d}" for i in range(300)]
+    rng.shuffle(keys)
+    groups = [keys[g::23] for g in range(23)]
+    edges = [(a, b) if rng.random() < 0.5 else (b, a)
+             for members in groups for a, b in zip(members, members[1:])]
+    rng.shuffle(edges)
+    rows = connected_components(
+        spark.createDataFrame(edges, "key_a string, key_b string")
+    ).collect()
+    assert [r["key"] for r in rows] == sorted(keys)
+    canon = {k: min(members) for members in groups for k in members}
+    assert [r["canon_id"] for r in rows] == [canon[r["key"]] for r in rows]
 
 
 def test_neardup_planted_dups(spark):

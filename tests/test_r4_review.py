@@ -38,6 +38,8 @@ from src_to_kb_spark.queries.search import (
     search_documents,
 )
 
+from .conftest import PAST, backdate
+
 CHUNK_SCHEMA = (
     "doc_uid string, url string, lang string, chunk_id string, "
     "content string, start_line int, end_line int"
@@ -297,13 +299,13 @@ def test_job_size_gated_page_is_not_a_phantom_delta(spark, tmp_path):
     out = str(tmp_path / "kb")
     s1 = job_main(["--input", inp, "--output", out])
     assert s1["documents"] == 50  # gated page excluded
-    mtime = os.path.getmtime(os.path.join(out, "_committed_components"))
+    backdate(os.path.join(out, "_committed_components"))
     s2 = job_main(["--input", inp, "--output", out])  # no-op resume
     assert s2["triples"] == s1["triples"]
     # global stages untouched: the gated page did NOT register as new
     assert os.path.getmtime(
         os.path.join(out, "_committed_components")
-    ) == mtime
+    ) == PAST
     assert not os.path.exists(os.path.join(out, "_delta_pending"))
 
 
@@ -322,22 +324,23 @@ def test_job_param_change_invalidates_derived_stages(spark, tmp_path):
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.9"])
 
-    def mtime(stage):
-        return os.path.getmtime(os.path.join(out, f"_committed_{stage}"))
+    def marker(stage):
+        return os.path.join(out, f"_committed_{stage}")
 
-    t_pairs, t_linked, t_chunks = (
-        mtime("neardup_pairs"), mtime("linked"), mtime("chunks")
-    )
+    def mtime(stage):
+        return os.path.getmtime(marker(stage))
+
+    backdate(marker("neardup_pairs"), marker("linked"), marker("chunks"))
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.1"])
     # near-dup family rebuilt under the new threshold...
-    assert mtime("neardup_pairs") > t_pairs
+    assert mtime("neardup_pairs") > PAST
     # ...while threshold-independent stages resumed untouched
-    assert mtime("linked") == t_linked and mtime("chunks") == t_chunks
+    assert mtime("linked") == PAST and mtime("chunks") == PAST
     with open(os.path.join(out, "_scheme_params")) as f:
         assert json.load(f)["neardup_threshold"] == 0.1
     # identical-params rerun: nothing rebuilds
-    t_pairs2 = mtime("neardup_pairs")
+    backdate(marker("neardup_pairs"))
     job_main(["--input", inp, "--output", out,
               "--neardup-threshold", "0.1"])
-    assert mtime("neardup_pairs") == t_pairs2
+    assert mtime("neardup_pairs") == PAST
